@@ -94,7 +94,7 @@ def collect_result_rows(result) -> list[list]:
     if trim_col is not None:
         extras.append(trim_col)
     extras += [fc for fc in flag_cols.values() if fc not in extras]
-    sel = result.ordered_df().select(*out_cols, *extras)
+    sel = result.ordered_df(to_driver=True).select(*out_cols, *extras)
     from pyspark.sql import types as _T
 
     from .mixedcell import is_mixed_type, unpack_value

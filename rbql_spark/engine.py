@@ -108,13 +108,21 @@ class StageResult:
     def out_cols(self) -> list[str]:
         return [c for c in self.df.columns if c.startswith('__out_')]
 
-    def ordered_df(self) -> DataFrame:
-        if self.order_cols:
-            return self.df.orderBy(*self.order_cols)
-        return self.df
+    def ordered_df(self, to_driver: bool = False) -> DataFrame:
+        """The result in output order.  ``to_driver``: the caller brings
+        every row to the driver anyway, so the sort runs inside one
+        partition (tuning.one_partition) instead of a global orderBy,
+        whose range exchange samples its input with a job that re-runs
+        the plan beneath it (for CSV input, the whole Python split)."""
+        if not self.order_cols:
+            return self.df
+        if to_driver:
+            from .tuning import one_partition
+            return one_partition(self.df).sortWithinPartitions(*self.order_cols)
+        return self.df.orderBy(*self.order_cols)
 
-    def display_df(self, ordered: bool = False) -> DataFrame:
-        d = self.ordered_df() if ordered else self.df
+    def display_df(self, ordered: bool = False, to_driver: bool = False) -> DataFrame:
+        d = self.ordered_df(to_driver) if ordered else self.df
         names = self.out_names
         cols = self.out_cols()
         if names is None:

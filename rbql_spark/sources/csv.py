@@ -20,6 +20,7 @@ in __nf_src (engine safe_get parity: missing → None).
 
 from __future__ import annotations
 
+import codecs
 import os
 import re
 
@@ -135,25 +136,28 @@ def read_csv(spark: SparkSession, path: str, delim: str = ',',
     if native:
         return _read_csv_native(spark, path, delim, policy, with_headers, encoding, comment_prefix)
 
+    # every option that changes which rows the width probe sees
+    width_key = (path, delim, policy, encoding, with_headers, comment_prefix,
+                 comment_regex, strip_whitespaces)
     if encoding == 'latin-1' or policy == 'quoted_rfc':
         bulk = (os.path.exists(path)
                 and os.path.getsize(path) >= _DISTRIBUTED_SCAN_MIN_BYTES)
         if bulk and policy == 'quoted_rfc':
             return _read_csv_rfc_distributed(spark, path, delim, encoding,
                                              with_headers, comment_prefix,
-                                             strip_whitespaces,
-                                             comment_regex=comment_regex)
+                                             strip_whitespaces, comment_regex,
+                                             width_key)
         if bulk:
             return _read_csv_latin1_distributed(spark, path, delim, policy,
                                                 with_headers, comment_prefix,
-                                                strip_whitespaces,
-                                                comment_regex=comment_regex)
+                                                strip_whitespaces, comment_regex,
+                                                width_key)
         return _read_csv_driver_side(spark, path, delim, policy, encoding,
                                      with_headers, comment_prefix, strip_whitespaces,
                                      comment_regex=comment_regex)
     return _read_csv_distributed(spark, path, delim, policy, with_headers,
-                                 comment_prefix, strip_whitespaces,
-                                 comment_regex=comment_regex)
+                                 comment_prefix, strip_whitespaces, comment_regex,
+                                 width_key)
 
 
 def _collect_translating(df):
@@ -171,14 +175,26 @@ def _collect_translating(df):
         raise
 
 
-# (path, mtime, delim, policy) → probed max field count; the probe is a full
-# pass over the file, worth one dict entry to not repeat per query
+_UTF8_ERROR = 'Unable to decode input table as UTF-8. Use binary (latin-1) encoding instead'
+_BOM_WARNING = 'UTF-8 Byte Order Mark (BOM) was found and skipped in input table'
+
+
+def _file_version(path: str) -> tuple:
+    """(absolute path, mtime, size): one version of a local file."""
+    st = os.stat(path)
+    return (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+
+
+# file version + read options → probed (max field count, warnings); the
+# probe is a full pass over the file, worth one dict entry to not repeat
+# per query
 _WIDTH_CACHE: dict = {}
 
 
-def _cached_width(path, delim, policy, compute):
+def _cached_width(width_key, compute):
+    path, *opts = width_key
     try:
-        key = (os.path.abspath(path), os.path.getmtime(path), delim, policy)
+        key = _file_version(path) + tuple(opts)
     except OSError:
         return compute()
     if key not in _WIDTH_CACHE:
@@ -186,139 +202,118 @@ def _cached_width(path, delim, policy, compute):
     return _WIDTH_CACHE[key]
 
 
-def _arrays_to_handle(spark: SparkSession, arr_df: DataFrame,
-                      header: list[str] | None, width: int | None,
-                      cache_key=None, table_name: str = 'input',
-                      pre_warnings: list[str] | None = None) -> TableHandle:
-    """fields-array DataFrame → fixed-width handle (+ per-row NF).
+# file version → whether the file starts with a BOM; an entry means the
+# whole file decoded as UTF-8
+_UTF8_CHECKED: dict = {}
+
+
+def _check_utf8(path: str) -> bool:
+    """Raise the reference's decode error unless the whole local file is
+    UTF-8 (rbql_csv.py:416-417; spark.read.text would silently replace bad
+    bytes).  Decodes 1 MB at a time, once per file version.  Returns
+    whether the file starts with a BOM."""
+    key = _file_version(path)
+    if key not in _UTF8_CHECKED:
+        decoder = codecs.getincrementaldecoder('utf-8')()
+        with open(path, 'rb') as f:
+            chunk = f.read(1 << 20)
+            bom = chunk.startswith(codecs.BOM_UTF8)
+            try:
+                while chunk:
+                    decoder.decode(chunk)
+                    chunk = f.read(1 << 20)
+                decoder.decode(b'', final=True)
+            except UnicodeDecodeError:
+                raise RbqlIOHandlingError(_UTF8_ERROR) from None
+        _UTF8_CHECKED[key] = bom
+    return _UTF8_CHECKED[key]
+
+
+def _arrays_to_handle(arr_df: DataFrame, header: list[str] | None, width_key,
+                      pre_warnings: list[str]) -> TableHandle:
+    """(fields, [__bad_quoting,] __src_order) → fixed-width handle (+ per-row NF).
 
     The width probe is ONE aggregation pass that also yields the
     inconsistent-field-count and defective-quoting warnings (reference
     surfaces both, rbql_csv.py:118-126,496-504); the split is vectorized and
     cheap, so re-splitting per query beats materializing field arrays into
     the block store."""
-    warnings = list(pre_warnings or [])
-    if width is None:
-        has_bad = '__bad_quoting' in arr_df.columns
+    has_bad = '__bad_quoting' in arr_df.columns
 
-        def compute():
-            order = F.col(ORDER_SRC_COL) if ORDER_SRC_COL in arr_df.columns \
-                else F.monotonically_increasing_id()
-            aggs = [F.min(order).alias('first_at'), F.count(F.lit(1)).alias('cnt')]
-            if has_bad:
-                aggs.append(F.max(F.col('__bad_quoting').cast('int')).alias('bad'))
-            rows = _collect_translating(arr_df.groupBy(F.size('fields').alias('w')).agg(*aggs))
-            sizes = sorted((r['w'], r['first_at']) for r in rows)
-            probe_warnings = []
-            if len(sizes) > 1:
-                by_first = sorted(rows, key=lambda r: r['first_at'])
-                probe_warnings.append(
-                    'Number of fields in "{}" table is not consistent: '
-                    'e.g. record {} -> {} fields, record {} -> {} fields'.format(
-                        table_name, 1, by_first[0]['w'], 2, by_first[1]['w']))
-            if has_bad and any(r['bad'] for r in rows):
-                probe_warnings.append(
-                    'Inconsistent double quote escaping in {} table'.format(table_name))
-            return (max((w for w, _ in sizes), default=1) or 1, probe_warnings)
+    def compute():
+        aggs = [F.min(ORDER_SRC_COL).alias('first_at'), F.count(F.lit(1)).alias('cnt')]
+        if has_bad:
+            aggs.append(F.max(F.col('__bad_quoting').cast('int')).alias('bad'))
+        rows = _collect_translating(arr_df.groupBy(F.size('fields').alias('w')).agg(*aggs))
+        sizes = sorted((r['w'], r['first_at']) for r in rows)
+        probe_warnings = []
+        if len(sizes) > 1:
+            by_first = sorted(rows, key=lambda r: r['first_at'])
+            probe_warnings.append(
+                'Number of fields in "input" table is not consistent: '
+                'e.g. record {} -> {} fields, record {} -> {} fields'.format(
+                    1, by_first[0]['w'], 2, by_first[1]['w']))
+        if has_bad and any(r['bad'] for r in rows):
+            probe_warnings.append('Inconsistent double quote escaping in input table')
+        return (max((w for w, _ in sizes), default=1) or 1, probe_warnings)
 
-        if cache_key is not None:
-            width, probe_warnings = _cached_width(cache_key[0], cache_key[1], cache_key[2], compute)
-        else:
-            width, probe_warnings = compute()
-        warnings.extend(probe_warnings)
+    width, probe_warnings = _cached_width(width_key, compute)
     if header is not None:
         width = max(width, len(header))
     cols = [F.try_element_at('fields', F.lit(i + 1)).alias('_c{}'.format(i)) for i in range(width)]
-    cols.append(F.size('fields').alias(NF_SRC_COL))
-    if ORDER_SRC_COL in arr_df.columns:
-        cols.append(F.col(ORDER_SRC_COL))
-    return TableHandle(df=arr_df.select(cols), header=header, warnings=warnings)
+    cols += [F.size('fields').alias(NF_SRC_COL), F.col(ORDER_SRC_COL)]
+    return TableHandle(df=arr_df.select(cols), header=header,
+                       warnings=pre_warnings + probe_warnings)
 
 
 def _read_csv_distributed(spark, path, delim, policy, with_headers,
-                          comment_prefix, strip_whitespaces,
-                          comment_regex: str | None = None) -> TableHandle:
-    """utf-8 line-based policies: fully distributed text scan + native split."""
-    # spark.read.text silently replaces invalid UTF-8; the reference raises
-    # (rbql_csv.py:416-417).  Validate eagerly for local files (the parity
-    # path; bulk data should be parquet or native=True anyway).
-    # Driver-side line parallelization was measured SLOWER than the
-    # distributed text scan + repartition (re-shipping lines per query beats
-    # neither Arrow collect nor the JVM scan) — disabled, kept for reference.
-    _SMALL_FILE_BYTES = 0
-    order_src_monotone = False
-    local_small = os.path.exists(path) and os.path.getsize(path) <= _SMALL_FILE_BYTES
-    if local_small:
-        # small local file: decode once on the driver (also the utf-8
-        # validation the reference requires, rbql_csv.py:416-417) and
-        # parallelize ordered line slices — partitions inherit input order,
-        # so no order-capture column, no repartition exchange, and no
-        # order-restoring sort downstream
-        import pandas as pd
-        with open(path, 'rb') as f:
-            raw = f.read()
-        try:
-            content = raw.decode('utf-8')
-        except UnicodeDecodeError:
-            raise RbqlIOHandlingError(
-                'Unable to decode input table as UTF-8. Use binary (latin-1) encoding instead')
-        content, _bom = _strip_bom(content)
-        lines = re.split(r'\r\n|\r|\n', content)
-        if lines and lines[-1] == '':
-            lines.pop()
-        if comment_prefix:
-            lines = [ln for ln in lines if not ln.startswith(comment_prefix)]
-        try:  # Arrow makes createDataFrame a zero-copy columnar ship
-            spark.conf.set('spark.sql.execution.arrow.pyspark.enabled', 'true')
-        except Exception:
-            pass
-        df = spark.createDataFrame(pd.DataFrame({'value': lines})) if lines else \
-            spark.createDataFrame([], 'value string')
-    else:
-        pre_warnings = []
-        if os.path.exists(path):
-            try:
-                with open(path, 'rb') as f:
-                    head = f.read()
-                head.decode('utf-8')
-            except UnicodeDecodeError:
-                raise RbqlIOHandlingError(
-                    'Unable to decode input table as UTF-8. Use binary (latin-1) encoding instead')
-            if head.startswith(b'\xef\xbb\xbf'):
-                pre_warnings.append(
-                    'UTF-8 Byte Order Mark (BOM) was found and skipped in input table')
-        df = spark.read.text(path)
-        # capture input order BEFORE spreading lines across cores — the
-        # exchange that parallelizes the (CPU-bound) split would destroy
-        # partition order, and NR / sort stability derive from this key
-        df = df.withColumn(ORDER_SRC_COL, F.monotonically_increasing_id())
-        target = spark.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() < target:
-            # Round 14: RANGE-partition by the order key + in-partition
-            # sort instead of round-robin repartition.  Same input
-            # shuffle, but the stream stays partition-major ORDERED, so
-            # the engine can skip the output-restoring orderBy(NR)
-            # entirely (order_src_monotone) — which previously cost a
-            # range exchange whose SAMPLING pass re-executed the whole
-            # Python split.  The range sampler here reads only the raw
-            # JVM text scan.  Boundaries may differ between actions, but
-            # global row order (= ORDER_SRC order) and the NR values
-            # derived from ORDER_SRC are action-stable either way.
-            df = (df.repartitionByRange(target, F.col(ORDER_SRC_COL))
-                    .sortWithinPartitions(F.col(ORDER_SRC_COL)))
-        # either way the stream is partition-major ORDER_SRC-ascending
-        # (no exchange: the surrogate follows the scan's own layout)
-        order_src_monotone = True
-        line = F.regexp_replace(F.col('value'), r'\r$', '')
-        line = F.regexp_replace(line, '^﻿', '')  # BOM (file head in practice)
-        df = df.select(line.alias('value'), F.col(ORDER_SRC_COL))
-        if comment_prefix:
-            df = df.filter(~F.col('value').startswith(comment_prefix))
-        if comment_regex:
-            # re.search semantics; Java regex (rlike) accepts the same
-            # grammar for the common prefix/anchor patterns
-            df = df.filter(~F.col('value').rlike(comment_regex))
+                          comment_prefix, strip_whitespaces, comment_regex,
+                          width_key) -> TableHandle:
+    """utf-8 line-based policies: distributed text scan + split."""
+    pre_warnings = []
+    if os.path.exists(path) and _check_utf8(path):
+        pre_warnings.append(_BOM_WARNING)
+    # capture input order at the scan: NR and sort stability derive from
+    # this key.  The lines are not spread by an exchange: the text scan
+    # already splits a file larger than spark.sql.files.openCostInBytes
+    # (4 MB) over the cores, and below that a range exchange
+    # and its sampling job cost more than the split they would spread
+    # (measured on 3 and 8 MB quoted files).  The stream is therefore
+    # partition-major ORDER_SRC-ascending, so the engine may skip the
+    # output-restoring sort (order_src_monotone).
+    df = spark.read.text(path).withColumn(ORDER_SRC_COL, F.monotonically_increasing_id())
+    line = F.regexp_replace(F.col('value'), r'\r$', '')
+    line = F.regexp_replace(line, '^﻿', '')  # BOM (file head in practice)
+    df = df.select(line.alias('value'), F.col(ORDER_SRC_COL))
+    arr_df = _split_lines(_drop_comments(df, comment_prefix, comment_regex),
+                          delim, policy, strip_whitespaces)
+    header = None
+    if with_headers:
+        conf = spark._jsparkSession.sessionState().conf()
+        # no text-scan split is shorter than this
+        min_split = min(conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes())
+        header, arr_df = _drop_header(arr_df, path, delim, policy, 'utf-8',
+                                      comment_prefix, comment_regex,
+                                      strip_whitespaces, min_split)
+    handle = _arrays_to_handle(arr_df, header, width_key, pre_warnings)
+    handle.order_src_monotone = True
+    return handle
 
+
+def _drop_comments(lines_df: DataFrame, comment_prefix, comment_regex) -> DataFrame:
+    if comment_prefix:
+        lines_df = lines_df.filter(~F.col('value').startswith(comment_prefix))
+    if comment_regex:
+        # re.search semantics; Java regex (rlike) accepts the same
+        # grammar for the common prefix/anchor patterns
+        lines_df = lines_df.filter(~F.col('value').rlike(comment_regex))
+    return lines_df
+
+
+def _split_lines(lines_df: DataFrame, delim, policy, strip_whitespaces) -> DataFrame:
+    """(value, __src_order) lines → (fields, [__bad_quoting,] __src_order)."""
+    if policy == 'quoted':
+        return _split_quoted_distributed(lines_df, delim, strip_whitespaces)
     if policy == 'simple':
         arr = F.split(F.col('value'), re.escape(delim), -1)
     elif policy == 'whitespace':
@@ -327,42 +322,21 @@ def _read_csv_distributed(spark, path, delim, policy, with_headers,
                .otherwise(F.split(trimmed, ' +', -1))
     elif policy == 'monocolumn':
         arr = F.array(F.col('value'))
-    elif policy == 'quoted':
-        handle = _quoted_distributed(spark, df, delim, with_headers,
-                                     strip_whitespaces, comment_prefix, path)
-        handle.order_src_monotone = bool(order_src_monotone)
-        return handle
     else:
         raise RbqlIOHandlingError('unknown split policy: ' + policy)
-
     if strip_whitespaces:
         arr = F.transform(arr, lambda x: F.trim(x))
-    keep = [arr.alias('fields')] + ([F.col(ORDER_SRC_COL)] if ORDER_SRC_COL in df.columns else [])
-    arr_df = df.select(*keep)
-
-    header = None
-    if with_headers:
-        header = _read_header_line(path, delim, policy, 'utf-8', comment_prefix,
-                                   strip_whitespaces)
-        arr_df = _drop_first_row(arr_df)
-    handle = _arrays_to_handle(spark, arr_df, header, None, cache_key=(path, delim, policy),
-                               pre_warnings=pre_warnings)
-    handle.order_src_monotone = bool(order_src_monotone)
-    return handle
+    return lines_df.select(arr.alias('fields'), F.col(ORDER_SRC_COL))
 
 
-def _quoted_distributed(spark, lines_df, delim, with_headers, strip_whitespaces,
-                        comment_prefix, path, encoding: str = 'utf-8') -> TableHandle:
+def _split_quoted_distributed(lines_df: DataFrame, delim, strip_whitespaces) -> DataFrame:
     """quoted (single-line) policy: Arrow-batched Python splitter."""
     from pyspark.sql import types as T
-    has_order = ORDER_SRC_COL in lines_df.columns
-    fields_list = [
+    schema = T.StructType([
         T.StructField('fields', T.ArrayType(T.StringType()), True),
         T.StructField('__bad_quoting', T.BooleanType(), True),
-    ]
-    if has_order:
-        fields_list.append(T.StructField(ORDER_SRC_COL, T.LongType(), True))
-    schema = T.StructType(fields_list)
+        T.StructField(ORDER_SRC_COL, T.LongType(), True),
+    ])
     dlm = delim
     strip = strip_whitespaces
 
@@ -394,51 +368,80 @@ def _quoted_distributed(spark, lines_df, delim, with_headers, strip_whitespaces,
                     warn_out[i] = warning
             if strip:
                 fields_out = fields_out.map(lambda fs: [f.strip() for f in fs])
-            out = {'fields': fields_out, '__bad_quoting': warn_out}
-            if has_order:
-                out[ORDER_SRC_COL] = pdf[ORDER_SRC_COL]
-            yield pd.DataFrame(out)
+            yield pd.DataFrame({'fields': fields_out, '__bad_quoting': warn_out,
+                                ORDER_SRC_COL: pdf[ORDER_SRC_COL]})
 
-    keep = ['fields', '__bad_quoting'] + ([ORDER_SRC_COL] if has_order else [])
-    arr_df = lines_df.mapInPandas(run, schema=schema).select(*keep)
-    header = None
-    if with_headers:
-        header = _read_header_line(path, delim, 'quoted', encoding, comment_prefix,
-                                   strip_whitespaces)
-        arr_df = _drop_first_row(arr_df)
-    return _arrays_to_handle(spark, arr_df, header, None, cache_key=(path, delim, 'quoted'))
+    return lines_df.mapInPandas(run, schema=schema)
 
 
-def _drop_first_row(arr_df: DataFrame) -> DataFrame:
-    if ORDER_SRC_COL in arr_df.columns:
-        first = arr_df.agg(F.min(ORDER_SRC_COL)).collect()[0][0]
-        return arr_df.filter(F.col(ORDER_SRC_COL) != first)
-    mid = F.monotonically_increasing_id()
-    d = arr_df.withColumn('__mid', mid)
-    first = d.agg(F.min('__mid')).collect()[0][0]
-    return d.filter(F.col('__mid') != first).drop('__mid')
+def _drop_header(arr_df: DataFrame, path, delim, policy, encoding, comment_prefix,
+                 comment_regex, strip_whitespaces, first_part_bytes: int):
+    """Read the header on the driver and filter its row out of ``arr_df``;
+    returns (header, arr_df).
+
+    The scan partition that starts at byte 0 numbers its lines 0, 1, …
+    (monotonically_increasing_id in partition 0; chunk 0 keys its lines
+    0 << 40 | i), so a header that starts within its first
+    ``first_part_bytes`` has its line index as order key and the filter
+    costs no job.  A header past that (a long comment preamble) is found
+    with one eager min() job."""
+    header, index, offset = _read_header_line(path, delim, policy, encoding,
+                                              comment_prefix, comment_regex,
+                                              strip_whitespaces)
+    if index is None:
+        return header, arr_df
+    key = index if offset < first_part_bytes else \
+        arr_df.agg(F.min(ORDER_SRC_COL)).collect()[0][0]
+    return header, arr_df.filter(F.col(ORDER_SRC_COL) != key)
+
+
+def _iter_head_lines(path: str):
+    """(line index, start byte offset, raw line) of a file, read lazily from
+    its head; lines end at CRLF, CR or LF, as the scans split them."""
+    with open(path, 'rb') as f:
+        buf, offset, index, eof = b'', 0, 0, False
+        while True:
+            m = _TERM_B.search(buf)
+            # at the buffer's end a \r may still pair with the next \n
+            if not eof and (m is None or m.end() == len(buf)):
+                chunk = f.read(1 << 16)
+                eof = not chunk
+                buf += chunk
+                continue
+            if m is None:
+                if buf:
+                    yield index, offset, buf
+                return
+            yield index, offset, buf[:m.start()]
+            offset += m.end()
+            buf = buf[m.end():]
+            index += 1
 
 
 def _read_header_line(path, delim, policy, encoding, comment_prefix,
-                      strip_whitespaces) -> list[str]:
-    with open(path, 'r', encoding=encoding, newline='') as f:
-        for raw in f:
-            line = raw.rstrip('\r\n')
-            line, _bom = _strip_bom(line)
-            if comment_prefix and line.startswith(comment_prefix):
-                continue
-            if policy == 'simple':
-                fields = line.split(delim)
-            elif policy == 'whitespace':
-                fields = split_whitespace(line)
-            elif policy == 'monocolumn':
-                fields = [line]
-            else:
-                fields, _ = split_quoted(line, delim)
-            if strip_whitespaces:
-                fields = [x.strip() for x in fields]
-            return fields
-    return []
+                      comment_regex, strip_whitespaces):
+    """The first line that is not a comment, split by ``policy``.  Returns
+    (fields, line index, start byte offset); ([], None, None) when every
+    line is a comment."""
+    crgx = re.compile(comment_regex) if comment_regex else None
+    for index, offset, raw in _iter_head_lines(path):
+        line, _bom = _strip_bom(raw.decode(encoding))
+        if comment_prefix and line.startswith(comment_prefix):
+            continue
+        if crgx is not None and crgx.search(line) is not None:
+            continue
+        if policy == 'simple':
+            fields = line.split(delim)
+        elif policy == 'whitespace':
+            fields = split_whitespace(line)
+        elif policy == 'monocolumn':
+            fields = [line]
+        else:
+            fields, _ = split_quoted(line, delim)
+        if strip_whitespaces:
+            fields = [x.strip() for x in fields]
+        return fields, index, offset
+    return [], None, None
 
 
 # ---------------------------------------------------------------------------
@@ -513,10 +516,9 @@ def _chunk_bounds(size: int, parallelism: int) -> list[tuple[int, int]]:
 _CHUNK_ORDER_SHIFT = 40
 
 
-def _chunked_lines_df(spark: SparkSession, path: str, encoding: str) -> DataFrame:
+def _chunked_lines_df(spark: SparkSession, path: str, encoding: str,
+                      bounds: list[tuple[int, int]]) -> DataFrame:
     """(value, __src_order) decoded lines via parallel byte-range tasks."""
-    size = os.path.getsize(path)
-    bounds = _chunk_bounds(size, spark.sparkContext.defaultParallelism)
     n = len(bounds)
     spec = spark.range(0, n, 1, numPartitions=n)
 
@@ -531,12 +533,7 @@ def _chunked_lines_df(spark: SparkSession, path: str, encoding: str) -> DataFram
                 for i, raw in enumerate(_iter_chunk_lines(path, s, e)):
                     if cid == 0 and i == 0 and raw.startswith(b'\xef\xbb\xbf'):
                         raw = raw[3:]
-                    try:
-                        lines.append(raw.decode(encoding))
-                    except UnicodeDecodeError:
-                        raise RbqlIOHandlingError(
-                            'Unable to decode input table as UTF-8. '
-                            'Use binary (latin-1) encoding instead')
+                    lines.append(_decode_or_raise(raw, encoding))
                     orders.append(okey + i)
                 yield pd.DataFrame({'value': pd.Series(lines, dtype='object'),
                                     ORDER_SRC_COL: pd.Series(orders, dtype='int64')})
@@ -548,47 +545,25 @@ def _bom_pre_warnings(path: str) -> list[str]:
     with open(path, 'rb') as f:
         head = f.read(3)
     if head.startswith(b'\xef\xbb\xbf'):
-        return ['UTF-8 Byte Order Mark (BOM) was found and skipped in input table']
+        return [_BOM_WARNING]
     return []
 
 
 def _read_csv_latin1_distributed(spark, path, delim, policy, with_headers,
-                                 comment_prefix, strip_whitespaces,
-                                 comment_regex: str | None = None) -> TableHandle:
-    """latin-1 line policies at bulk size: chunked byte scan + native split
-    (the split expressions operate on decoded strings, so the utf-8
-    distributed pipeline applies unchanged)."""
-    df = _chunked_lines_df(spark, path, 'latin-1')
-    if comment_prefix:
-        df = df.filter(~F.col('value').startswith(comment_prefix))
-    if comment_regex:
-        df = df.filter(~F.col('value').rlike(comment_regex))
-
-    if policy == 'simple':
-        arr = F.split(F.col('value'), re.escape(delim), -1)
-    elif policy == 'whitespace':
-        trimmed = F.regexp_replace(F.regexp_replace(F.col('value'), '^ +', ''), ' +$', '')
-        arr = F.when(trimmed == '', F.array(F.lit('')))\
-               .otherwise(F.split(trimmed, ' +', -1))
-    elif policy == 'monocolumn':
-        arr = F.array(F.col('value'))
-    elif policy == 'quoted':
-        return _quoted_distributed(spark, df, delim, with_headers,
-                                   strip_whitespaces, comment_prefix, path,
-                                   encoding='latin-1')
-    else:
-        raise RbqlIOHandlingError('unknown split policy: ' + policy)
-    if strip_whitespaces:
-        arr = F.transform(arr, lambda x: F.trim(x))
-    arr_df = df.select(arr.alias('fields'), F.col(ORDER_SRC_COL))
+                                 comment_prefix, strip_whitespaces, comment_regex,
+                                 width_key) -> TableHandle:
+    """latin-1 line policies at bulk size: chunked byte scan + the utf-8
+    path's split (the split expressions operate on decoded strings)."""
+    bounds = _chunk_bounds(os.path.getsize(path), spark.sparkContext.defaultParallelism)
+    lines_df = _drop_comments(_chunked_lines_df(spark, path, 'latin-1', bounds),
+                              comment_prefix, comment_regex)
+    arr_df = _split_lines(lines_df, delim, policy, strip_whitespaces)
     header = None
     if with_headers:
-        header = _read_header_line(path, delim, policy, 'latin-1', comment_prefix,
-                                   strip_whitespaces)
-        arr_df = _drop_first_row(arr_df)
-    return _arrays_to_handle(spark, arr_df, header, None,
-                             cache_key=(path, delim, policy),
-                             pre_warnings=_bom_pre_warnings(path))
+        header, arr_df = _drop_header(arr_df, path, delim, policy, 'latin-1',
+                                      comment_prefix, comment_regex,
+                                      strip_whitespaces, bounds[0][1])
+    return _arrays_to_handle(arr_df, header, width_key, _bom_pre_warnings(path))
 
 
 def _rfc_chunk_scan(lines, start_parity: int, comment_prefix, comment_rgx):
@@ -617,8 +592,8 @@ def _rfc_chunk_scan(lines, start_parity: int, comment_prefix, comment_rgx):
 
 
 def _read_csv_rfc_distributed(spark, path, delim, encoding, with_headers,
-                              comment_prefix, strip_whitespaces,
-                              comment_regex: str | None = None) -> TableHandle:
+                              comment_prefix, strip_whitespaces, comment_regex,
+                              width_key) -> TableHandle:
     """quoted_rfc at bulk size: two distributed passes + one tiny reduce.
 
     Multiline records make line ownership context-dependent (a line belongs
@@ -732,18 +707,16 @@ def _read_csv_rfc_distributed(spark, path, delim, encoding, with_headers,
     if with_headers:
         header = _read_header_record_rfc(path, delim, encoding, comment_prefix,
                                          comment_regex, strip_whitespaces)
-        arr_df = _drop_first_row(arr_df)
-    return _arrays_to_handle(spark, arr_df, header, None,
-                             cache_key=(path, delim, 'quoted_rfc'),
-                             pre_warnings=_bom_pre_warnings(path))
+        # the header is the first record, whose id is 0
+        arr_df = arr_df.filter(F.col(ORDER_SRC_COL) != 0)
+    return _arrays_to_handle(arr_df, header, width_key, _bom_pre_warnings(path))
 
 
 def _decode_or_raise(raw: bytes, encoding: str) -> str:
     try:
         return raw.decode(encoding)
     except UnicodeDecodeError:
-        raise RbqlIOHandlingError(
-            'Unable to decode input table as UTF-8. Use binary (latin-1) encoding instead')
+        raise RbqlIOHandlingError(_UTF8_ERROR)
 
 
 def _read_header_record_rfc(path, delim, encoding, comment_prefix, comment_regex,
@@ -791,7 +764,7 @@ def _read_csv_driver_side(spark, path, delim, policy, encoding, with_headers,
     content, _bom = _strip_bom(content)
     warnings: list[str] = []
     if _bom:
-        warnings.append('UTF-8 Byte Order Mark (BOM) was found and skipped in input table')
+        warnings.append(_BOM_WARNING)
     if policy == 'quoted_rfc':
         recs = _record_split_rfc(content, delim, comment_prefix=comment_prefix,
                                  comment_regex=comment_regex)
@@ -1037,7 +1010,7 @@ def _write_csv_vectorized(result, output_path, delim, policy, encoding,
         return False
     if policy not in ('quoted', 'quoted_rfc', 'simple'):
         return False
-    df = result.display_df(ordered=True)
+    df = result.display_df(ordered=True, to_driver=True)
     if not all(isinstance(f.dataType, _sink_scalar_types()) for f in df.schema.fields):
         return False
     try:

@@ -316,6 +316,42 @@ def _has_node(jplan, class_prefix: str) -> bool:
     return False
 
 
+# logical operators that compute each output row from one input row of
+# their single child, so they run in the same stage as that child
+_ROW_LOCAL_NODES = frozenset(('Project', 'Filter', 'SubqueryAlias', 'MapInPandas',
+                              'Generate'))
+
+
+def one_partition(df):
+    """``df`` in a single partition, for a sort whose rows all go to one
+    driver anyway.
+
+    ``coalesce(1)`` adds no exchange but runs the whole last stage in one
+    task, so it is used only where that stage has one partition's work to
+    do: above a limit or a global (ungrouped) aggregation, or when every
+    row comes from a one-partition source through row-local operators and
+    grouped aggregations (which only shrink that input).  Anywhere else
+    (a multi-partition scan, a join, a window, a repartition)
+    ``repartition(1)`` keeps the stage's own tasks and gathers the result
+    rows through one exchange."""
+    node = df._jdf.queryExecution().analyzed()
+    while True:
+        name = node.getClass().getSimpleName()
+        children = node.children()
+        if name == 'GlobalLimit' or (
+                name == 'Aggregate' and node.groupingExpressions().isEmpty()):
+            return df.coalesce(1)
+        if children.size() == 0:
+            spark = df.sparkSession
+            leaf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+                spark._jsparkSession, node)
+            single = leaf.rdd().getNumPartitions() <= 1
+            return df.coalesce(1) if single else df.repartition(1)
+        if children.size() > 1 or name not in _ROW_LOCAL_NODES | {'Aggregate'}:
+            return df.repartition(1)
+        node = children.apply(0)
+
+
 @contextlib.contextmanager
 def scoped_initial_width(spark, df, expansion: float = 4.0):
     """Batch counterpart of the streaming drain scoping (r15 verdict

@@ -289,3 +289,105 @@ def test_write_csv_distributed_matches_vectorized(spark, tmp_path, monkeypatch):
 
     assert open(out_d, 'rb').read() == open(out_v, 'rb').read()
     assert w_d == w_v
+
+
+# ---- read options, header and encoding checks -----------------------------
+
+def _width(handle):
+    return len([c for c in handle.df.columns if c.startswith('_c')])
+
+
+def test_width_cache_keys_on_every_read_option(spark, tmp_path):
+    # the probed width of one file version must not leak between reads
+    # whose options see different rows
+    p = _write(tmp_path, 'w.csv', '#x,y,z,w,v\na,b\n1,2\n3,4')
+    assert _width(read_csv(spark, p, comment_prefix='#')) == 2
+    h = read_csv(spark, p)
+    assert _width(h) == 5
+    assert any(w.startswith('Number of fields in "input" table is not consistent')
+               for w in h.warnings)
+
+
+@pytest.mark.parametrize('comment', [{'comment_prefix': '#'}, {'comment_regex': '^#'}])
+def test_header_is_first_non_comment_line(spark, tmp_path, comment):
+    p = _write(tmp_path, 'c.csv', '#meta,line\nname,age\nalice,30\nbob,25\n')
+    res = query_csv(spark, 'SELECT *', p, with_headers=True, **comment)
+    assert res.out_names == ['name', 'age']
+    assert [list(r) for r in res.display_df(ordered=True).collect()] == \
+        [['alice', '30'], ['bob', '25']]
+
+
+@pytest.mark.parametrize('content,options', [
+    ('id,name\r\n1,a\r\n2,b\r\n3,c\r\n', {}),
+    ('﻿id,name\n1,a\n2,b\n3,c\n', {}),
+    ('#one\n#two\nid,name\n1,a\n#three\n2,b\n3,c\n', {'comment_prefix': '#'}),
+    ('#one\n﻿#two\nid,name\n1,a\n2,b\n3,c', {'comment_regex': '^#'}),
+], ids=['crlf', 'bom', 'comment_prefix', 'comment_regex'])
+@pytest.mark.parametrize('policy', ['quoted', 'simple'])
+def test_header_drop_utf8_scan(spark, tmp_path, content, options, policy):
+    p = _write(tmp_path, 'h.csv', content)
+    out = str(tmp_path / 'o.csv')
+    query_csv(spark, 'SELECT *', p, output_path=out, with_headers=True,
+              policy=policy, **options)
+    assert open(out, 'rb').read() == b'id,name\n1,a\n2,b\n3,c\n'
+
+
+def test_header_past_first_split_is_still_dropped(spark, tmp_path):
+    # a comment preamble longer than the scan's first split puts the header
+    # in a later partition, where its order key is not its line index
+    preamble = ''.join('#{}\n'.format('x' * 60) for _ in range(1200))
+    body = ''.join('{},{}\n'.format(i, i * 2) for i in range(500))
+    p = _write(tmp_path, 'late.csv', preamble + 'id,dbl\n' + body)
+    key = 'spark.sql.files.maxPartitionBytes'
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(16 << 10))
+    try:
+        assert spark.read.text(p).rdd.getNumPartitions() > 4
+        out = str(tmp_path / 'o.csv')
+        query_csv(spark, 'SELECT * ORDER BY int(a.id)', p, output_path=out,
+                  with_headers=True, comment_prefix='#', policy='simple')
+    finally:
+        spark.conf.set(key, old)
+    assert open(out).read() == 'id,dbl\n' + body
+
+
+@pytest.mark.parametrize('policy', ['simple', 'quoted', 'quoted_rfc'])
+def test_latin1_bulk_header_drop_matches_driver(spark, tmp_path, monkeypatch, policy):
+    import rbql_spark.sources.csv as C
+    p = str(tmp_path / 'h_latin1.csv')
+    with open(p, 'wb') as f:
+        f.write(b'\xef\xbb\xbf#note\r\ncaf\xe9,"n\xf8"\r\n')
+        for i in range(3000):
+            f.write('{0},"v\xe9{1}"\r\n'.format(i, i * 7).encode('latin-1'))
+            if i % 500 == 0:
+                f.write(b'#skip\r\n' if policy != 'quoted_rfc' else b'7,"two\nlines"\r\n')
+
+    def run(name):
+        out = str(tmp_path / name)
+        query_csv(spark, 'SELECT *', p, output_path=out, encoding='latin-1',
+                  policy=policy, with_headers=True, comment_prefix='#')
+        return open(out, 'rb').read()
+
+    monkeypatch.setattr(C, '_DISTRIBUTED_SCAN_MIN_BYTES', 1 << 62)
+    driver = run('driver.csv')
+    monkeypatch.setattr(C, '_DISTRIBUTED_SCAN_MIN_BYTES', 1)
+    assert run('bulk.csv') == driver
+    assert driver.startswith(b'caf\xe9,') and b'#' not in driver
+
+
+def test_utf8_check_spans_read_chunks(spark, tmp_path):
+    from rbql_spark.errors import RbqlIOHandlingError
+    # a multi-byte character across the 1 MB read boundary is valid UTF-8
+    ok = str(tmp_path / 'ok.csv')
+    with open(ok, 'wb') as f:
+        f.write(b'a' * ((1 << 20) - 1) + 'é,1\n2,3\n'.encode('utf-8'))
+    rows, _ = _handle_rows(read_csv(spark, ok, policy='simple'))
+    assert rows[-1][:2] == ('2', '3')
+    # an invalid byte past the first chunk is still found
+    bad = str(tmp_path / 'bad.csv')
+    with open(bad, 'wb') as f:
+        f.write(b'a,b\n' * (300 << 10) + b'\xff,1\n')
+    with pytest.raises(RbqlIOHandlingError,
+                       match='Unable to decode input table as UTF-8. '
+                             'Use binary \\(latin-1\\) encoding instead'):
+        read_csv(spark, bad, policy='simple')

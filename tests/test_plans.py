@@ -833,3 +833,145 @@ def test_plan_width_decided_at_engine_layer(spark, sf_dir, entry):
     finally:
         spark.conf.unset(key)
         spark.conf.unset(tuning.WIDE_INITIAL_KEY)
+
+
+def _small_csv(tmp_path, n=2000):
+    p = str(tmp_path / 'small.csv')
+    with open(p, 'w') as f:
+        f.write('id,grp,val\n')
+        for i in range(n):
+            f.write('{},{},{}\n'.format(i, i % 7, (i * 37) % 1000))
+    return p
+
+
+def test_headered_csv_read_runs_no_job_once_width_cached(spark, tmp_path):
+    # the header row is dropped by a filter on its known order key, not by
+    # an eager min() over the split
+    from rbql_spark.sources.csv import read_csv
+    p = _small_csv(tmp_path)
+    read_csv(spark, p, with_headers=True)   # probes and caches the width
+    assert _count_jobs(spark, 'csv_read_cached',
+                       lambda: read_csv(spark, p, with_headers=True)) == 0
+
+
+def test_small_csv_query_job_counts(spark, tmp_path):
+    # a one-partition CSV scan is neither spread by a range exchange nor
+    # sorted by one: the driver-bound sort runs in the scan's own task
+    from rbql_spark.api import query_csv
+    p = _small_csv(tmp_path)
+    out = str(tmp_path / 'out.csv')
+
+    def run(query):
+        return lambda: query_csv(spark, query, p, output_path=out, with_headers=True)
+
+    group = 'SELECT a.grp, COUNT(*) AS n GROUP BY a.grp'
+    run(group)()   # probes and caches the width
+    assert _count_jobs(spark, 'csv_group', run(group)) <= 2
+    assert _count_jobs(spark, 'csv_sort', run(
+        'SELECT a.id, a.val WHERE int(a.grp) == 3 ORDER BY int(a.val) DESC')) == 1
+    rows = [(i, (i * 37) % 1000) for i in range(2000) if i % 7 == 3]
+    rows.sort(key=lambda r: (-r[1], r[0]))
+    assert open(out).read() == 'id,val\n' + ''.join('{},{}\n'.format(*r) for r in rows)
+
+
+def test_driver_bound_sort_keeps_multi_partition_split_parallel(spark, tmp_path):
+    # sorting in one partition must not narrow a multi-partition scan (and
+    # the Python split above it) to one task
+    from rbql_spark.api import query_csv
+    p = _small_csv(tmp_path, n=20000)
+    out = str(tmp_path / 'out.csv')
+    key = 'spark.sql.files.maxPartitionBytes'
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(64 << 10))
+    sc = spark.sparkContext
+    try:
+        assert spark.read.text(p).rdd.getNumPartitions() >= 2
+        run = lambda: query_csv(spark, 'SELECT a.id WHERE a.grp == "5" ORDER BY int(a.id) DESC',
+                                p, output_path=out, with_headers=True)
+        run()   # probes and caches the width
+        _count_jobs(spark, 'csv_sort_parallel', run)
+    finally:
+        spark.conf.set(key, old)
+    tasks = [sc.statusTracker().getStageInfo(s).numTasks
+             for j in sc.statusTracker().getJobIdsForGroup('csv_sort_parallel')
+             for s in sc.statusTracker().getJobInfo(j).stageIds]
+    assert max(tasks) >= 2, tasks
+    ids = [i for i in range(20000) if i % 7 == 5][::-1]
+    assert open(out).read() == 'id\n' + ''.join('{}\n'.format(i) for i in ids)
+
+
+# one gate per query shape: grouped and global aggregation, join, TOP +
+# ORDER BY, UPDATE, UNNEST, pipe chain, EXCEPT
+@pytest.mark.parametrize('name', [
+    'rbql_group_agg', 'rbql_global_agg', 'rbql_inner_join',
+    'rbql_select_top_order', 'rbql_update', 'rbql_unnest', 'rbql_pipe_chain',
+    'rbql_except'])
+def test_driver_bound_sort_adds_no_job_to_gate(spark, sf_dir, entry, name):
+    # collect_result_rows sorts inside one partition; no RBQL gate may need
+    # more jobs that way than through the global orderBy it replaced
+    import inspect
+    from rbql_spark.api import collect_result_rows, query_dataframe
+    from rbql_spark.binding import TableHandle
+    from rbql_spark.engine import EngineOptions
+    from rbql_spark.registry import ParquetDirRegistry
+
+    g = inspect.getclosurevars(inspect.unwrap(entry.queries()[name])).nonlocals
+
+    def measure(group, action):
+        handle = TableHandle(df=entry._t(spark, sf_dir, g['table']))
+        handle.header = list(handle.df.columns)
+        res = query_dataframe(
+            spark, g['query'], handle, registry=ParquetDirRegistry(sf_dir),
+            options=EngineOptions(strict_checks=g['strict'],
+                                  broadcast_join=g['broadcast'],
+                                  dialect=g['dialect']))
+        try:
+            return _count_jobs(spark, group, lambda: action(res))
+        finally:
+            res.release()
+
+    measure(name + '_warm', collect_result_rows)
+    one = measure(name + '_one', collect_result_rows)
+    global_ = measure(name + '_global', lambda r: r.ordered_df().collect())
+    assert one <= global_
+    if name == 'rbql_group_agg':
+        assert one < global_
+
+
+def test_scan_partition_estimate_over_file_scans(spark, sf_dir, tmp_path):
+    # a narrow chain over a parquet or text file scan has a byte-sized
+    # partition estimate (spread_partitions relies on it instead of
+    # building a physical plan)
+    from rbql_spark.tuning import scan_partition_estimate
+    pq = (spark.read.parquet(os.path.join(sf_dir, 'lineitem.parquet'))
+          .filter('l_quantity > 5').select('l_orderkey'))
+    text = spark.read.text(_small_csv(tmp_path)).filter("value != ''")
+    for df in (pq, text):
+        n, nbytes = scan_partition_estimate(df)
+        assert n is not None and n >= 1 and nbytes > 0
+
+
+def test_one_partition_keeps_grouped_final_stage_parallel(spark, sf_dir):
+    # coalesce(1) only where the last stage has one partition's work; a
+    # grouped aggregation over a multi-partition scan is gathered through
+    # an exchange so its final aggregation keeps its own tasks
+    from rbql_spark.tuning import one_partition
+
+    def shuffles(df):
+        return one_partition(df)._jdf.queryExecution().analyzed().shuffle()
+
+    key = 'spark.sql.files.maxPartitionBytes'
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(64 << 10))
+    try:
+        li = spark.read.parquet(os.path.join(sf_dir, 'lineitem.parquet'))
+        assert li.rdd.getNumPartitions() >= 2
+        assert shuffles(li.groupBy('l_orderkey').count())
+        assert shuffles(li.filter('l_quantity > 5'))
+        assert not shuffles(li.groupBy().count())
+        assert not shuffles(li.limit(10))
+    finally:
+        spark.conf.set(key, old)
+    one = spark.read.parquet(os.path.join(sf_dir, 'region.parquet'))
+    assert one.rdd.getNumPartitions() == 1
+    assert not shuffles(one.groupBy('r_name').count().filter('count > 0'))

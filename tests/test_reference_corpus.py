@@ -20,8 +20,10 @@ import pytest
 
 CORPUS_PATH = '/root/reference/test/rbql_unit_tests.json'
 
-pytestmark = [pytest.mark.slow, pytest.mark.skipif(
-    not os.path.exists(CORPUS_PATH), reason='reference corpus not available')]
+pytestmark = pytest.mark.slow
+
+if not os.path.exists(CORPUS_PATH):
+    pytest.skip('reference corpus not available', allow_module_level=True)
 
 
 def load_cases():

@@ -15,8 +15,10 @@ import pytest
 REF_TEST_DIR = '/root/reference/test'
 CORPUS_PATH = os.path.join(REF_TEST_DIR, 'csv_unit_tests.json')
 
-pytestmark = [pytest.mark.slow, pytest.mark.skipif(
-    not os.path.exists(CORPUS_PATH), reason='reference csv corpus not available')]
+pytestmark = pytest.mark.slow
+
+if not os.path.exists(CORPUS_PATH):
+    pytest.skip('reference csv corpus not available', allow_module_level=True)
 
 
 def load_cases():

@@ -11,8 +11,8 @@ import pytest
 REF_TEST_DIR = '/root/reference/test'
 CORPUS_PATH = os.path.join(REF_TEST_DIR, 'json_files_unit_tests.json')
 
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(CORPUS_PATH), reason='reference jsonl corpus not available')
+if not os.path.exists(CORPUS_PATH):
+    pytest.skip('reference jsonl corpus not available', allow_module_level=True)
 
 
 def load_cases():
