@@ -832,11 +832,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def _dedup_simhash(spark, sf_dir):
         from rbql_spark.ops.dedup import simhash_near_dups
-        # engine='vectorized' → md5-derived token hashes; the pigeonhole
-        # candidate stage has recall 1 by construction, so the result equals
-        # the all-pairs Hamming answer the oracle computes
+        # md5-derived token hashes; the pigeonhole candidate stage has
+        # recall 1 by construction, so the result equals the all-pairs
+        # Hamming answer the oracle computes
         return simhash_near_dups(_t(spark, sf_dir, 'documents'), 'text', 'doc_id',
-                                 max_hamming=7, engine='vectorized')
+                                 max_hamming=7)
     q['dedup_simhash'] = _dedup_simhash
 
     def _dedup_incremental(spark, sf_dir):
@@ -892,7 +892,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _dedup_clusters(spark, sf_dir):
         from rbql_spark.ops.dedup import dedup_clusters, simhash_near_dups
         pairs = simhash_near_dups(_t(spark, sf_dir, 'documents'), 'text', 'doc_id',
-                                  max_hamming=7, engine='vectorized')
+                                  max_hamming=7)
         return dedup_clusters(pairs)
     q['dedup_clusters'] = _dedup_clusters
 
@@ -901,8 +901,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # non-representative members (min id survives per cluster)
         from rbql_spark.ops.dedup import keep_canonical, simhash_near_dups
         docs = _t(spark, sf_dir, 'documents')
-        pairs = simhash_near_dups(docs, 'text', 'doc_id',
-                                  max_hamming=7, engine='vectorized')
+        pairs = simhash_near_dups(docs, 'text', 'doc_id', max_hamming=7)
         return keep_canonical(docs, pairs).select('doc_id', 'lang', 'n_chars')
     q['dedup_keep_canonical'] = _dedup_keep
 
@@ -1867,7 +1866,7 @@ def _minhash_replay_sql(num_perm: int, shingle_k: int, seed: int,
 
 
 def _simhash_replay_sql(max_hamming: int) -> str:
-    """Replay simhash_near_dups (engine='vectorized') in DuckDB: md5-64
+    """Replay simhash_near_dups in DuckDB: md5-64
     token hashes → per-bit ±1 votes → sign fingerprint (two's complement)
     → ALL-PAIRS Hamming ≤ max_hamming.  The Spark pigeonhole block join has
     recall 1 by construction, so its output equals this exact answer."""

@@ -195,7 +195,7 @@ def calibrate(spark) -> dict:
     boxes, divide each per-query time by that artifact's matching probe
     (jvm_sec for JVM-native gates, py_sec for mapInPandas-heavy gates)
     before computing ratios; same-box A/B comparisons need no
-    normalization and remain the gold standard (tools/time_gates_ab.py).
+    normalization and remain the gold standard (tools/ab.py).
     """
     from pyspark.sql import functions as F
     jvm = []

@@ -110,73 +110,25 @@ def train_bpe(df: DataFrame, text_col: str = 'text', id_col: str = 'doc_id',
 
 
 def apply_bpe(df: DataFrame, merges: list[tuple[str, str]],
-              text_col: str = 'text', id_col: str = 'doc_id',
-              impl: str = 'arrow') -> DataFrame:
+              text_col: str = 'text', id_col: str = 'doc_id') -> DataFrame:
     """Tokenize documents with a learned merge list (rank order) →
     (doc_id, bpe_tokens array<string>, n_bpe_tokens).  A pure projection
     — each document's words fold through the merges inside the scan
     tasks, no shuffle.
 
-    impl='arrow' (default, round-16): tokenization stays native (the
-    same `tokens()` expression, so word boundaries are bit-identical to
-    the Catalyst path), but the merge fold runs as an Arrow kernel with
-    a per-task WORD memo — each distinct word is encoded once per task
-    and every later occurrence is a dict hit.  The Catalyst fold
-    (impl='native') executes interpreted (no codegen for lambda bodies,
-    the NOTES_r13 A/B) and re-folds every word OCCURRENCE: ~n_merges ×
-    corpus-occurrence interpreted string folds, measured 3.5× slower
-    than the memoized kernel at sf0.1.  Both impls emit identical
-    arrays (tests/test_bpe.py::test_apply_impls_identical).
-
-    impl='native': pure Catalyst expressions — no Python in the plan.
+    Tokenization stays native (the same `tokens()` expression train_bpe
+    uses, so word boundaries never drift), and the merge fold runs as an
+    Arrow kernel with a per-task WORD memo — each distinct word is
+    encoded once per task and every later occurrence is a dict hit.  A
+    Catalyst fold executes interpreted (no codegen for lambda bodies,
+    the NOTES_r13 A/B) and re-folds every word OCCURRENCE; it measured
+    3.5× slower than the memoized kernel at sf0.1.  The kernel's
+    whole-symbol left-to-right non-overlapping scan is the same fold as
+    _apply_merge's separator-boundary accumulator (symbols never contain
+    the separator, so `acc == left or acc.endswith(SEP+left)` ⟺ the
+    previously emitted symbol equals `left`), which is what the DuckDB
+    oracle replays.
     """
-    if impl == 'arrow':
-        return _apply_bpe_arrow(df, merges, text_col, id_col)
-    if impl != 'native':
-        raise ValueError("apply_bpe: impl must be 'arrow' or 'native'")
-
-    def encode(ta):
-        word_syms = F.transform(
-            ta, lambda w: F.concat_ws(_SEP, F.split(w, '')))
-        merged = word_syms
-        def make_fold(left, right):
-            # closure factory: pyspark infers higher-order arity from the
-            # lambda signature, so the pair can't ride along as default args
-            def fold_one(sym_str):
-                def fold(s):
-                    return F.aggregate(
-                        F.slice(s, 2, F.size(s) - 1), F.element_at(s, 1),
-                        lambda acc, x: F.when(
-                            ((acc == F.lit(left)) | acc.endswith(_SEP + left))
-                            & (x == F.lit(right)),
-                            F.concat(acc, x)
-                        ).otherwise(F.concat(acc, F.lit(_SEP), x)))
-                return let_once(F.split(sym_str, _SEP), fold)
-            return fold_one
-
-        for left, right in merges:
-            merged = F.transform(merged, make_fold(left, right))
-        return F.flatten(F.transform(merged, lambda m: F.split(m, _SEP)))
-
-    out = df.select(F.col(id_col).alias('doc_id'),
-                    let_once(tokens(F.col(text_col)), encode).alias('bpe_tokens'))
-    return out.select('doc_id', 'bpe_tokens',
-                      F.size('bpe_tokens').cast('long').alias('n_bpe_tokens'))
-
-
-def _apply_bpe_arrow(df: DataFrame, merges: list[tuple[str, str]],
-                     text_col: str, id_col: str) -> DataFrame:
-    """Arrow merge-fold kernel behind apply_bpe(impl='arrow').
-
-    The scan projects (id, tokens) with the NATIVE tokenizer — word
-    boundaries can never drift from the Catalyst path — and the kernel
-    folds each distinct word through the merge list once per task
-    (memo dict), then concatenates per-doc symbol lists.  The Python
-    scan below is whole-symbol left-to-right non-overlapping merging,
-    provably the same fold as _apply_merge's separator-boundary
-    accumulator (symbols never contain the separator, so `acc == left
-    or acc.endswith(SEP+left)` ⟺ the previously emitted symbol equals
-    `left`)."""
     mlist = [(str(left), str(right)) for left, right in merges]
     id_type = df.schema[id_col].dataType.simpleString()
     src = df.select(F.col(id_col).alias('doc_id'),

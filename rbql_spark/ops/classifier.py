@@ -128,167 +128,70 @@ def _weights_df(spark, weights: list[float]) -> DataFrame:
         'bucket long, __w double')
 
 
-def _grad_partial_arrow(cached: DataFrame, w: list[float]):
-    """One gradient round's per-bucket partial sums via a numpy kernel
-    (the cluster._iter_stats_arrow shape applied to logistic GD): per
-    task, compute every doc's round-6 logit z = round6(Σ w_b·x_b), the
-    sigmoid residual g = σ(z) − y, and fold g·x into a dense (dim+1)
-    partial gradient, emitting ONE (dim+1)-row frame per task.
-    Replaces the two cache scans + broadcast-weights join + per-doc agg
-    + doc_id join of the native round with a single shuffle-free scan
-    whose collect moves ≤ tasks × (dim+1) rows.  Requires the cache
-    hash-partitioned on doc_id (a doc never spans tasks) and sorted
-    within partitions by doc_id (a doc's rows are contiguous, so only
-    an Arrow batch boundary can split one — the kernel holds the
-    trailing doc and carries it into the next batch).  Per-doc
-    summation order and the numpy exp differ from the JVM round by
-    sub-ulp amounts that sit below the round-6 training grid (the
-    module's determinism contract; parity-tested against the native
-    impl and the DuckDB oracle replay).
-    """
-    import numpy as np
-
-    warr = np.asarray(w, dtype=np.float64)      # dim+1 values: tiny, ships
-    d1 = int(warr.size)                         # in the task closure
-
-    def run(batches):
-        import pandas as pd
-        gsum = np.zeros(d1, dtype=np.float64)
-        n_docs = 0
-        carry = None
-
-        def fold(frame):
-            nonlocal n_docs
-            ids = frame['doc_id'].to_numpy()
-            b = frame['bucket'].to_numpy(dtype=np.int64)
-            x = frame['x'].to_numpy(dtype=np.float64)
-            y = frame['y'].to_numpy(dtype=np.float64)
-            bounds = np.flatnonzero(np.r_[True, ids[1:] != ids[:-1]])
-            z = _round6_np(np.add.reduceat(warr[b] * x, bounds))
-            g = 1.0 / (1.0 + np.exp(-z)) - y[bounds]
-            counts = np.diff(np.r_[bounds, ids.size])
-            np.add.at(gsum, b, np.repeat(g, counts) * x)
-            n_docs += int(bounds.size)
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            ids = pdf['doc_id'].to_numpy()
-            # rows are sorted by doc_id, so the (possibly continuing)
-            # trailing doc is the contiguous run of the last id
-            cut = ids.size - int(np.count_nonzero(ids == ids[-1]))
-            if cut > 0:
-                fold(pdf.iloc[:cut])
-            carry = pdf.iloc[cut:]
-        if carry is not None and len(carry):
-            fold(carry)
-        yield pd.DataFrame({
-            'bucket': np.arange(d1, dtype=np.int64),
-            'grad': gsum,
-            'nd': np.where(np.arange(d1) == d1 - 1, n_docs, 0)})
-
-    return cached.mapInPandas(run, 'bucket long, grad double, nd long') \
-                 .collect()
-
-
 def classifier_train(labeled: DataFrame, label_col: str = 'label',
                      text_col: str = 'text', id_col: str = 'doc_id',
                      dim: int = 4096, ngram_max: int = 2, seed: int = 42,
-                     n_iter: int = 3, lr: float = 1.0,
-                     iter_impl: str = 'native') -> list[float]:
+                     n_iter: int = 3, lr: float = 1.0) -> list[float]:
     """Fit the logistic-regression quality model → a (dim+1)-length
     weight list (index dim is the intercept), every entry on the 1e-6
     grid.
 
-    `label_col` must be 0/1-valued (castable to double).  The default
-    ``iter_impl='native'`` runs each of the `n_iter` full-batch rounds
-    all-JVM (the round-16 shape): logits via a broadcast join with the
-    current weights, per-doc aggregation reusing the cache
+    `label_col` must be 0/1-valued (castable to double).  Each of the
+    `n_iter` full-batch rounds runs all-JVM: logits via a broadcast join
+    with the current weights, per-doc aggregation reusing the cache
     partitioning, residuals joined back on doc_id, then a
     map-side-combined per-bucket gradient whose exchange carries
-    ≤ partitions × (dim+1) rows.  ``iter_impl='arrow'`` folds the whole
-    round into ONE shuffle-free numpy scan of the cache
-    (_grad_partial_arrow, the kmeans _iter_stats_arrow shape;
-    parity-tested weight-for-weight against native).  Unlike kmeans —
-    where the kernel replaced a posexplode Exchange and won 2.3× —
-    the per-row work here (w[bucket]·x) is trivial, so shipping every
-    cache row across the Arrow boundary costs about what the join
-    machinery saves: an r17 interleaved A/B measured the two impls
-    within noise of each other at sf0.1 (guide §4.1's boundary-cost
-    caveat), so native stays the default and 'arrow' remains for
-    wide-dim regimes where the weight join dominates.  Either way the
-    update w ← round6(w − lr·(grad / n_docs)) happens driver-side on
-    dim+1 numbers.
+    ≤ partitions × (dim+1) rows.  The update
+    w ← round6(w − lr·(grad / n_docs)) happens driver-side on dim+1
+    numbers.
 
     Persists the slim feature triple for the duration of the call and
     unpersists before returning (the kmeans_cluster cache contract).
     The cache is hash-partitioned on doc_id at an EXPLICIT
     advisor-derived count (round 16; the advisor keeps per-task bytes
-    constant at scale), carries only the four training columns, and
-    under 'arrow' is additionally sorted within partitions by doc_id so
-    every doc's rows are contiguous for the kernel.  n_docs rides out
-    of round 1's gradient collect as the intercept bucket's doc count,
-    so there is no separate up-front count job.
+    constant at scale) and carries only the four training columns.
+    n_docs rides out of round 1's gradient collect as the intercept
+    bucket's doc count, so there is no separate up-front count job.
     """
     if int(n_iter) < 1:
         raise ValueError('n_iter must be >= 1')
-    if iter_impl not in ('arrow', 'native'):
-        raise ValueError("iter_impl must be 'arrow' or 'native'")
     feats = _features(labeled, text_col, id_col, dim, ngram_max, seed,
                       label=F.col(label_col))
     from pyspark.storagelevel import StorageLevel
 
-    from rbql_spark.tuning import advise_shuffle_partitions, input_scan_bytes
+    from rbql_spark.tuning import advise_shuffle_partitions, leaf_bytes
     n_parts = advise_shuffle_partitions(labeled.sparkSession,
-                                        input_scan_bytes(labeled),
-                                        expansion=2.0)
-    feats = feats.select('doc_id', 'y', 'bucket', 'x') \
-                 .repartition(n_parts, 'doc_id')
-    if iter_impl == 'arrow':
-        feats = feats.sortWithinPartitions('doc_id')
-    feats = feats.persist(StorageLevel.MEMORY_AND_DISK)
+                                        leaf_bytes(labeled), expansion=2.0)
+    feats = (feats.select('doc_id', 'y', 'bucket', 'x')
+                  .repartition(n_parts, 'doc_id')
+                  .persist(StorageLevel.MEMORY_AND_DISK))
     try:
         n_docs = 0
         w = [0.0] * (int(dim) + 1)
         for _ in range(int(n_iter)):
-            if iter_impl == 'arrow':
-                rows = _grad_partial_arrow(feats, w)
-                if not n_docs:
-                    n_docs = sum(int(r['nd']) for r in rows)
-                    if n_docs == 0:
-                        raise ValueError(
-                            'classifier_train: no documents with features')
-                gd: dict[int, float] = {}
-                for r in rows:
-                    j = int(r['bucket'])
-                    gd[j] = gd.get(j, 0.0) + float(r['grad'])
-            else:
-                wdf = _weights_df(labeled.sparkSession, w)
-                docg = (feats.join(F.broadcast(wdf), 'bucket')
-                             .groupBy('doc_id')
-                             .agg(F.first('y').alias('y'),
-                                  F.round(F.sum(F.col('__w') * F.col('x')),
-                                          6).alias('__z'))
-                             .select('doc_id',
-                                     (F.lit(1.0) / (F.lit(1.0)
-                                                    + F.exp(-F.col('__z')))
-                                      - F.col('y')).alias('__g')))
-                grad = (feats.join(docg, 'doc_id')
-                             .groupBy('bucket')
-                             .agg(F.sum(F.col('__g') * F.col('x'))
-                                   .alias('__grad'),
-                                  F.count(F.lit(1)).alias('__cnt'))
-                             .collect())
-                if not n_docs:
-                    n_docs = sum(int(r['__cnt']) for r in grad
-                                 if int(r['bucket']) == int(dim))
-                    if n_docs == 0:
-                        raise ValueError(
-                            'classifier_train: no documents with features')
-                gd = {int(r['bucket']): float(r['__grad']) for r in grad}
+            wdf = _weights_df(labeled.sparkSession, w)
+            docg = (feats.join(F.broadcast(wdf), 'bucket')
+                         .groupBy('doc_id')
+                         .agg(F.first('y').alias('y'),
+                              F.round(F.sum(F.col('__w') * F.col('x')),
+                                      6).alias('__z'))
+                         .select('doc_id',
+                                 (F.lit(1.0) / (F.lit(1.0)
+                                                + F.exp(-F.col('__z')))
+                                  - F.col('y')).alias('__g')))
+            grad = (feats.join(docg, 'doc_id')
+                         .groupBy('bucket')
+                         .agg(F.sum(F.col('__g') * F.col('x'))
+                               .alias('__grad'),
+                              F.count(F.lit(1)).alias('__cnt'))
+                         .collect())
+            if not n_docs:
+                n_docs = sum(int(r['__cnt']) for r in grad
+                             if int(r['bucket']) == int(dim))
+                if n_docs == 0:
+                    raise ValueError(
+                        'classifier_train: no documents with features')
+            gd = {int(r['bucket']): float(r['__grad']) for r in grad}
             w = [float(_round6_np(w[j] - float(lr) * (gd.get(j, 0.0)
                                                       / float(n_docs))))
                  for j in range(int(dim) + 1)]

@@ -2,9 +2,11 @@
 reference — SURVEY §2.8 flags these as deliberate supersets; designed for
 100 TB-class document tables).
 
-All hot-path math stays in native Spark SQL expressions (xxhash64, array
-transforms) — no Python UDFs — so whole-stage codegen applies and the only
-shuffles are the groupBy/join on candidate keys.
+Hot-path math stays in native Spark SQL expressions (xxhash64/md5, array
+transforms) so whole-stage codegen applies, except the two per-document
+kernels Catalyst would run interpreted — minhash signatures and simhash
+fingerprints — which are Arrow-batched numpy passes.  The only shuffles are
+the groupBy/join on candidate keys.
 
   * exact_dedup        — hash-groupBy on normalized text (1 shuffle)
   * minhash_signatures — k-shingle → 64-bit hash → per-permutation min
@@ -28,10 +30,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Mersenne prime 2^31-1: universal-hashing modulus for minhash.  Shingle
-# hashes are masked to 32 bits and a < 2^30 so a*s + b < 2^62 — no long
-# overflow under Spark's default ANSI arithmetic.
+# hashes are 32-bit and a < 2^30 so a*s + b < 2^62 — no int64 overflow.
 _PRIME31 = (1 << 31) - 1
-_MASK32 = (1 << 32) - 1
 
 # Vectorized-kernel memory bounds.  Both are per-worker working-set caps, NOT
 # correctness knobs: results are identical at any setting (tests run them at
@@ -54,9 +54,12 @@ _MINHASH_FLUSH_UNIQ: int | None = None
 # most this many edges (~16 bytes each — measured BEFORE collecting),
 # the union-find finishes on the driver in one bounded Arrow collect
 # instead of O(log d) distributed alternation rounds.  0 disables.
-CC_DRIVER_FINISH_EDGES = int(
-    os.environ.get('RBQL_CC_DRIVER_FINISH_EDGES', '500000'))
+CC_DRIVER_FINISH_EDGES = 500000
 _SIMHASH_MEMO_CAP = 1 << 20
+
+# spread_partitions' per-task input target for CPU-heavy row operators
+# (see its docstring for the sf0.1 sweep that chose it).
+SPREAD_BYTES_PER_TASK = 256 << 10
 
 
 def spread_partitions(df: DataFrame, min_per_core: int = 1,
@@ -69,7 +72,7 @@ def spread_partitions(df: DataFrame, min_per_core: int = 1,
 
     Size-aware raising (r17, r16 verdict #5): the batch target derives
     from the plan's input bytes — ``min(cores, max(floor,
-    ceil(bytes × expansion / RBQL_SPREAD_BYTES_PER_TASK)))`` with the
+    ceil(bytes × expansion / SPREAD_BYTES_PER_TASK)))`` with the
     floor at ``min(cores, STREAM_MIN_PARTITIONS)``.  Always spreading
     to FULL ``defaultParallelism`` made 8 cores beat 32 on kilobyte
     inputs (multimodal decode 0.62, text_lm_score 0.76 in the r16
@@ -94,14 +97,10 @@ def spread_partitions(df: DataFrame, min_per_core: int = 1,
     round-robin repartition) buys cores-wide execution of the heavy
     stage (size-deriving per micro-batch is not possible — the plan is
     built once, batches vary).  A source that already delivers wide
-    batches pays one redundant pass-through shuffle; set
-    RBQL_STREAM_SPREAD=0 for that regime.
+    batches pays one redundant pass-through shuffle.
     """
     if df.isStreaming:
-        if os.environ.get('RBQL_STREAM_SPREAD', '1') != '0':
-            return df.repartition(
-                df.sparkSession.sparkContext.defaultParallelism)
-        return df
+        return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
     from rbql_spark.tuning import (
         STREAM_MIN_PARTITIONS, scan_partition_estimate,
     )
@@ -118,13 +117,11 @@ def spread_partitions(df: DataFrame, min_per_core: int = 1,
         cur = df.rdd.getNumPartitions()
     if cur >= cores:
         return df
-    per_task = int(os.environ.get('RBQL_SPREAD_BYTES_PER_TASK',
-                                  str(256 << 10)))
-    if nbytes is None or per_task <= 0:
+    if nbytes is None:
         target = cores
     else:
         floor = min(cores, STREAM_MIN_PARTITIONS)
-        want = math.ceil(nbytes * max(expansion, 1.0) / per_task)
+        want = math.ceil(nbytes * max(expansion, 1.0) / SPREAD_BYTES_PER_TASK)
         target = min(cores, max(floor, want))
     if cur < target:
         return df.repartition(target)
@@ -411,22 +408,17 @@ def _perm_params(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
 
 def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
                        num_perm: int = 64, shingle_k: int = 3,
-                       seed: int = 42, engine: str = 'vectorized',
-                       hash_fn: str = 'crc32',
+                       seed: int = 42, hash_fn: str = 'crc32',
                        carry_cols: tuple[str, ...] = ()) -> DataFrame:
     """(id, signature array<long>[num_perm], shingles) per document.
 
     Each permutation j: min over shingles s of (a_j*s + b_j) mod M.
 
-    engine='vectorized' (default): shingle hashing stays native (xxhash64 in
-    the JVM), the num_perm×|shingles| min-reduction runs as an Arrow-batched
-    pandas UDF doing one numpy matrix op per document.  Spark's higher-order
+    One Arrow-batched pass per task: tokenize, hash each distinct word
+    k-shingle to 32 bits, and run the num_perm×|shingles| min-reduction
+    as one numpy matrix op per tile of documents.  Spark's higher-order
     array functions (transform/array_min) execute *interpreted* — num_perm
-    interpreted lanes over every shingle are ~10× slower than one vectorized
-    matmul-shaped reduction, measured at sf0.1.
-
-    engine='native': pure Catalyst expressions (no Python in the plan) —
-    identical results, useful where Python workers are undesirable.
+    interpreted lanes over every shingle measured ~10× slower at sf0.1.
 
     hash_fn: 'crc32' (cheapest, default) or 'md5' — 32-bit shingle hash from
     the first 8 md5 hex chars, reproducible in any engine with md5()
@@ -435,116 +427,90 @@ def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
     df = spread_partitions(df)
     params = _perm_params(num_perm, seed)
 
-    if engine == 'vectorized':
-        # One Arrow-batched pass: Python-regex tokenize → 32-bit shingle
-        # hashes → numpy (num_perm × |shingles|) min-reduction.  ~10× faster
-        # than interpreted Catalyst HOF lanes at equal determinism (both
-        # hash choices are stable across runs/workers).
-        a_vec = [a for a, _ in params]
-        b_vec = [b for _, b in params]
-        k = shingle_k
-        use_md5 = hash_fn == 'md5'
-        flush_uniq = (_MINHASH_FLUSH_UNIQ if _MINHASH_FLUSH_UNIQ
-                      else max(1024, _MINHASH_TILE_BYTES // (8 * num_perm)))
-        src = df.select(F.col(id_col).alias('doc_id'), F.col(text_col).alias('__text'),
-                        *[F.col(c) for c in carry_cols])
-        carry_ddl = ''.join(', {} {}'.format(c, df.schema[c].dataType.simpleString())
-                            for c in carry_cols)
+    a_vec = [a for a, _ in params]
+    b_vec = [b for _, b in params]
+    k = shingle_k
+    use_md5 = hash_fn == 'md5'
+    flush_uniq = (_MINHASH_FLUSH_UNIQ if _MINHASH_FLUSH_UNIQ
+                  else max(1024, _MINHASH_TILE_BYTES // (8 * num_perm)))
+    src = df.select(F.col(id_col).alias('doc_id'), F.col(text_col).alias('__text'),
+                    *[F.col(c) for c in carry_cols])
+    carry_ddl = ''.join(', {} {}'.format(c, df.schema[c].dataType.simpleString())
+                        for c in carry_cols)
 
-        def run(batches):
-            import hashlib
-            import re as _re
-            import zlib
+    def run(batches):
+        import hashlib
+        import re as _re
+        import zlib
 
-            import numpy as np
-            import pandas as pd
-            if use_md5:
-                h32 = lambda bs: int(hashlib.md5(bs).hexdigest()[:8], 16)  # noqa: E731
-            else:
-                h32 = zlib.crc32
-            A = np.asarray(a_vec, dtype=np.int64)[:, None]
-            B = np.asarray(b_vec, dtype=np.int64)[:, None]
-            token_rgx = _re.compile(r'[^\W_]+', _re.UNICODE)
-            for pdf in batches:
-                # Hash each distinct shingle once per tile (duplicate docs
-                # share every shingle; even unrelated docs share many), and
-                # run the num_perm × |uniq| permutation table as one matrix
-                # op per TILE, slicing per-doc columns out of it — instead
-                # of per-doc hashing + per-doc matmuls.  A tile closes once
-                # it accumulates _MINHASH_FLUSH_UNIQ distinct shingle
-                # hashes, so peak memory is bounded regardless of how
-                # vocabulary-diverse the batch is (an unbounded batch-level
-                # table reaches multi-GB on disjoint-vocabulary corpora).
-                uniq: dict[int, int] = {}   # 32-bit shingle hash → column
-                gmemo: dict[str, int] = {}  # gram text → hash (per tile)
-                cols_per_doc: list = []
-                sh_out: list = []
-                sig_out: list = []
+        import numpy as np
+        import pandas as pd
+        if use_md5:
+            h32 = lambda bs: int(hashlib.md5(bs).hexdigest()[:8], 16)  # noqa: E731
+        else:
+            h32 = zlib.crc32
+        A = np.asarray(a_vec, dtype=np.int64)[:, None]
+        B = np.asarray(b_vec, dtype=np.int64)[:, None]
+        token_rgx = _re.compile(r'[^\W_]+', _re.UNICODE)
+        for pdf in batches:
+            # Hash each distinct shingle once per tile (duplicate docs
+            # share every shingle; even unrelated docs share many), and
+            # run the num_perm × |uniq| permutation table as one matrix
+            # op per TILE, slicing per-doc columns out of it — instead
+            # of per-doc hashing + per-doc matmuls.  A tile closes once
+            # it accumulates _MINHASH_FLUSH_UNIQ distinct shingle
+            # hashes, so peak memory is bounded regardless of how
+            # vocabulary-diverse the batch is (an unbounded batch-level
+            # table reaches multi-GB on disjoint-vocabulary corpora).
+            uniq: dict[int, int] = {}   # 32-bit shingle hash → column
+            gmemo: dict[str, int] = {}  # gram text → hash (per tile)
+            cols_per_doc: list = []
+            sh_out: list = []
+            sig_out: list = []
 
-                def flush():
-                    s = np.fromiter(uniq, dtype=np.int64, count=len(uniq))
-                    perm = (A * s[None, :] + B) % _PRIME31  # num_perm × n_uniq
-                    for cols in cols_per_doc:
-                        sh_out.append(s[cols])
-                        sig_out.append(perm[:, cols].min(axis=1))
-                    uniq.clear()
-                    gmemo.clear()
-                    cols_per_doc.clear()
+            def flush():
+                s = np.fromiter(uniq, dtype=np.int64, count=len(uniq))
+                perm = (A * s[None, :] + B) % _PRIME31  # num_perm × n_uniq
+                for cols in cols_per_doc:
+                    sh_out.append(s[cols])
+                    sig_out.append(perm[:, cols].min(axis=1))
+                uniq.clear()
+                gmemo.clear()
+                cols_per_doc.clear()
 
-                for text in pdf['__text']:
-                    toks = token_rgx.findall((text or '').lower())
-                    if len(toks) >= k:
-                        grams = {' '.join(toks[i:i + k])
-                                 for i in range(len(toks) - k + 1)}
-                    else:
-                        grams = {' '.join(toks)}
-                    # column set keyed by HASH value: two grams colliding
-                    # under the 32-bit hash collapse to one column, so the
-                    # emitted shingle arrays stay duplicate-free — matching
-                    # the native path's array_distinct-after-hash and the
-                    # SQL oracle's list_distinct.
-                    cols = {uniq.setdefault(
-                                gmemo.get(g) if g in gmemo
-                                else gmemo.setdefault(g, h32(g.encode('utf-8'))),
-                                len(uniq))
-                            for g in grams}
-                    cols_per_doc.append(np.fromiter(cols, dtype=np.intp,
-                                                    count=len(cols)))
-                    if len(uniq) >= flush_uniq:
-                        flush()
-                flush()
-                out = {'doc_id': pdf['doc_id'],
-                       'shingles': pd.Series(sh_out, index=pdf.index, dtype='object'),
-                       'signature': pd.Series(sig_out, index=pdf.index, dtype='object')}
-                for c in carry:
-                    out[c] = pdf[c]
-                yield pd.DataFrame(out)
+            for text in pdf['__text']:
+                toks = token_rgx.findall((text or '').lower())
+                if len(toks) >= k:
+                    grams = {' '.join(toks[i:i + k])
+                             for i in range(len(toks) - k + 1)}
+                else:
+                    grams = {' '.join(toks)}
+                # column set keyed by HASH value: two grams colliding
+                # under the 32-bit hash collapse to one column, so the
+                # emitted shingle arrays stay duplicate-free — matching
+                # the SQL oracle's list_distinct.
+                cols = {uniq.setdefault(
+                            gmemo.get(g) if g in gmemo
+                            else gmemo.setdefault(g, h32(g.encode('utf-8'))),
+                            len(uniq))
+                        for g in grams}
+                cols_per_doc.append(np.fromiter(cols, dtype=np.intp,
+                                                count=len(cols)))
+                if len(uniq) >= flush_uniq:
+                    flush()
+            flush()
+            out = {'doc_id': pdf['doc_id'],
+                   'shingles': pd.Series(sh_out, index=pdf.index, dtype='object'),
+                   'signature': pd.Series(sig_out, index=pdf.index, dtype='object')}
+            for c in carry:
+                out[c] = pdf[c]
+            yield pd.DataFrame(out)
 
-        carry = list(carry_cols)
-        return src.mapInPandas(
-            run,
-            schema='doc_id long, shingles array<long>, signature array<long>'
-                   + carry_ddl)
-
-    sh = word_shingles(F.col(text_col), k=shingle_k)
-    df = df.select(F.col(id_col).alias('doc_id'), sh.alias('shingles'),
-                   *[F.col(c) for c in carry_cols])
-
-    # exchange barrier: without it Catalyst collapses the two projections and
-    # re-inlines the (regex-heavy) shingle expression into each of the
-    # num_perm signature lanes — shingles must be computed once per row
-    df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
-
-    def _perm_fn(a, b):
-        # closure factory: pyspark infers higher-order-arity from the lambda
-        # signature, so params can't ride along as default args
-        return lambda s: (s.bitwiseAND(F.lit(_MASK32)) * F.lit(a) + F.lit(b)) % F.lit(_PRIME31)
-
-    sig = F.array(*[
-        F.array_min(F.transform(F.col('shingles'), _perm_fn(a, b)))
-        for a, b in params
-    ])
-    return df.select('doc_id', 'shingles', sig.alias('signature'), *carry_cols)
+    carry = list(carry_cols)
+    return src.mapInPandas(
+        run,
+        schema='doc_id long, shingles array<long>, signature array<long>'
+               + carry_ddl)
 
 
 def _band_keys(sig_df: DataFrame, bands: int, rows_per_band: int) -> DataFrame:
@@ -1039,96 +1005,78 @@ def keep_canonical(df: DataFrame, pairs: DataFrame, id_col: str = 'doc_id',
     return df.join(removed, id_col, 'left_anti')
 
 
-def simhash(df: DataFrame, text_col: str, id_col: str,
-            engine: str = 'native') -> DataFrame:
+def simhash(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """64-bit SimHash: per token hash, sum ±1 per bit position, sign → bit.
 
-    engine='native': xxhash64 token hashes, pure Catalyst HOF expressions.
-    engine='vectorized': md5-derived 64-bit token hashes (first 16 md5 hex
-    chars) with a single numpy bit-vote kernel per Arrow batch — both faster
-    at scale (one vectorized pass instead of 64 interpreted HOF lanes) and
-    reproducible in any engine with md5(), which the DuckDB differential
-    oracle exploits.  Fingerprints ride as two's-complement int64.
+    Token hashes are md5-derived 64-bit values (first 16 md5 hex chars),
+    voted by a single numpy bit-vote kernel per Arrow batch — one
+    vectorized pass instead of 64 interpreted HOF lanes, and reproducible
+    in any engine with md5(), which the DuckDB differential oracle
+    exploits.  Fingerprints ride as two's-complement int64.
     """
     df = spread_partitions(df)
-    if engine == 'vectorized':
-        src = df.select(F.col(id_col).alias('doc_id'), F.col(text_col).alias('__text'))
+    src = df.select(F.col(id_col).alias('doc_id'), F.col(text_col).alias('__text'))
 
-        memo_cap = _SIMHASH_MEMO_CAP
+    memo_cap = _SIMHASH_MEMO_CAP
 
-        def run(batches):
-            import hashlib
-            import re as _re
+    def run(batches):
+        import hashlib
+        import re as _re
 
-            import numpy as np
-            import pandas as pd
-            token_rgx = _re.compile(r'[^\W_]+', _re.UNICODE)
-            shifts = np.arange(64, dtype=np.uint64)
-            # token → row index into the preallocated vote table; natural
-            # language repeats tokens heavily, so md5 runs once per distinct
-            # token per worker instead of once per occurrence.  The memo is
-            # reset BETWEEN documents once it crosses the cap — never
-            # mid-document: row indices already handed out for the in-flight
-            # doc must stay valid (a mid-doc reset would make them point into
-            # an emptied table → wrong fingerprints at >cap vocabularies).
-            memo: dict[str, int] = {}
-            state = {'table': np.empty((1024, 64), dtype=np.int16), 'n': 0}
+        import numpy as np
+        import pandas as pd
+        token_rgx = _re.compile(r'[^\W_]+', _re.UNICODE)
+        shifts = np.arange(64, dtype=np.uint64)
+        # token → row index into the preallocated vote table; natural
+        # language repeats tokens heavily, so md5 runs once per distinct
+        # token per worker instead of once per occurrence.  The memo is
+        # reset BETWEEN documents once it crosses the cap — never
+        # mid-document: row indices already handed out for the in-flight
+        # doc must stay valid (a mid-doc reset would make them point into
+        # an emptied table → wrong fingerprints at >cap vocabularies).
+        memo: dict[str, int] = {}
+        state = {'table': np.empty((1024, 64), dtype=np.int16), 'n': 0}
 
-            def vote_row(tok):
-                idx = memo.get(tok)
-                if idx is None:
-                    h = np.uint64(int(hashlib.md5(tok.encode('utf-8')).hexdigest()[:16], 16))
-                    table, idx = state['table'], state['n']
-                    if idx == len(table):
-                        table = np.concatenate([table, np.empty_like(table)])
-                        state['table'] = table
-                    table[idx] = (((h >> shifts) & np.uint64(1)).astype(np.int16) * 2 - 1)
-                    memo[tok] = idx
-                    state['n'] = idx + 1
-                return idx
+        def vote_row(tok):
+            idx = memo.get(tok)
+            if idx is None:
+                h = np.uint64(int(hashlib.md5(tok.encode('utf-8')).hexdigest()[:16], 16))
+                table, idx = state['table'], state['n']
+                if idx == len(table):
+                    table = np.concatenate([table, np.empty_like(table)])
+                    state['table'] = table
+                table[idx] = (((h >> shifts) & np.uint64(1)).astype(np.int16) * 2 - 1)
+                memo[tok] = idx
+                state['n'] = idx + 1
+            return idx
 
-            for pdf in batches:
-                out = []
-                for text in pdf['__text']:
-                    if state['n'] >= memo_cap:  # between-documents only
-                        memo.clear()
-                        state['n'] = 0
-                    toks = token_rgx.findall((text or '').lower())
-                    if not toks:
-                        out.append(0)
-                        continue
-                    idxs = np.fromiter((vote_row(t) for t in toks),
-                                       dtype=np.intp, count=len(toks))
-                    # fancy-index the 2-D table: copies len(toks) rows, not
-                    # the whole memo table (a list-of-rows np.asarray here
-                    # would be O(total vocabulary) per document).
-                    votes = state['table'][idxs].sum(axis=0, dtype=np.int64)
-                    bits = (votes > 0).astype(np.uint64)
-                    fp = np.bitwise_or.reduce(bits << shifts)
-                    out.append(int(fp.astype(np.int64)))
-                yield pd.DataFrame({'doc_id': pdf['doc_id'],
-                                    'simhash': pd.Series(out, index=pdf.index, dtype='int64')})
+        for pdf in batches:
+            out = []
+            for text in pdf['__text']:
+                if state['n'] >= memo_cap:  # between-documents only
+                    memo.clear()
+                    state['n'] = 0
+                toks = token_rgx.findall((text or '').lower())
+                if not toks:
+                    out.append(0)
+                    continue
+                idxs = np.fromiter((vote_row(t) for t in toks),
+                                   dtype=np.intp, count=len(toks))
+                # fancy-index the 2-D table: copies len(toks) rows, not
+                # the whole memo table (a list-of-rows np.asarray here
+                # would be O(total vocabulary) per document).
+                votes = state['table'][idxs].sum(axis=0, dtype=np.int64)
+                bits = (votes > 0).astype(np.uint64)
+                fp = np.bitwise_or.reduce(bits << shifts)
+                out.append(int(fp.astype(np.int64)))
+            yield pd.DataFrame({'doc_id': pdf['doc_id'],
+                                'simhash': pd.Series(out, index=pdf.index, dtype='int64')})
 
-        return src.mapInPandas(run, schema='doc_id long, simhash long')
-
-    th = F.transform(tokens(F.col(text_col)), lambda t: F.xxhash64(t))
-
-    def _bit_sum(i):
-        return lambda acc, h: acc + (F.shiftright(h, i).bitwiseAND(F.lit(1)) * 2 - 1)
-
-    bits = [
-        F.when(F.aggregate(th, F.lit(0).cast('long'), _bit_sum(i)) > 0,
-               F.lit(1).cast('long')).otherwise(F.lit(0).cast('long'))
-        for i in range(64)
-    ]
-    fp = bits[0]
-    for i in range(1, 64):
-        fp = fp + F.shiftleft(bits[i], i)
-    return df.select(F.col(id_col).alias('doc_id'), fp.alias('simhash'))
+    return src.mapInPandas(run, schema='doc_id long, simhash long')
 
 
 def simhash_near_dups(df: DataFrame, text_col: str, id_col: str,
-                      max_hamming: int = 3, engine: str = 'native',
+                      max_hamming: int = 3,
                       eager: bool = False) -> DataFrame:
     """Near-dup pairs by SimHash using the 4-block pigeonhole trick: split the
     64-bit fingerprint into max_hamming+1 blocks — any pair within the
@@ -1151,8 +1099,7 @@ def simhash_near_dups(df: DataFrame, text_col: str, id_col: str,
     lineage-truncated result: no cache hygiene left to the caller, at the
     cost of computing the pairs up front."""
     from pyspark import StorageLevel
-    fps = simhash(df, text_col, id_col, engine=engine) \
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    fps = simhash(df, text_col, id_col).persist(StorageLevel.MEMORY_AND_DISK)
     nblocks = max_hamming + 1
     width = 64 // nblocks
     block_arr = F.array(*[

@@ -232,7 +232,7 @@ def _repetition_finalize(stats: DataFrame, id_col: str) -> DataFrame:
 
 def repetition_stats(df: DataFrame, text_col: str = 'text',
                      id_col: str = 'doc_id', top_n: int = 2,
-                     dup_n: int = 3, engine: str = 'vectorized') -> DataFrame:
+                     dup_n: int = 3) -> DataFrame:
     """Gopher-style within-document repetition features (Rae et al.,
     "Scaling Language Models: ... Gopher", public quality-filter recipe):
 
@@ -253,117 +253,60 @@ def repetition_stats(df: DataFrame, text_col: str = 'text',
     (which would shuffle a gram stream ~n× the corpus size to answer a
     per-document question).
 
-    engine='vectorized' (default): one Arrow-batched pass counts the
-    integer stats per document (dict-based gram counting — Catalyst HOF
-    lambdas run interpreted, and the fold variant measured ~3× slower at
-    sf0.1).  engine='native' keeps the whole pipeline in Catalyst
-    expressions (sorted-gram-array run-length folds) — identical results
-    (both engines emit integer stats; the fraction arithmetic is one
-    shared native projection).
+    One Arrow-batched pass counts the integer stats per document
+    (dict-based gram counting — Catalyst HOF lambdas run interpreted, and
+    a sorted-gram-array fold measured ~3× slower at sf0.1); the fraction
+    arithmetic is a native projection over those integers.
     """
     # expansion=8: pure regex/HOF projections do ~8x the CPU
     # per compressed byte of a shuffle-bound op, so the sized
     # spread gets proportionally more tasks (r17 full-bench A/B:
     # width 8 cost quality_score/redact_pii 20-40% vs width ~19)
     df = spread_partitions(df, expansion=8.0)
-    if engine == 'vectorized':
-        tn, dn = int(top_n), int(dup_n)
-        src = df.select(F.col(id_col), F.col(text_col).alias('__text'))
+    tn, dn = int(top_n), int(dup_n)
+    src = df.select(F.col(id_col), F.col(text_col).alias('__text'))
 
-        def run(batches):
-            import re as _re
+    def run(batches):
+        import re as _re
 
-            import pandas as pd
-            token_rgx = _re.compile(r'[^\W_]+', _re.UNICODE)
+        import pandas as pd
+        token_rgx = _re.compile(r'[^\W_]+', _re.UNICODE)
 
-            def gram_stats(toks, n):
-                if len(toks) < n:
-                    return 0, 0, 0
-                counts: dict[str, int] = {}
-                for i in range(len(toks) - n + 1):
-                    g = ' '.join(toks[i:i + n])
-                    counts[g] = counts.get(g, 0) + 1
-                best_cnt = max(counts.values())
-                best_mass = max(c * len(g) for g, c in counts.items()
-                                if c == best_cnt)
-                dup = sum(c * len(g) for g, c in counts.items() if c >= 2)
-                return best_cnt, best_mass, dup
+        def gram_stats(toks, n):
+            if len(toks) < n:
+                return 0, 0, 0
+            counts: dict[str, int] = {}
+            for i in range(len(toks) - n + 1):
+                g = ' '.join(toks[i:i + n])
+                counts[g] = counts.get(g, 0) + 1
+            best_cnt = max(counts.values())
+            best_mass = max(c * len(g) for g, c in counts.items()
+                            if c == best_cnt)
+            dup = sum(c * len(g) for g, c in counts.items() if c >= 2)
+            return best_cnt, best_mass, dup
 
-            for pdf in batches:
-                out = {'__nc': [], '__nw': [], '__nu': [],
-                       '__bc': [], '__bm': [], '__dp': []}
-                for text in pdf['__text']:
-                    t = text or ''
-                    toks = token_rgx.findall(t.lower())
-                    bc, bm, _ = gram_stats(toks, tn)
-                    _, _, dp = gram_stats(toks, dn)
-                    out['__nc'].append(len(t))
-                    out['__nw'].append(len(toks))
-                    out['__nu'].append(len(set(toks)))
-                    out['__bc'].append(bc)
-                    out['__bm'].append(bm)
-                    out['__dp'].append(dp)
-                res = pd.DataFrame({id_col: pdf[id_col]})
-                for k, v in out.items():
-                    res[k] = pd.Series(v, index=pdf.index, dtype='int64')
-                yield res
+        for pdf in batches:
+            out = {'__nc': [], '__nw': [], '__nu': [],
+                   '__bc': [], '__bm': [], '__dp': []}
+            for text in pdf['__text']:
+                t = text or ''
+                toks = token_rgx.findall(t.lower())
+                bc, bm, _ = gram_stats(toks, tn)
+                _, _, dp = gram_stats(toks, dn)
+                out['__nc'].append(len(t))
+                out['__nw'].append(len(toks))
+                out['__nu'].append(len(set(toks)))
+                out['__bc'].append(bc)
+                out['__bm'].append(bm)
+                out['__dp'].append(dp)
+            res = pd.DataFrame({id_col: pdf[id_col]})
+            for k, v in out.items():
+                res[k] = pd.Series(v, index=pdf.index, dtype='int64')
+            yield res
 
-        schema = ('{} long, __nc long, __nw long, __nu long, '
-                  '__bc long, __bm long, __dp long').format(id_col)
-        return _repetition_finalize(src.mapInPandas(run, schema=schema), id_col)
-
-    # native engine: staged projections with multi-referenced aliases —
-    # CollapseProject only inlines single-use/cheap expressions, so the
-    # tokenizer and each fold evaluate ONCE per row (a flat single-select
-    # form re-inlined the token split ~8× and the dominant 2-gram fold
-    # twice)
-    staged = df.select(F.col(id_col),
-                       F.length(F.col(text_col)).cast('long').alias('__nc'),
-                       tokens(F.col(text_col)).alias('__toks'))
-    toks = F.col('__toks')
-    n_words = F.size(toks)
-
-    def grams(n: int) -> Column:
-        idx = F.sequence(F.lit(0), F.greatest(n_words - n, F.lit(0)))
-        return F.when(n_words >= n, F.array_sort(F.transform(
-            idx, lambda i: F.concat_ws(' ', F.slice(toks, i + 1, n))
-        ))).otherwise(F.array().cast('array<string>'))
-
-    # fold over the sorted gram array: run = current gram's running count;
-    # best_* track the max-count (then max char-mass) gram; dup accumulates
-    # count×len chars for grams whose count reaches ≥2 (on the run's 2nd
-    # element add 2×len — the 1st element's share retroactively — then 1×len)
-    zero = F.struct(F.lit('').alias('prev'), F.lit(0).alias('run'),
-                    F.lit(0).alias('best_cnt'), F.lit(0).alias('best_mass'),
-                    F.lit(0).alias('dup'))
-
-    def step(acc: Column, x: Column) -> Column:
-        run = F.when(x == acc['prev'], acc['run'] + 1).otherwise(F.lit(1))
-        mass = run * F.length(x)
-        best_cnt = F.greatest(acc['best_cnt'], run)
-        best_mass = (F.when(run > acc['best_cnt'], mass)
-                      .when(run == acc['best_cnt'],
-                            F.greatest(acc['best_mass'], mass))
-                      .otherwise(acc['best_mass']))
-        dup = (acc['dup']
-               + F.when(run == 2, F.length(x) * 2)
-                  .when(run > 2, F.length(x)).otherwise(F.lit(0)))
-        return F.struct(x.alias('prev'), run.alias('run'),
-                        best_cnt.alias('best_cnt'), best_mass.alias('best_mass'),
-                        dup.alias('dup'))
-
-    folded = staged.select(
-        F.col(id_col), F.col('__nc'),
-        n_words.cast('long').alias('__nw'),
-        F.size(F.array_distinct(toks)).cast('long').alias('__nu'),
-        F.aggregate(grams(top_n), zero, step).alias('__top'),
-        F.aggregate(grams(dup_n), zero, step).alias('__dup'))
-    stats = folded.select(
-        F.col(id_col), '__nc', '__nw', '__nu',
-        F.col('__top')['best_cnt'].cast('long').alias('__bc'),
-        F.col('__top')['best_mass'].cast('long').alias('__bm'),
-        F.col('__dup')['dup'].cast('long').alias('__dp'))
-    return _repetition_finalize(stats, id_col)
+    schema = ('{} long, __nc long, __nw long, __nu long, '
+              '__bc long, __bm long, __dp long').format(id_col)
+    return _repetition_finalize(src.mapInPandas(run, schema=schema), id_col)
 
 
 def quality_filter(df: DataFrame, text_col: str = 'text',

@@ -9,13 +9,13 @@ reimplemented, not copied):
   quoted      RFC quotes within one line; defective-quote warning
               → Arrow-batched Python splitter (mapInPandas)
   quoted_rfc  RFC-4180 incl. multiline quoted fields
-              → driver-side record assembly (legacy-file path; for bulk data
-                use native=True → spark.read.csv(multiLine=True))
+              → driver-side record assembly below 4 MB; larger files take a
+                two-pass, quote-parity-reconciled byte-range scan
 
-Encodings: utf-8 (distributed text scan) and latin-1 (binary-safe,
-driver-side decode — legacy path).  BOM stripped with a warning.  Ragged
-rows supported: rows are padded to table width, true per-row NF rides along
-in __nf_src (engine safe_get parity: missing → None).
+Encodings: utf-8 (distributed text scan) and latin-1 (binary-safe; decoded
+on the driver below 4 MB, in byte-range chunks above).  BOM stripped with a
+warning.  Ragged rows supported: rows are padded to table width, true per-row
+NF rides along in __nf_src (engine safe_get parity: missing → None).
 """
 
 from __future__ import annotations
@@ -124,17 +124,12 @@ def _strip_bom(text: str) -> tuple[str, bool]:
 def read_csv(spark: SparkSession, path: str, delim: str = ',',
              policy: str = 'quoted', encoding: str = 'utf-8',
              with_headers: bool = False, comment_prefix: str | None = None,
-             strip_whitespaces: bool = False, comment_regex: str | None = None,
-             native: bool = False) -> TableHandle:
-    if policy == 'monocolumn' and delim != '':
-        pass  # monocolumn ignores the delimiter
+             strip_whitespaces: bool = False,
+             comment_regex: str | None = None) -> TableHandle:
     if delim == '"' and policy in ('quoted', 'quoted_rfc'):
         raise RbqlIOHandlingError('Double quote delimiter is incompatible with "quoted" policy')
     if encoding not in ('utf-8', 'latin-1'):
         raise RbqlIOHandlingError('Unsupported encoding: ' + encoding)
-
-    if native:
-        return _read_csv_native(spark, path, delim, policy, with_headers, encoding, comment_prefix)
 
     # every option that changes which rows the width probe sees
     width_key = (path, delim, policy, encoding, with_headers, comment_prefix,
@@ -817,28 +812,6 @@ def _read_csv_driver_side(spark, path, delim, policy, encoding, with_headers,
     df = spark.createDataFrame(padded, schema=schema) if padded else \
         spark.createDataFrame([], schema=schema)
     return TableHandle(df=df, header=header, warnings=warnings)
-
-
-def _read_csv_native(spark, path, delim, policy, with_headers, encoding,
-                     comment_prefix) -> TableHandle:
-    """Bulk-scale path: Spark's own CSV reader (multiLine for RFC records).
-    No ragged-row NF tracking — fixed schema, nulls for missing fields."""
-    reader = (spark.read
-              .option('sep', delim)
-              .option('header', 'true' if with_headers else 'false')
-              .option('quote', '"')
-              .option('escape', '"')
-              .option('encoding', encoding)
-              .option('mode', 'PERMISSIVE'))
-    if policy == 'quoted_rfc':
-        reader = reader.option('multiLine', 'true')
-    if comment_prefix and len(comment_prefix) == 1:
-        reader = reader.option('comment', comment_prefix)
-    df = reader.csv(path)
-    header = list(df.columns) if with_headers else None
-    if not with_headers:
-        df = df.toDF(*['_c{}'.format(i) for i in range(len(df.columns))])
-    return TableHandle(df=df, header=header)
 
 
 # ---------------------------------------------------------------------------

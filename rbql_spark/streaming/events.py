@@ -69,15 +69,6 @@ def _drain_timeout(timeout_sec: int | None) -> int:
     return int(os.environ.get('RBQL_STREAM_DRAIN_TIMEOUT', '600'))
 
 
-# Diagnostic hook: when set to a callable (query_name, StreamingQuery),
-# the drain helpers invoke it after the drain completes but BEFORE the
-# query is stopped/returned — the only window where the micro-batch
-# physical plan (query.explain) and progress metrics are readable.
-# Used by tools/r17_stream_plans.py to commit real streaming plan
-# evidence (r16 verdict #8); no-op in production.
-DRAIN_INSPECT_HOOK = None
-
-
 @__import__('contextlib').contextmanager
 def _scoped_no_data_batches(spark, enabled: bool):
     """Scope ``spark.sql.streaming.noDataMicroBatches.enabled`` around a
@@ -165,11 +156,6 @@ def run_stream_to_parquet(stream_df: DataFrame, query_name: str,
         raise RuntimeError(
             'stream {} did not drain within {}s'.format(query_name,
                                                         timeout_sec))
-    if DRAIN_INSPECT_HOOK is not None:
-        try:
-            DRAIN_INSPECT_HOOK(query_name, q)
-        except Exception:
-            pass
     q.stop()
     # explicit schema: an all-filtered (empty) drain leaves no data files
     return stream_df.sparkSession.read.schema(stream_df.schema).parquet(out)
@@ -225,11 +211,6 @@ def run_stream_to_memory(stream_df: DataFrame, query_name: str,
         raise RuntimeError(
             'stream {} did not drain within {}s'.format(query_name,
                                                         timeout_sec))
-    if DRAIN_INSPECT_HOOK is not None:
-        try:
-            DRAIN_INSPECT_HOOK(query_name, q)
-        except Exception:
-            pass
     return q
 
 
@@ -252,7 +233,6 @@ def stream_exact_dedup(events: DataFrame,
 
 # ---- custom stateful operator --------------------------------------------
 
-_STATE_SCHEMA = 'user_id long, n_events long, total_value double'
 _OUT_SCHEMA = 'user_id long, n_events long, total_value double'
 
 

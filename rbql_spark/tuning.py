@@ -1,4 +1,4 @@
-"""Input-size-based shuffle-partition advisor (r14 verdict #6).
+"""Input-size-based partition widths (r14 verdict #6).
 
 The round-14 decade audit (BENCH_sf10_partitions.json) proved the rule:
 holding the shuffle-partition count constant across a 10× data decade
@@ -7,23 +7,27 @@ outgrow execution memory and spill; raising the count at the same data
 restored sub-linear scaling.  **Per-task bytes, not partition count, is
 the invariant to hold across scale-ups** (SCALING.md).
 
-The engine encodes that rule in two mechanisms:
+Batch decisions size the input with :func:`leaf_bytes` (the analyzed
+plan's leaf-relation bytes); streaming drains pass the replay
+directory's :func:`dir_bytes`.  The engine applies the rule in three
+places:
 
 * **Batch** (aggregations, joins): sessions built by
   :func:`rbql_spark.session.build_session` set AQE's
   ``coalescePartitions.initialPartitionNum`` HIGH and
-  ``advisoryPartitionSizeInBytes`` to the per-task byte target — every
-  shuffle starts wide and AQE coalesces down to the advisory size, so
-  the effective partition count scales with the actual shuffled bytes
-  with no per-operator code.  (This is Spark's native form of the
-  rule; the old fixed ``spark.sql.shuffle.partitions`` becomes the
-  non-AQE fallback only.)
+  ``advisoryPartitionSizeInBytes`` to the per-task byte target, and
+  every query builder calls :func:`apply_plan_width`, which plans a
+  sub-advisory input at the session base width instead.
 * **Streaming** (stateful drains — AQE does not re-plan streaming
   shuffles, and the state-store partition count is pinned by
   ``spark.sql.shuffle.partitions`` at the query's FIRST start): the
   drain helpers (:mod:`rbql_spark.streaming.events`) scope the session
   conf to :func:`advise_shuffle_partitions` of the source's input
   bytes for the duration of the ``start()``.
+* **Scans**: :func:`scan_partition_estimate` predicts a narrow scan's
+  partition count from its bytes (for ``ops.dedup.spread_partitions``),
+  and :func:`one_partition` gathers a driver-bound result into one
+  partition without a needless exchange.
 """
 
 from __future__ import annotations
@@ -54,29 +58,11 @@ def dir_bytes(path: str) -> int | None:
         return None
 
 
-def estimated_input_bytes(df) -> int | None:
-    """Catalyst's size estimate for a BATCH DataFrame's optimized plan
-    (parquet: sum of file sizes after partition pruning — the same
-    footer-level statistics the planner uses).  None when unavailable
-    or when the estimate is the unknown-sentinel (defaultSizeInBytes,
-    astronomically large)."""
-    try:
-        size = int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-    except Exception:
-        return None
-    if size <= 0 or size >= (1 << 50):   # 1 PiB+ → unknown sentinel
-        return None
-    return size
-
-
 # Parallelism floor for size-derived STREAMING widths (allow_below):
 # below it the per-batch Arrow/state work serializes — the r16 A/B
 # measured 2 partitions nearly doubling the user-totals drain while 8
-# kept every stateful gate at or under its 32-partition time.  Override
-# for deployments whose steady-state stream needs a wider state store
-# (state-store partition count is pinned at the query's first start).
-STREAM_MIN_PARTITIONS = int(os.environ.get('RBQL_STREAM_MIN_PARTITIONS', '8'))
+# kept every stateful gate at or under its 32-partition time.
+STREAM_MIN_PARTITIONS = 8
 
 
 def advise_shuffle_partitions(spark, input_bytes: int | None,
@@ -113,27 +99,6 @@ def advise_shuffle_partitions(spark, input_bytes: int | None,
     return max(cur, min(cap, want))
 
 
-def input_scan_bytes(df) -> int | None:
-    """Sum of Catalyst size estimates over the optimized plan's LEAF
-    relations (parquet scans: file bytes after partition pruning;
-    cached frames: materialized size).  Unlike the root's
-    ``stats().sizeInBytes`` — which estimates the plan's OUTPUT and is
-    tiny for aggregations — this measures what the job will READ, the
-    quantity shuffle width should scale with.  None when any leaf's
-    estimate is the unknown sentinel."""
-    try:
-        leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
-        total = 0
-        for i in range(leaves.size()):
-            size = int(leaves.apply(i).stats().sizeInBytes())
-            if size >= (1 << 50):   # defaultSizeInBytes unknown sentinel
-                return None
-            total += max(size, 0)
-        return total
-    except Exception:
-        return None
-
-
 # Session-conf stash of the DESIGNED wide AQE initial width (set by
 # build_session; apply_plan_width falls back to the live conf value the
 # first time it runs on a foreign session).  Without the stash, applying
@@ -147,13 +112,12 @@ _INITIAL_KEY = 'spark.sql.adaptive.coalescePartitions.initialPartitionNum'
 def apply_plan_width(df, expansion: float = 4.0,
                      bytes_per_partition: int | None = None):
     """Decide the AQE ``initialPartitionNum`` for ``df``'s upcoming
-    execution AT BUILD TIME and set it on the session — the engine-layer
-    home of the r15/r16 ``scoped_initial_width`` policy (r16 verdict #1:
+    execution AT BUILD TIME and set it on the session (r16 verdict #1:
     an optimization that only ran where the bench's stopwatch was is
-    indistinguishable from bench tuning, so the bench now does a plain
+    indistinguishable from bench tuning, so the bench does a plain
     noop write and every query builder applies this instead).
 
-    Decision (identical to the r16 scoped version, A/B'd in NOTES_r15):
+    Decision (A/B'd in NOTES_r15):
     BINARY — when ``expansion × input scan bytes`` fits within ``base
     partitions × per-task target`` (even the base width over-partitions
     this shuffle), plan at the session base; otherwise keep the session's
@@ -207,7 +171,7 @@ def apply_plan_width(df, expansion: float = 4.0,
     except Exception:
         spark.conf.set(_INITIAL_KEY, str(wide))
         return df
-    nbytes = _plan_leaf_bytes(analyzed)
+    nbytes = leaf_bytes(df)
     try:
         # keyed repartitions (RepartitionByExpression) pin Arrow-stage
         # layouts the r15 A/B showed prefer the wide width; round-robin
@@ -227,16 +191,21 @@ def apply_plan_width(df, expansion: float = 4.0,
     return df
 
 
-def _plan_leaf_bytes(jplan) -> int | None:
-    """Sum of leaf-relation size estimates of a (java) logical plan —
-    the analyzed-plan twin of :func:`input_scan_bytes`.  None when any
-    leaf reports the unknown sentinel."""
+def leaf_bytes(df) -> int | None:
+    """Sum of Catalyst size estimates over the LEAF relations of
+    ``df``'s analyzed plan (file scans: file bytes; cached frames:
+    materialized size).  Unlike the root's ``stats().sizeInBytes`` —
+    which estimates the plan's OUTPUT and is tiny for aggregations —
+    this measures what the job will READ, the quantity shuffle width
+    should scale with.  The analyzed plan is already built when the
+    DataFrame is, so this costs no optimizer pass.  None when any
+    leaf's estimate is the unknown sentinel."""
     try:
-        leaves = jplan.collectLeaves()
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
         total = 0
         for i in range(leaves.size()):
             size = int(leaves.apply(i).stats().sizeInBytes())
-            if size >= (1 << 50):
+            if size >= (1 << 50):   # defaultSizeInBytes unknown sentinel
                 return None
             total += max(size, 0)
         return total
@@ -288,7 +257,7 @@ def scan_partition_estimate(df) -> tuple[int | None, int | None]:
             ch = node.children()
             for i in range(ch.size()):
                 stack.append(ch.apply(i))
-        nbytes = _plan_leaf_bytes(analyzed)
+        nbytes = leaf_bytes(df)
         if nbytes is None:
             return None, None
         mpb = _parse_size(df.sparkSession.conf.get(
@@ -350,56 +319,6 @@ def one_partition(df):
         if children.size() > 1 or name not in _ROW_LOCAL_NODES | {'Aggregate'}:
             return df.repartition(1)
         node = children.apply(0)
-
-
-@contextlib.contextmanager
-def scoped_initial_width(spark, df, expansion: float = 4.0):
-    """Batch counterpart of the streaming drain scoping (r15 verdict
-    #7): the session's high AQE ``initialPartitionNum`` is the decade
-    rule's mechanism for LARGE shuffles, but on sub-advisory inputs it
-    buys nothing (AQE coalesces straight back down) while costing real
-    map-side overhead — every map task opens initial-width shuffle-file
-    blocks, ~0.5-1 s on second-scale window queries (NOTES_r15 A/B).
-
-    The decision is deliberately BINARY: when ``expansion × input
-    bytes`` fits within ``base count × advisory`` — i.e. even the base
-    width already over-partitions this shuffle — plan at the session
-    base; otherwise keep the configured wide initial untouched.  No
-    intermediate widths: the r15 A/B measured the mid-range (4×base)
-    as pathological for repartition-pinned frames while both extremes
-    were fine, and the sf10 decade wins (bpe_vocab 90 s) were measured
-    at the full configured width.  Unknown sizes keep the configured
-    width — the safe direction at scale.
-
-    Plans carrying an explicit ``repartition(expr)`` also keep the
-    configured width: those frames pin at the uncoalesced count and
-    feed per-partition Arrow workers, where the r15 A/B measured wide >
-    narrow even on small inputs (NOTES_r15: the broadcast-model scoring
-    family slowed at every narrower width tried)."""
-    key = 'spark.sql.adaptive.coalescePartitions.initialPartitionNum'
-    nbytes = input_scan_bytes(df)
-    try:
-        if 'Repartition' in str(df._jdf.queryExecution().optimizedPlan()):
-            nbytes = None
-    except Exception:
-        nbytes = None
-    try:
-        cur = int(spark.conf.get(key))
-        base = int(spark.conf.get('spark.sql.shuffle.partitions'))
-    except Exception:
-        nbytes = None
-    if nbytes is None:
-        yield
-        return
-    want = math.ceil(nbytes * max(expansion, 1.0) / BYTES_PER_PARTITION)
-    if want > base or base >= cur:
-        yield
-        return
-    spark.conf.set(key, str(base))
-    try:
-        yield
-    finally:
-        spark.conf.set(key, str(cur))
 
 
 @contextlib.contextmanager

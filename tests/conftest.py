@@ -30,3 +30,22 @@ def spark():
 @pytest.fixture(scope='session')
 def sf_dir():
     return os.path.join(TESTDATA, 'sf0.001')
+
+
+def _reference_absent(report) -> bool:
+    """A skip caused by a missing reference checkout, corpus or package."""
+    longrepr = report.longrepr
+    reason = longrepr[2] if isinstance(longrepr, tuple) else str(longrepr)
+    return 'not available' in reason and ('reference' in reason
+                                          or 'rbql' in reason)
+
+
+def pytest_terminal_summary(terminalreporter):
+    # A green run without the reference is not a conformance result: say
+    # how much of the reference-parity suite did not run.
+    n = sum(1 for r in terminalreporter.stats.get('skipped', [])
+            if _reference_absent(r))
+    if n:
+        terminalreporter.write_sep(
+            '=', '{} skipped: reference checkout or rbql package absent; '
+                 'reference conformance NOT checked'.format(n), yellow=True)

@@ -218,24 +218,3 @@ def test_features_in_row_edge_docs(spark):
         rs = [r for r in rows if r['doc_id'] == did]
         assert sum(r['x'] for r in rs if r['bucket'] != 16) == 1.0
         assert [r['x'] for r in rs if r['bucket'] == 16] == [1.0]
-
-
-def test_classifier_train_impls_agree(spark, labeled):
-    """The arrow gradient kernel (r17) must reproduce the native all-JVM
-    rounds weight-for-weight: several GD rounds at a real lr keep every
-    per-round round-6 update on the same grid point, including docs whose
-    rows straddle Arrow batch boundaries (forced tiny batch size)."""
-    from rbql_spark.ops.classifier import classifier_train
-    old = spark.conf.get('spark.sql.execution.arrow.maxRecordsPerBatch',
-                         None)
-    spark.conf.set('spark.sql.execution.arrow.maxRecordsPerBatch', '7')
-    try:
-        wa = classifier_train(labeled, dim=128, n_iter=3, lr=2.0,
-                              iter_impl='arrow')
-        wn = classifier_train(labeled, dim=128, n_iter=3, lr=2.0,
-                              iter_impl='native')
-    finally:
-        if old is not None:
-            spark.conf.set('spark.sql.execution.arrow.maxRecordsPerBatch',
-                           old)
-    assert wa == wn

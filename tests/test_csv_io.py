@@ -204,7 +204,7 @@ def test_quoted_rfc_distributed_scan_matches_driver(spark, tmp_path, monkeypatch
     p = str(tmp_path / 'big_rfc.csv')
     with open(p, 'w', encoding='utf-8') as f:
         f.write('id,text,num\n')
-        for i in range(90000):
+        for i in range(3000):
             if i % 499 == 0:
                 f.write('#skipme\n')
             if i % 7 == 0:
@@ -219,6 +219,13 @@ def test_quoted_rfc_distributed_scan_matches_driver(spark, tmp_path, monkeypatch
     drv = _handle_rows(C.read_csv(spark, p, delim=',', policy='quoted_rfc',
                                   with_headers=True, comment_prefix='#'))
     monkeypatch.setattr(C, '_DISTRIBUTED_SCAN_MIN_BYTES', 1)
+
+    # 8 KB byte ranges instead of the 1 MB production floor, so the ~78 KB
+    # file spans ten chunks and multi-line records straddle their cuts
+    def small_chunks(size, parallelism):
+        cuts = list(range(0, size, 8 << 10)) + [size]
+        return list(zip(cuts, cuts[1:]))
+    monkeypatch.setattr(C, '_chunk_bounds', small_chunks)
     import os as _os
     assert len(C._chunk_bounds(_os.path.getsize(p),
                                spark.sparkContext.defaultParallelism)) > 1

@@ -47,14 +47,6 @@ def test_minhash_finds_near_dups(spark, doc_df):
         assert bad not in pairs
 
 
-def test_minhash_native_engine_agrees(spark, doc_df):
-    from rbql_spark.ops.dedup import jaccard_verify, lsh_candidate_pairs, minhash_signatures
-    sig = minhash_signatures(doc_df, 'text', 'doc_id', engine='native')
-    pairs = {(r['doc_a'], r['doc_b']) for r in
-             jaccard_verify(lsh_candidate_pairs(sig), sig, 0.5).collect()}
-    assert (1, 2) in pairs
-
-
 def test_simhash_near_dups(spark, doc_df):
     from rbql_spark.ops.dedup import simhash_near_dups
     pairs = {(r['doc_a'], r['doc_b']) for r in
@@ -69,10 +61,10 @@ def test_simhash_memo_eviction_preserves_fingerprints(spark, doc_df, monkeypatch
     # distinct tokens), fingerprints must equal the uncapped run bit-for-bit.
     from rbql_spark.ops import dedup
     baseline = {r['doc_id']: r['simhash'] for r in
-                dedup.simhash(doc_df, 'text', 'doc_id', engine='vectorized').collect()}
+                dedup.simhash(doc_df, 'text', 'doc_id').collect()}
     monkeypatch.setattr(dedup, '_SIMHASH_MEMO_CAP', 8)
     capped = {r['doc_id']: r['simhash'] for r in
-              dedup.simhash(doc_df, 'text', 'doc_id', engine='vectorized').collect()}
+              dedup.simhash(doc_df, 'text', 'doc_id').collect()}
     assert capped == baseline
     assert len(baseline) == 5 and baseline[1] == baseline[2]
 
@@ -859,8 +851,7 @@ def test_dedup_lines_hash_engines_agree(spark):
 
 def test_keep_canonical_survivors(spark, doc_df):
     from rbql_spark.ops.dedup import keep_canonical, simhash_near_dups
-    pairs = simhash_near_dups(doc_df, 'text', 'doc_id', max_hamming=7,
-                              engine='vectorized')
+    pairs = simhash_near_dups(doc_df, 'text', 'doc_id', max_hamming=7)
     kept = sorted(r['doc_id'] for r in keep_canonical(doc_df, pairs).collect())
     # docs 1/2/3 cluster (exact + near dup) -> min id 1 survives; 4/5 untouched
     assert kept == [1, 4, 5]
@@ -1089,22 +1080,22 @@ def test_bpe_vocab_and_encode_ids(spark):
     assert out2[1]['n_unk'] == 0
 
 
-def test_apply_bpe_impls_identical(spark, sf_dir):
-    # r16: the Arrow memoized merge-fold kernel must match the Catalyst
-    # fold cell-for-cell (incl. null text, empty text, unicode words)
+def test_apply_bpe_edge_rows(spark):
+    # the Arrow merge-fold kernel on rows the oracle corpus lacks: null
+    # text, empty text, non-ASCII letters (é is one symbol and never
+    # matches 'e'), overlapping 'aaa' (left-to-right, non-overlapping) and
+    # chained merges (t+h, then th+e)
     from rbql_spark.ops.bpe import apply_bpe
-    docs = spark.read.parquet(
-        os.path.join(sf_dir, 'documents.parquet')) \
-        .select('doc_id', 'text').limit(200).union(
-        spark.createDataFrame(
-            [(90001, None), (90002, ''), (90003, 'héllo thé aaa  !!'),
-             (90004, 'the that than')],
-            'doc_id long, text string'))
+    docs = spark.createDataFrame(
+        [(1, None), (2, ''), (3, 'héllo thé aaa  !!'), (4, 'the that than')],
+        'doc_id long, text string')
     merges = [('t', 'h'), ('th', 'e'), ('a', 'n'), ('a', 'a')]
-    sel = lambda d: sorted(  # noqa: E731
-        (r['doc_id'], tuple(r['bpe_tokens'] or ()), r['n_bpe_tokens'])
-        for r in apply_bpe(docs, merges, impl=d).collect())
-    assert sel('arrow') == sel('native')
+    got = {r['doc_id']: (r['bpe_tokens'], r['n_bpe_tokens'])
+           for r in apply_bpe(docs, merges).collect()}
+    assert got[1][0] is None
+    assert got[2] == ([], 0)
+    assert got[3] == (['h', 'é', 'l', 'l', 'o', 'th', 'é', 'aa', 'a'], 9)
+    assert got[4] == (['the', 'th', 'a', 't', 'th', 'an'], 6)
 
 
 def test_encode_bpe_ids_dict_matches_join(spark):
@@ -1135,16 +1126,6 @@ def test_bpe_roundtrip_compresses(spark, sf_dir):
         'text', r'[^\p{L}\p{N}]', ''))).alias('n')).first()['n']
     toks = enc.select(F.sum('n_bpe_tokens').alias('n')).first()['n']
     assert 0 < toks < chars  # merges compress the symbol stream
-
-
-def test_repetition_engines_agree(spark, sf_dir):
-    from rbql_spark.ops.textstats import repetition_stats
-    docs = spark.read.parquet(os.path.join(sf_dir, 'documents.parquet'))
-    a = sorted(tuple(r) for r in
-               repetition_stats(docs, engine='native').collect())
-    b = sorted(tuple(r) for r in
-               repetition_stats(docs, engine='vectorized').collect())
-    assert a == b and len(a) > 0
 
 
 def test_quality_filter_rules_and_reasons(spark):
@@ -2283,3 +2264,28 @@ def test_embed_hashing_inline_matches_distributed(spark):
         for k in dist:
             assert [repr(x) for x in dist[k]] == [repr(x) for x in inl[k]], \
                 (dim, k, dist[k], inl[k])
+
+
+def test_removed_options_raise_type_error():
+    # each operator has one implementation; the old selector keywords are
+    # gone rather than silently ignored
+    from rbql_spark.ops.bpe import apply_bpe
+    from rbql_spark.ops.classifier import classifier_train
+    from rbql_spark.ops.dedup import (minhash_signatures, simhash,
+                                      simhash_near_dups)
+    from rbql_spark.ops.textstats import repetition_stats
+    from rbql_spark.sources.csv import read_csv
+    calls = [
+        lambda: classifier_train(None, iter_impl='native'),
+        lambda: apply_bpe(None, [], impl='arrow'),
+        lambda: minhash_signatures(None, 'text', 'doc_id',
+                                   engine='vectorized'),
+        lambda: simhash(None, 'text', 'doc_id', engine='vectorized'),
+        lambda: simhash_near_dups(None, 'text', 'doc_id',
+                                  engine='vectorized'),
+        lambda: repetition_stats(None, engine='vectorized'),
+        lambda: read_csv(None, 'x.csv', native=True),
+    ]
+    for call in calls:
+        with pytest.raises(TypeError, match='unexpected keyword'):
+            call()

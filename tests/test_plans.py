@@ -246,25 +246,9 @@ def test_multimodal_frames_no_shuffle(spark, sf_dir, entry):
     assert 'Exchange' not in plan.split('MapInPandas')[-1]
 
 
-def test_repetition_stats_native_single_scan_no_shuffle_single_eval(spark, sf_dir):
-    # the native engine is a pure per-doc projection: one corpus scan, no
-    # shuffle beyond the small-file spread repartition, no Python stage —
-    # and the staged projections must keep the tokenizer and each gram fold
-    # evaluated ONCE (CollapseProject would otherwise re-inline the token
-    # split ~8x and the dominant 2-gram fold twice)
-    from rbql_spark.ops.textstats import repetition_stats
-    docs = spark.read.parquet(os.path.join(sf_dir, 'documents.parquet'))
-    df = repetition_stats(docs, engine='native')
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count('FileScan') == 1, plan
-    assert 'BatchEvalPython' not in plan and 'MapInPandas' not in plan
-    assert plan.count('split(lower') == 1, plan.count('split(lower')
-    assert plan.count('aggregate(') == 2  # one fold per gram size
-
-
 def test_repetition_stats_vectorized_no_post_shuffle(spark, sf_dir, entry):
-    # the default Arrow engine counts inside the scan tasks; the shared
-    # finalize is a projection — nothing shuffles after the Python stage
+    # the Arrow pass counts inside the scan tasks; the finalize is a
+    # projection — nothing shuffles after the Python stage
     df = entry.queries()['text_repetition'](spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert 'MapInPandas' in plan            # the (intentional) Python stage

@@ -2,8 +2,8 @@
 import os
 
 from rbql_spark.tuning import (
-    BYTES_PER_PARTITION, advise_shuffle_partitions, dir_bytes,
-    estimated_input_bytes, scoped_shuffle_partitions,
+    BYTES_PER_PARTITION, advise_shuffle_partitions, dir_bytes, leaf_bytes,
+    scoped_shuffle_partitions,
 )
 
 
@@ -51,15 +51,21 @@ def test_scoped_shuffle_partitions_restores(spark):
     assert spark.conf.get(key) == prev
 
 
-def test_estimated_input_bytes_parquet(spark, tmp_path):
+def test_leaf_bytes_parquet(spark, tmp_path):
+    from pyspark.sql import functions as F
     p = str(tmp_path / 'sz.parquet')
     spark.range(10_000).write.parquet(p)
     df = spark.read.parquet(p)
-    est = estimated_input_bytes(df)
+    est = leaf_bytes(df)
     disk = dir_bytes(p)
     assert est is not None and est > 0
     # Catalyst's estimate is the file-size sum (footer stats)
     assert 0.5 * disk <= est <= 2 * disk
+    # what the job reads, not what it outputs: an aggregate over the scan
+    # keeps the scan's bytes, and a self-join reads them twice
+    assert leaf_bytes(df.groupBy().agg(F.sum('id'))) == est
+    assert leaf_bytes(df.join(df.withColumnRenamed('id', 'j'),
+                              F.col('id') == F.col('j'))) == 2 * est
 
 
 def test_dir_bytes_counts_files(tmp_path):

@@ -6,9 +6,9 @@ module object inside the live package, then alternates old/new per rep
 by patching the named functions (which gates import at call time).
 
 Usage:
-  python tools/ab_swap2.py <relpath> <fn,fn,...> <reps> gate [gate ...]
+  python tools/ab.py <relpath> <fn,fn,...> <reps> gate [gate ...]
 e.g.
-  python tools/ab_swap2.py rbql_spark/ops/textstats.py bm25_score_queries \
+  python tools/ab.py rbql_spark/ops/textstats.py bm25_score_queries \
       4 text_bm25_batch dedup_exact
 """
 import importlib
@@ -41,7 +41,7 @@ def main():
     relpath, fns, reps = sys.argv[1], sys.argv[2].split(','), int(sys.argv[3])
     gates = sys.argv[4:]
     from rbql_spark.session import build_session
-    spark = build_session(app_name='ab-swap2', master='local[32]',
+    spark = build_session(app_name='ab', master='local[32]',
                           shuffle_partitions=32, driver_memory='16g')
     spark.sparkContext.setLogLevel('ERROR')
     try:
