@@ -19,6 +19,22 @@ def _ensure_handle(table, header=None) -> TableHandle:
     raise RbqlParsingError('Unsupported input table type: {}'.format(type(table).__name__))
 
 
+def _engine_options(options: EngineOptions | None, dialect: str | None,
+                    user_init_code: str) -> EngineOptions:
+    """Fold the entry points' dialect / user-init arguments into the
+    engine options (a JS init file carries the JS marker)."""
+    opts = options or EngineOptions()
+    if dialect is not None:
+        opts.dialect = dialect
+    if user_init_code:
+        opts.user_init_code = user_init_code
+    if opts.dialect == 'js' and opts.user_init_code:
+        from .jsdialect.jsinit import JS_INIT_MARKER
+        if not opts.user_init_code.startswith(JS_INIT_MARKER):
+            opts.user_init_code = JS_INIT_MARKER + opts.user_init_code
+    return opts
+
+
 def query_dataframe(spark: SparkSession, query: str, df: DataFrame | TableHandle,
                     join_table: DataFrame | TableHandle | None = None,
                     registry: TableRegistry | None = None,
@@ -41,15 +57,7 @@ def query_dataframe(spark: SparkSession, query: str, df: DataFrame | TableHandle
     # no registry at all → JOIN reports 'JOIN operations are not supported by
     # the application' (reference parity: rbql_engine.py:1497-1499)
     reg = ChainRegistry(*regs) if regs else None
-    opts = options or EngineOptions()
-    if dialect is not None:
-        opts.dialect = dialect
-    if user_init_code:
-        opts.user_init_code = user_init_code
-    if opts.dialect == 'js' and opts.user_init_code:
-        from .jsdialect.jsinit import JS_INIT_MARKER
-        if not opts.user_init_code.startswith(JS_INIT_MARKER):
-            opts.user_init_code = JS_INIT_MARKER + opts.user_init_code
+    opts = _engine_options(options, dialect, user_init_code)
     return run_query(spark, query, input_handle=handle, registry=reg, options=opts)
 
 
@@ -205,10 +213,6 @@ def _collect(df, nr_resolver=None):
                  for f in df.schema.fields)
     try:
         if simple:
-            try:
-                df.sparkSession.conf.set('spark.sql.execution.arrow.pyspark.enabled', 'true')
-            except Exception:
-                pass
             # Arrow table → per-column pylists: a nullable int64 column
             # yields exact Python ints + None — the old toPandas() detour
             # degraded it to float64 (2 became 2.0, judge r15 #3) and
@@ -228,9 +232,6 @@ def _collect(df, nr_resolver=None):
         if mapped is not None:
             raise mapped from None
         raise
-
-
-_collect_df = _collect
 
 
 def _rows_to_handle(spark: SparkSession, rows: list[list],
@@ -330,15 +331,7 @@ def query_csv(spark: SparkSession, query: str, input_path: str,
                 'strip_whitespaces': strip_whitespaces}
     reg = PathRegistry(main_table_dir=os.path.dirname(os.path.abspath(input_path)),
                        csv_options=csv_opts, extra_dirs=extra_search_dirs)
-    opts = options or EngineOptions()
-    if dialect is not None:
-        opts.dialect = dialect
-    if user_init_code:
-        opts.user_init_code = user_init_code
-    if opts.dialect == 'js' and opts.user_init_code:
-        from .jsdialect.jsinit import JS_INIT_MARKER
-        if not opts.user_init_code.startswith(JS_INIT_MARKER):
-            opts.user_init_code = JS_INIT_MARKER + opts.user_init_code
+    opts = _engine_options(options, dialect, user_init_code)
     result = run_query(spark, query, input_handle=handle, registry=reg, options=opts)
     if output_path is not None:
         write_csv(result, output_path,

@@ -140,36 +140,44 @@ ORDER_SRC_COL = '__src_order'  # optional source-order key captured BEFORE any
                                # lines; input order must survive it)
 
 
-def make_workframe(handle: TableHandle) -> WorkFrame:
-    """Rename user columns to the internal layout and attach __nf.
+def bind_side(handle: TableHandle, prefix: str) -> tuple[DataFrame, SideInfo]:
+    """Rename a table's user columns to side ``prefix``'s internal layout
+    (one positional ``toDF``), attach its NF column and describe it.
 
-    NR is attached separately (engine decides *when*: attaching the
-    nondeterministic order surrogate before a filter would block predicate
-    pushdown to the scan, so the engine filters first whenever the query
-    doesn't reference NR).
+    A source's order key (ORDER_SRC_COL) keeps its name and is no field:
+    attach_nr consumes it as the side's record order.  NR is attached
+    separately (the engine decides *when*: attaching the nondeterministic
+    order surrogate before a filter would block predicate pushdown to the
+    scan, so the engine filters first whenever the query doesn't
+    reference NR).
     """
-    df = handle.df
-    names = [n for n in df.columns if n not in (NF_SRC_COL, ORDER_SRC_COL)]
-    has_nf_src = NF_SRC_COL in df.columns
-    width = len(names)
-    type_by_name = {f.name: f.dataType for f in df.schema.fields}
-    types = [type_by_name[n] for n in names]
-    sel = [F.col('`{}`'.format(n.replace('`', '``'))).alias(internal_col('a', i)) for i, n in enumerate(names)]
-    if has_nf_src:
-        sel.append(F.col(NF_SRC_COL).cast('int').alias(NF_COL))
-    if ORDER_SRC_COL in df.columns:
-        sel.append(F.col(ORDER_SRC_COL))
-    df = df.select(sel)
-    if not has_nf_src:
-        df = df.withColumn(NF_COL, F.lit(width).cast('int'))
-    header = list(handle.header) if handle.header is not None else None
-    side = SideInfo(prefix='a', header=header, mode='fixed', width=width, types=types,
-                    json_cols=handle.json_cols, ragged=has_nf_src,
+    nf_col = NF_COL if prefix == 'a' else BNF_COL
+    names, types, out_names = [], [], []
+    nf_type = None
+    for f in handle.df.schema.fields:
+        if f.name == NF_SRC_COL:
+            out_names.append(nf_col)
+            nf_type = f.dataType
+        elif f.name == ORDER_SRC_COL:
+            out_names.append(ORDER_SRC_COL)
+        else:
+            out_names.append(internal_col(prefix, len(names)))
+            names.append(f.name)
+            types.append(f.dataType)
+    df = handle.df.toDF(*out_names)
+    if nf_type is None:
+        df = df.withColumn(nf_col, F.lit(len(names)).cast('int'))
+    elif not isinstance(nf_type, T.IntegerType):
+        df = df.withColumn(nf_col, F.col(nf_col).cast('int'))
+    side = SideInfo(prefix=prefix,
+                    header=list(handle.header) if handle.header is not None else None,
+                    width=len(names), types=types, json_cols=handle.json_cols,
+                    ragged=nf_type is not None,
                     null_free=frozenset(i for i, n in enumerate(names)
                                         if n in handle.null_free),
                     row_count=handle.row_count,
                     order_src_monotone=handle.order_src_monotone)
-    return WorkFrame(df=df, a=side)
+    return df, side
 
 
 @dataclass

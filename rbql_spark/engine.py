@@ -32,8 +32,8 @@ from .aggregates import (NUMERIC_AGGS, AggCall, detect_aggregate,
                          null_arg_guard, null_group_guards,
                          numeric_coerce, spark_agg_expr)
 from .binding import (
-    BNF_COL, BNR_COL, NF_COL, NR_COL, ORDER_SRC_COL, Binding, SideInfo,
-    TableHandle, VarRef, WorkFrame, internal_col, make_workframe, type_tag,
+    BNF_COL, BNR_COL, NF_COL, NR_COL, ORDER_SRC_COL, Binding, TableHandle,
+    VarRef, WorkFrame, bind_side, internal_col, type_tag,
 )
 from .errors import (
     INVALID_KEYWORD_IN_AGGREGATE_QUERY_ERROR,
@@ -52,7 +52,6 @@ class EngineOptions:
     broadcast_join: bool = True            # force broadcast of the B side
     strict_checks: bool = True             # eager cardinality / const-group checks
     user_init_code: str = ''
-    sample_rows: int = 64                  # pyeval type-inference sample size
     dialect: str = 'python'                # expression language: 'python' | 'js'
 
 
@@ -375,7 +374,6 @@ class _ExprComputer:
                 pes.append(pe)
             flagged = eval_columns(frame, self.wf, pes,
                                    user_init_code=self.options.user_init_code,
-                                   sample_rows=self.options.sample_rows,
                                    nr_dense=self.binding.nr_dense,
                                    probe_mode=True)
             cond = F.col('__pf0').isNotNull()
@@ -464,7 +462,6 @@ class _ExprComputer:
             try:
                 df = eval_columns(df, self.wf, fallback,
                                   user_init_code=self.options.user_init_code,
-                                  sample_rows=self.options.sample_rows,
                                   nr_dense=self.binding.nr_dense)
             except Exception as e:
                 self._raise_unwrapped(e)
@@ -492,7 +489,6 @@ class _ExprComputer:
             try:
                 df = eval_columns(df, self.wf, [pe],
                                   user_init_code=self.options.user_init_code,
-                                  sample_rows=self.options.sample_rows,
                                   nr_dense=self.binding.nr_dense)
             except Exception as e:
                 self._raise_unwrapped(e)
@@ -622,25 +618,10 @@ class StageRunner:
             raise RbqlIOHandlingError(
                 "Inconsistent modes: Input table has a header while the Join table doesn't have a header")
 
-        from .binding import NF_SRC_COL
-        bdf = b_handle.df
-        b_names = [n for n in bdf.columns if n != NF_SRC_COL]
-        b_ragged = NF_SRC_COL in bdf.columns
-        type_by_name = {f.name: f.dataType for f in bdf.schema.fields}
-        b_types = [type_by_name[n] for n in b_names]
-        sel = [F.col('`{}`'.format(n.replace('`', '``'))).alias(internal_col('b', i))
-               for i, n in enumerate(b_names)]
-        if b_ragged:
-            sel.append(F.col(NF_SRC_COL).cast('int').alias(BNF_COL))
-        bdf = bdf.select(sel)
+        bdf, b_side = bind_side(b_handle, 'b')
         bdf = attach_nr(bdf, BNR_COL, dense=_needs_dense_nr(stage, 'b')
-                        or any(v in ('bNR', 'b.NR') for pair in stage.join_var_pairs for v in pair))
-        if not b_ragged:
-            bdf = bdf.withColumn(BNF_COL, F.lit(len(b_names)).cast('int'))
-        b_side = SideInfo(prefix='b', header=list(b_handle.header) if b_handle.header is not None else None,
-                          mode='fixed', width=len(b_names), types=b_types, ragged=b_ragged,
-                          null_free=frozenset(i for i, n in enumerate(b_names)
-                                              if n in getattr(b_handle, 'null_free', frozenset())))
+                        or any(v in ('bNR', 'b.NR') for pair in stage.join_var_pairs for v in pair),
+                        cache_registry=self.cached_frames)
         wf2 = WorkFrame(df=wf.df, a=wf.a, b=b_side)
         binding = Binding(wf2)
 
@@ -678,7 +659,7 @@ class StageRunner:
                         'No field with index {} at record 1 in "B" table'.format(b_ref.index + 1))
             else:
                 bc = F.col(internal_col('b', b_ref.index))
-                b_tag = type_tag(b_types[b_ref.index])
+                b_tag = type_tag(b_side.types[b_ref.index])
             if 'mixed' in (a_tag, b_tag):
                 # Python dict-key equality across runtime types: 5 == 5.0
                 # == True, but '5' != 5 (mixedcell.join_canon_col).  Only
@@ -707,7 +688,7 @@ class StageRunner:
 
         # ragged B table: a join-key index beyond some record's width is a
         # hard per-record error (HashJoinMap.build, rbql_engine.py:1459-1472)
-        if b_ragged and self.options.strict_checks:
+        if b_side.ragged and self.options.strict_checks:
             tmp_binding = Binding(WorkFrame(df=bdf, a=wf.a, b=b_side))
             b_key_indices = []
             for v1, v2 in stage.join_var_pairs:
@@ -793,7 +774,8 @@ class StageRunner:
                 raise RbqlParsingError('Unable to find input table: "{}"'.format(stage.from_table_id))
 
         self.warnings.extend(getattr(input_handle, 'warnings', []) or [])
-        wf = make_workframe(input_handle)
+        adf, a_side = bind_side(input_handle, 'a')
+        wf = WorkFrame(df=adf, a=a_side)
         nr_referenced = _needs_dense_nr(stage, 'a') or any(
             v in ('NR', 'aNR', 'a.NR') for pair in stage.join_var_pairs for v in pair)
 

@@ -219,7 +219,7 @@ def _out_dialect(args, delim: str, policy: str) -> tuple[str, str]:
 
 
 def _run_one_query(spark, args, query: str, input_path: str, delim: str,
-                   policy: str, is_interactive: bool) -> bool:
+                   policy: str) -> bool:
     from .api import query_csv
     from .errors import exception_to_error_info
     from .sources.csv import write_csv
@@ -291,8 +291,7 @@ def _interactive_loop(args, delim: str, policy: str) -> int:
                     pass
             if spark is None:
                 spark = _build_session(args.cpus)
-            if _run_one_query(spark, args, query, args.input, delim, policy,
-                              is_interactive=True):
+            if _run_one_query(spark, args, query, args.input, delim, policy):
                 out_delim, out_policy = _out_dialect(args, delim, policy)
                 print('\nOutput table preview:')
                 print('====================================')
@@ -397,8 +396,7 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = _build_session(args.cpus)
     try:
-        ok = _run_one_query(spark, args, args.query, input_path, delim, policy,
-                            is_interactive=False)
+        ok = _run_one_query(spark, args, args.query, input_path, delim, policy)
         return 0 if ok else 1
     finally:
         spark.stop()

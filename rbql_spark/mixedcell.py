@@ -253,22 +253,3 @@ def nan_unique_canon(canon: Column, cell: Column, uniq: Column) -> Column:
         F.concat(F.lit('nan#'), uniq.cast('string')).alias('ks'),
         F.lit(0.0).alias('kn'))
     return F.when(isnan_cell, uniq_canon).otherwise(canon)
-
-
-def render_col(col: Column) -> Column:
-    """Reference writer stringification of a mixed cell (py dialect
-    str(v)): int without '.0', float via double rendering, bool
-    'True'/'False', str as-is; null stays null (the writer's None→''
-    warning path handles it downstream)."""
-    k = col.getField('k')
-    n = col.getField('n')
-    return (F.when(col.isNull(), F.lit(None).cast('string'))
-             .when(k == K_STR, col.getField('s'))
-             .when(k == K_BIGINT, col.getField('s'))
-             .when(k == K_INT, n.cast('long').cast('string'))
-             .when(k == K_BOOL, F.when(n != 0, F.lit('True')).otherwise(F.lit('False')))
-             # Python str(nan) renders 'nan' (Spark's double cast says
-             # 'NaN'); a null n on a float kind was nan before the
-             # Arrow round-trip
-             .when((k == K_FLOAT) & (n.isNull() | F.isnan(n)), F.lit('nan'))
-             .otherwise(n.cast('string')))

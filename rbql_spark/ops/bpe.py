@@ -62,7 +62,7 @@ def _apply_merge(left: str, right: str):
     return let_once(F.split('syms', _SEP), fold)
 
 
-def train_bpe(df: DataFrame, text_col: str = 'text', id_col: str = 'doc_id',
+def train_bpe(df: DataFrame, text_col: str = 'text',
               n_merges: int = 8) -> DataFrame:
     """Learn n_merges BPE merge rules → (rank, left_sym, right_sym,
     merged, pair_count), rank 1 = first/most-frequent merge.  Stops early

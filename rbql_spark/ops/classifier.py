@@ -203,23 +203,23 @@ def classifier_train(labeled: DataFrame, label_col: str = 'label',
 def classifier_score(corpus: DataFrame, weights: list[float],
                      text_col: str = 'text', id_col: str = 'doc_id',
                      ngram_max: int = 2, seed: int = 42,
-                     dim_check: int | None = None,
-                     impl: str = 'join') -> DataFrame:
+                     dim_check: int | None = None) -> DataFrame:
     """Score a corpus under trained weights → (doc_id, n_features,
     logit, prob), logit and prob rounded to 6.  `weights` is the
     classifier_train output; its length fixes dim (= len − 1).
 
-    impl='join' (default): one scan — explode grams → bucket →
+    A batch corpus takes one scan — explode grams → bucket →
     broadcast-join the (dim+1)-row weight table → one partial/final sum
     per doc.  The corpus never shuffles (the dsir_log_weights shape).
 
-    impl='inline': the weights inline as an array literal and the logit
+    A streaming corpus (`corpus.isStreaming`) cannot run that per-doc
+    aggregation on an unwatermarked append stream, so it takes
+    _score_inline: the weights inline as an array literal and the logit
     folds per ROW with NO Exchange at all (a pure projection, the IVF
-    inline-centroid precedent).  This is the streaming path: stateless,
-    append mode, no watermark (streaming.documents.stream_classify).
-    Plan size grows with dim — use 'join' for dim ≫ 10⁴.
+    inline-centroid precedent) — stateless, append mode, no watermark
+    (streaming.documents.stream_classify).
 
-    Both impls compute the CANONICAL summation (round-12): terms
+    Both paths compute the CANONICAL summation (round-12): terms
     w_b·(c_b/n) folded left in ascending-bucket order, intercept last,
     then floor-rounded (floor(x·1e6 + 0.5)/1e6 — the flesch trick: the
     same IEEE ops in any engine).  Earlier the inline path summed
@@ -228,7 +228,7 @@ def classifier_score(corpus: DataFrame, weights: list[float],
     points, where a different summation order (or Spark's decimal-string
     HALF_UP round vs another engine's binary round) flips the last
     digit.  With a shared term list, fold order, and rounding scheme the
-    two impls are bit-identical, and any engine replaying the same
+    two paths are bit-identical, and any engine replaying the same
     ordered fold (e.g. DuckDB's sum(x ORDER BY bucket)) matches them.
     (Residual cross-engine risk: exp() in the sigmoid may differ by one
     ulp between libms — inherent to prob, not to the logit.)
@@ -244,10 +244,7 @@ def classifier_score(corpus: DataFrame, weights: list[float],
         raise ValueError('classifier_score: dim mismatch — weights imply '
                          'dim={} but dim_check={} (train and score must '
                          'share dim/ngram_max/seed)'.format(dim, dim_check))
-    if impl not in ('join', 'inline'):
-        raise ValueError("classifier_score: impl must be 'join' or "
-                         "'inline', got {!r}".format(impl))
-    if impl == 'inline':
+    if corpus.isStreaming:
         return _score_inline(corpus, list(weights), text_col, id_col,
                              ngram_max, seed, dim)
     feats = _features(corpus, text_col, id_col, dim, ngram_max, seed)
@@ -286,7 +283,7 @@ def _score_inline(corpus: DataFrame, weights: list[float], text_col: str,
     """Stateless per-row scoring: gram hashing stays JVM-side (native
     HOF transforms), the canonical run-length FOLD runs as an Arrow
     pandas_udf kernel — zero Exchange, streaming-safe, and bit-identical
-    to the join impl (same canonical per-bucket terms, fold order, and
+    to the join path (same canonical per-bucket terms, fold order, and
     rounding; see classifier_score).
 
     Round 14: the fold moved from interpreted Catalyst HOF lambdas

@@ -62,8 +62,7 @@ _SIMHASH_MEMO_CAP = 1 << 20
 SPREAD_BYTES_PER_TASK = 256 << 10
 
 
-def spread_partitions(df: DataFrame, min_per_core: int = 1,
-                      expansion: float = 1.0) -> DataFrame:
+def spread_partitions(df: DataFrame, expansion: float = 1.0) -> DataFrame:
     """Repartition when the scan yields fewer partitions than cores.
 
     Small-file inputs (one parquet file → one partition) would otherwise run
@@ -324,7 +323,7 @@ def decontaminate_bloom(train: DataFrame, benchmark: DataFrame,
                         text_col: str = 'text', id_col: str = 'doc_id',
                         shingle_k: int = 3, min_hits: int = 1,
                         bloom_bits: int = 1 << 20, bloom_hashes: int = 3,
-                        seed: int = 42, impl: str = 'native') -> DataFrame:
+                        seed: int = 42) -> DataFrame:
     """Bloom-filter decontamination — the scale path of decontaminate()
     for when the benchmark side is itself corpus-sized (e.g. "flag
     anything that overlaps our eval CORPUS", or cross-corpus leakage
@@ -343,30 +342,20 @@ def decontaminate_bloom(train: DataFrame, benchmark: DataFrame,
     which is the safe direction for contamination screens: borderline
     docs get a second exact pass or are dropped.
 
-    impl='native' (default) keeps everything in Catalyst: the set-bit
-    positions stay a DataFrame, broadcast-hash-joined against the
-    corpus' exploded (shingle × position) stream — one corpus scan, no
-    corpus shuffle, the only shuffles are over surviving hit rows; a
-    shingle is bloom-positive iff all `bloom_hashes` of its position
-    rows find a partner (count == k is exact even when a shingle's own
-    positions collide).  This path is replayed value-for-value by the
-    DuckDB oracle.  impl='bitmap' packs the same positions into a
-    numpy bit array on the driver (bloom_bits/8 bytes, e.g. 128 KiB at
-    the default) broadcast to an Arrow mapInPandas membership kernel —
-    position hashing still native, only the O(1) bit test in Python —
-    for when even the position table is too wide to hash-join.  Both
-    impls return identical rows (engines-agree tested).
+    Everything stays in Catalyst: the set-bit positions stay a
+    DataFrame, broadcast-hash-joined against the corpus' exploded
+    (shingle × position) stream — one corpus scan, no corpus shuffle,
+    the only shuffles are over surviving hit rows; a shingle is
+    bloom-positive iff all `bloom_hashes` of its position rows find a
+    partner (count == k is exact even when a shingle's own positions
+    collide).  The DuckDB oracle replays it value-for-value.
 
     Output is UNORDERED (pair/label producers never pay a display sort).
 
     Duplicate id rows in `train` (same doc twice) are an upstream
-    malformation; the native path still flags correctly (per distinct
-    shingle, via salt-index counting) while the bitmap path counts each
-    row — run exact_dedup first if ids may repeat.
+    malformation; they still flag correctly (per distinct shingle, via
+    salt-index counting).
     """
-    if impl not in ('native', 'bitmap'):
-        raise ValueError("impl must be 'native' or 'bitmap', got "
-                         + repr(impl))
     sh = word_shingles_md5(F.col(text_col), k=shingle_k)
     bits = (benchmark.select(F.explode(sh).alias('sh'))
                      .select(F.explode(_bloom_positions(
@@ -375,13 +364,6 @@ def decontaminate_bloom(train: DataFrame, benchmark: DataFrame,
                      .distinct())
     t = (spread_partitions(train)
          .select(F.col(id_col).alias('doc_id'), F.explode(sh).alias('sh')))
-    if impl == 'bitmap':
-        bc = _bloom_pack_bitmap(train.sparkSession, bits, bloom_bits)
-        flags = _bloom_member_flags(t, bc, bloom_hashes, bloom_bits, seed)
-        return (flags.groupBy('doc_id')
-                     .agg(F.sum('flag').cast('long')
-                          .alias('n_flagged_shingles'))
-                     .where(F.col('n_flagged_shingles') >= min_hits))
     tp = (t.select('doc_id', 'sh', F.posexplode(_bloom_positions(
               F.col('sh'), bloom_hashes, bloom_bits, seed))
               .alias('__i', 'pos'))

@@ -359,8 +359,7 @@ def _decode_payload(raw: bytes) -> dict:
     * ``\\x89PNG\\r\\n\\x1a\\n`` → PNG parse (:func:`decode_png`)
     * ``RIFF..WAVE``    → PCM WAV parse (:func:`decode_wav`)
     * anything else     → opaque byte statistics (checksum + head bytes) —
-      the honest treatment of an unrecognized format, kept for the generic
-      byte-plumbing path (:func:`extract_features`).
+      the honest treatment of an unrecognized format.
     """
     if raw[:2] == b'BM':
         try:
@@ -581,46 +580,6 @@ def extract_audio_features(df: DataFrame, payload_col: str = 'payload',
             yield pd.DataFrame(out, columns=cols)
 
     return df.mapInPandas(run, schema=_AUDIO_FEATURE_SCHEMA)
-
-
-_GENERIC_FEATURE_SCHEMA = T.StructType([
-    T.StructField('doc_id', T.LongType()),
-    T.StructField('n_bytes', T.LongType()),
-    T.StructField('byte_checksum', T.LongType()),
-    T.StructField('head_hex', T.StringType()),
-    T.StructField('feature', T.ArrayType(T.DoubleType())),
-])
-
-
-def extract_features(df: DataFrame, payload_col: str = 'payload',
-                     id_col: str = 'doc_id', batch_size_hint: int = 1024) -> DataFrame:
-    """Arrow-batched byte statistics for OPAQUE payloads (unknown format):
-    checksum, head bytes, normalized head feature.  Recognized formats
-    should go through :func:`extract_image_features` /
-    :func:`extract_audio_features` instead — this is the fallback path
-    :func:`_decode_payload` takes for unsniffable bytes."""
-    id_name, payload_name = id_col, payload_col
-
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            out = {
-                'doc_id': [], 'n_bytes': [], 'byte_checksum': [],
-                'head_hex': [], 'feature': [],
-            }
-            for doc_id, raw in zip(pdf[id_name], pdf[payload_name]):
-                raw = bytes(raw) if raw is not None else b''
-                checksum = sum(raw) % (1 << 31)
-                feature = [float(b) / 255.0 for b in raw[:8]]
-                feature += [0.0] * (8 - len(feature))
-                out['doc_id'].append(int(doc_id))
-                out['n_bytes'].append(len(raw))
-                out['byte_checksum'].append(checksum)
-                out['head_hex'].append(raw[:4].hex())
-                out['feature'].append(feature)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, schema=_GENERIC_FEATURE_SCHEMA)
 
 
 def multimodal_pipeline(df: DataFrame, id_col: str = 'doc_id') -> DataFrame:

@@ -109,7 +109,7 @@ def training_data_pipeline(
     model-scored quality stage right AFTER the heuristic filter and
     BEFORE dedup (the GPT-3-recipe order): survivors scoring below
     `classifier_threshold` drop; `classifier_kwargs` passes through to
-    classifier_score (ngram_max/seed/impl).  Tokenless survivors emit
+    classifier_score (ngram_max/seed).  Tokenless survivors emit
     no score row and drop with the stage.
 
     `dsir_target` (a corpus shaped like `docs`) enables DSIR importance

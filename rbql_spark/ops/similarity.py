@@ -804,9 +804,9 @@ def _pq_adc_scored_arrow(c: DataFrame, qrows: list,
     shortlist rank shuffles a bounded set instead of the whole pair
     space.
 
-    `qrows` is the collected query set — the same "interactive-sized
-    query set" contract as broadcast_queries=True (the default); bulk
-    query workloads belong on encoder='native' with
+    `qrows` is the collected query set — pq_ann_topk takes this kernel
+    only under broadcast_queries=True (the "interactive-sized query
+    set" contract); bulk query workloads take its native path with
     broadcast_queries=False.
     """
     import numpy as np
@@ -870,7 +870,6 @@ def pq_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                 id_col: str = 'vec_id', vec_col: str = 'embedding',
                 query_id_col: str = 'query_id', seed: int = 42,
                 broadcast_queries: bool = True,
-                encoder: str = 'arrow',
                 quantizer: str = 'hash') -> DataFrame:
     """Product-quantization ANN (exhaustive ADC scan + exact rescore):
     split each vector into m subvectors, encode every subvector as its
@@ -901,14 +900,13 @@ def pq_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     shortlist broadcasts back into a second corpus scan for the float
     rescore — the corpus is never shuffled.
 
-    encoder='arrow' (default) runs the per-row code assignment as a
-    numpy kernel over Arrow batches (_pq_codes_arrow — same argmin/tie
-    semantics, ~10× less encode wall time); encoder='native' keeps the
-    pure-expression path (no Python stage in the plan).  The arrow path
-    collects the query set into the task closure (the broadcast-sized
-    contract), so broadcast_queries=False routes to the native path —
-    bulk query workloads get the shuffle join they asked for instead of a
-    silent driver collect.
+    broadcast_queries=True (default) collects the query set into the
+    task closure (the broadcast-sized contract) and runs encode + ADC
+    score as one numpy kernel over Arrow batches (_pq_adc_scored_arrow —
+    same argmin/tie semantics, ~10× less encode wall time).
+    broadcast_queries=False keeps the pure-expression path (no Python
+    stage in the plan): bulk query workloads get the shuffle join they
+    asked for instead of a silent driver collect.
 
     quantizer='hash' (default) draws codebook entries from content-hash
     selected corpus rows — replayable by the differential oracle;
@@ -920,13 +918,12 @@ def pq_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     c = corpus.select(F.col(id_col).alias('vec_id'), as_double(F.col(vec_col)).alias('__cv'))
     q = queries.select(F.col(query_id_col).alias('query_id'), as_double(F.col(vec_col)).alias('__qv'))
 
-    if encoder == 'arrow' and broadcast_queries:
+    if broadcast_queries:
         # fused encode + ADC score in one Arrow stage: the kernel already
         # holds the floats and codebooks, so reconstruct and score against
         # the collected query set in numpy (matmul) instead of emitting
         # codes and paying an interpreted 64-dim fold per (corpus×query)
-        # pair.  Queries are the broadcast-sized side by contract
-        # (broadcast_queries=False falls through to the native path).  The
+        # pair.  Queries are the broadcast-sized side by contract.  The
         # two small driver-side jobs (codebook selection, query collect)
         # overlap on separate scheduler threads.
         import concurrent.futures as _cf
@@ -958,9 +955,10 @@ def pq_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
                         .select('query_id', 'vec_id', 'cosine_sim', 'rank')
                         .orderBy('query_id', 'rank'))
 
-    # native path: staged projections — codes → reconstruction → per-row
-    # norm, so the argmins run once per corpus ROW and the
-    # (join-replicated) pair expression touches only precomputed columns
+    # bulk queries (broadcast_queries=False): staged projections — codes
+    # → reconstruction → per-row norm, so the argmins run once per corpus
+    # ROW and the (join-replicated) pair expression touches only
+    # precomputed columns
     books = {'hash': _pq_codebooks,
              'kmeans': _pq_codebooks_kmeans}[quantizer](c, m, ks, seed)
     _code, _recon = _pq_code_exprs(books)
@@ -978,7 +976,7 @@ def pq_ann_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
         F.round(_dot(F.col('__rv'), F.col('__qv'))
                 / (F.sqrt(F.col('__rn2')) * F.sqrt(F.col('__qn2'))), 6)
     ).otherwise(F.lit(-1.0))
-    scored = (decoded.join(F.broadcast(qn) if broadcast_queries else qn)
+    scored = (decoded.join(qn)
                      .select('query_id', 'vec_id', pair_sim.alias('pq_sim')))
     # the PQ candidate set is corpus-scale per query (full ADC sweep, or
     # probed-cell fraction for IVF-PQ) — shortlist-rank via the salted

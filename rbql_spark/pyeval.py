@@ -348,13 +348,16 @@ def _plan_variables(exprs: list[str], wf: WorkFrame) -> _VarPlan:
                     record_sides=record_sides, builtins=builtins, widths=widths)
 
 
+# driver-side rows the output types are inferred from
+SAMPLE_ROWS = 64
+
 # (analyzed-plan semanticHash, init code, exprs) → [(dtype, is_json)]
 _SAMPLE_TYPE_CACHE: dict = {}
 
 
 def eval_columns(df: DataFrame, wf: WorkFrame, pyexprs: list[PyExpr],
-                 user_init_code: str = '', sample_rows: int = 64,
-                 nr_dense: bool = False, probe_mode: bool = False) -> DataFrame:
+                 user_init_code: str = '', nr_dense: bool = False,
+                 probe_mode: bool = False) -> DataFrame:
     """Append one column per PyExpr, evaluating arbitrary Python per record.
 
     ``nr_dense``: whether NR_COL carries exact 1-based record numbers.
@@ -453,7 +456,7 @@ def eval_columns(df: DataFrame, wf: WorkFrame, pyexprs: list[PyExpr],
             for pe, (dtype, is_json) in zip(need_infer, cached):
                 pe.dtype, pe.is_json = dtype, is_json
         else:
-            sample = df.limit(sample_rows).collect()
+            sample = df.limit(SAMPLE_ROWS).collect()
             glb = _make_globals(user_init_code)
             make_env = build_env_factory()
             sampled: dict[str, list] = {pe.out_col: [] for pe in need_infer}
@@ -568,7 +571,7 @@ def eval_columns(df: DataFrame, wf: WorkFrame, pyexprs: list[PyExpr],
 
 
 def eval_simple(df: DataFrame, col_exprs: list[tuple[str, str]],
-                user_init_code: str = '', sample_rows: int = 64) -> DataFrame:
+                user_init_code: str = '') -> DataFrame:
     """Evaluate Python expressions whose free variables are *column names* of
     ``df`` (used e.g. for ARRAY_AGG post-proc lambdas on aggregated frames).
     Existing columns named in ``col_exprs`` are REPLACED."""
@@ -576,7 +579,7 @@ def eval_simple(df: DataFrame, col_exprs: list[tuple[str, str]],
     conv = {f.name: _column_converter(f.dataType) for f in in_schema.fields}
 
     # sample for result types
-    sample = df.limit(sample_rows).collect()
+    sample = df.limit(SAMPLE_ROWS).collect()
     glb = _make_globals(user_init_code)
     dtypes: dict[str, T.DataType] = {}
     for out_col, expr in col_exprs:

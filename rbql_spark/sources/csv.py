@@ -244,10 +244,14 @@ def _arrays_to_handle(arr_df: DataFrame, header: list[str] | None, width_key,
         probe_warnings = []
         if len(sizes) > 1:
             by_first = sorted(rows, key=lambda r: r['first_at'])
+            # the first width starts at record 1; the second width's first
+            # record is 1 + the records before it in source order
+            before = _collect_translating(arr_df.agg(F.count_if(
+                F.col(ORDER_SRC_COL) < by_first[1]['first_at'])))[0][0]
             probe_warnings.append(
                 'Number of fields in "input" table is not consistent: '
                 'e.g. record {} -> {} fields, record {} -> {} fields'.format(
-                    1, by_first[0]['w'], 2, by_first[1]['w']))
+                    1, by_first[0]['w'], before + 1, by_first[1]['w']))
         if has_bad and any(r['bad'] for r in rows):
             probe_warnings.append('Inconsistent double quote escaping in input table')
         return (max((w for w, _ in sizes), default=1) or 1, probe_warnings)

@@ -111,10 +111,10 @@ def stream_decontaminate_bloom(docs: DataFrame, benchmark: DataFrame,
     documents whose shingles are bloom-members of the (static)
     benchmark set.
 
-    The benchmark collapses ONCE at plan-build time into the same
-    bloom_bits-wide bitmap as ops.dedup.decontaminate_bloom
-    (impl='bitmap'): a bloom_bits/8-byte broadcast, fixed no matter how
-    large the benchmark grows.  Each micro-batch shingles in-scan
+    The benchmark collapses ONCE at plan-build time into the set-bit
+    positions of ops.dedup.decontaminate_bloom, packed into a numpy
+    bitmap: a bloom_bits/8-byte broadcast, fixed no matter how large
+    the benchmark grows.  Each micro-batch shingles in-scan
     (native md5), tests membership in a STATELESS Arrow kernel, and
     only bloom-positive shingle rows reach the one streaming
     aggregation — so state is bounded to flagged documents, exactly the
@@ -448,10 +448,10 @@ def stream_classify(docs: DataFrame, weights: list,
     """Streaming quality-classifier scoring — the streaming face of
     ops.classifier.classifier_score.
 
-    Scoring under FROZEN trained weights is per-document pure, so the
-    inline impl (weight-array literal + one fold over the row's gram
-    array — zero Exchange) applies to a stream unchanged: append mode,
-    no state, no watermark.  Each arriving document is scored inside
+    Scoring under FROZEN trained weights is per-document pure, so
+    classifier_score takes its inline path for a stream (weight-array
+    literal + one fold over the row's gram array — zero Exchange):
+    append mode, no state, no watermark.  Each arriving document is scored inside
     its own micro-batch's scan tasks and the stream's lifetime output
     equals the batch classifier_score over the same documents (the
     differential oracle), up to the shared 1e-6 rounding grid.
@@ -470,8 +470,7 @@ def stream_classify(docs: DataFrame, weights: list,
     # pays one row shuffle for cores-wide scoring)
     return classifier_score(spread_partitions(docs), weights,
                             text_col=text_col,
-                            id_col=id_col, ngram_max=ngram_max, seed=seed,
-                            impl='inline')
+                            id_col=id_col, ngram_max=ngram_max, seed=seed)
 
 
 def stream_c4_line_filter(docs: DataFrame, text_col: str = 'text',

@@ -60,13 +60,16 @@ def session_counts(events: DataFrame, gap: str = '30 minutes',
             .select('user_id', F.col('win.start').alias('session_start'), 'n_events'))
 
 
-def _drain_timeout(timeout_sec: int | None) -> int:
-    """Default drain timeout, overridable via RBQL_STREAM_DRAIN_TIMEOUT —
-    the sf10 decade audit needs >600s for drains that are ~60s at sf1
-    (linear scaling alone crosses the default)."""
-    if timeout_sec is not None:
-        return timeout_sec
-    return int(os.environ.get('RBQL_STREAM_DRAIN_TIMEOUT', '600'))
+def _await_drain(q, query_name: str) -> None:
+    """Wait for an availableNow query to finish; stop it and raise past
+    the drain timeout — 600 s, overridable via RBQL_STREAM_DRAIN_TIMEOUT
+    (the sf10 decade audit needs >600s for drains that are ~60s at sf1:
+    linear scaling alone crosses the default)."""
+    timeout = int(os.environ.get('RBQL_STREAM_DRAIN_TIMEOUT', '600'))
+    if not q.awaitTermination(timeout):
+        q.stop()
+        raise RuntimeError('stream {} did not drain within {}s'.format(
+            query_name, timeout))
 
 
 @__import__('contextlib').contextmanager
@@ -96,7 +99,6 @@ def _scoped_no_data_batches(spark, enabled: bool):
 
 
 def run_stream_to_parquet(stream_df: DataFrame, query_name: str,
-                          timeout_sec: int | None = None,
                           input_bytes: int | None = None,
                           shuffle_expansion: float = 1.0,
                           final_no_data_batch: bool = True) -> DataFrame:
@@ -150,12 +152,7 @@ def run_stream_to_parquet(stream_df: DataFrame, query_name: str,
              .outputMode('append')
              .trigger(availableNow=True)
              .start())
-    timeout_sec = _drain_timeout(timeout_sec)
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise RuntimeError(
-            'stream {} did not drain within {}s'.format(query_name,
-                                                        timeout_sec))
+    _await_drain(q, query_name)
     q.stop()
     # explicit schema: an all-filtered (empty) drain leaves no data files
     return stream_df.sparkSession.read.schema(stream_df.schema).parquet(out)
@@ -163,7 +160,6 @@ def run_stream_to_parquet(stream_df: DataFrame, query_name: str,
 
 def run_stream_to_memory(stream_df: DataFrame, query_name: str,
                          output_mode: str = 'append',
-                         timeout_sec: int | None = None,
                          input_bytes: int | None = None,
                          shuffle_expansion: float = 1.0,
                          final_no_data_batch: bool = True):
@@ -205,12 +201,7 @@ def run_stream_to_memory(stream_df: DataFrame, query_name: str,
              .outputMode(output_mode)
              .trigger(availableNow=True)
              .start())
-    timeout_sec = _drain_timeout(timeout_sec)
-    if not q.awaitTermination(timeout_sec):
-        q.stop()
-        raise RuntimeError(
-            'stream {} did not drain within {}s'.format(query_name,
-                                                        timeout_sec))
+    _await_drain(q, query_name)
     return q
 
 

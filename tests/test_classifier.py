@@ -119,47 +119,48 @@ def test_classifier_score_native_plan(spark, labeled):
 
 
 def test_classifier_score_impls_agree(spark, labeled):
-    """join (broadcast table + per-doc agg) and inline (weight-array
-    literal + per-row fold) share the round-12 CANONICAL summation —
+    """Batch scoring (broadcast table + per-doc agg) and the inline path
+    streams take (_score_inline: weight-array literal + per-row fold)
+    share the round-12 CANONICAL summation —
     ascending-bucket term fold, intercept last, floor rounding — so they
     are BIT-identical, not merely equal after rounding (the earlier
     per-occurrence inline sum could flip a half-grid last digit against
     the join path's float order)."""
     import struct
 
-    import pytest
-
-    from rbql_spark.ops.classifier import classifier_score, classifier_train
+    from rbql_spark.ops.classifier import (
+        _score_inline, classifier_score, classifier_train,
+    )
     w = classifier_train(labeled, dim=64, n_iter=2, lr=2.0)
 
     def bits(x):
         return struct.pack('<d', x)
 
     a = {r['doc_id']: (r['n_features'], bits(r['logit']), bits(r['prob']))
-         for r in classifier_score(labeled, w, impl='join').collect()}
+         for r in classifier_score(labeled, w).collect()}
     b = {r['doc_id']: (r['n_features'], bits(r['logit']), bits(r['prob']))
-         for r in classifier_score(labeled, w, impl='inline').collect()}
+         for r in _score_inline(labeled, w, 'text', 'doc_id', 2, 42,
+                                len(w) - 1).collect()}
     assert a == b
-    with pytest.raises(ValueError, match='impl'):
-        classifier_score(labeled, w, impl='nope')
 
 
 def test_classifier_inline_plan_no_exchange(spark, labeled):
-    """The inline impl is a pure projection: stateless, zero Exchange —
+    """The inline path is a pure projection: stateless, zero Exchange —
     the property that makes it streaming-safe."""
-    from rbql_spark.ops.classifier import classifier_score
-    out = classifier_score(labeled, [0.001] * 65, impl='inline')
+    from rbql_spark.ops.classifier import _score_inline
+    out = _score_inline(labeled, [0.001] * 65, 'text', 'doc_id', 2, 42, 64)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert 'Exchange' not in plan
     assert 'BatchEvalPython' not in plan and 'mapInPandas' not in plan
 
 
 def test_classifier_inline_tokenless_docs(spark):
-    from rbql_spark.ops.classifier import classifier_score
+    from rbql_spark.ops.classifier import _score_inline
     df = spark.createDataFrame(
         [(1, 'alpha beta'), (2, ''), (3, None)], 'doc_id long, text string')
     got = {r['doc_id'] for r in
-           classifier_score(df, [0.1] * 33, impl='inline').collect()}
+           _score_inline(df, [0.1] * 33, 'text', 'doc_id', 2, 42,
+                         32).collect()}
     assert got == {1}
 
 

@@ -398,3 +398,39 @@ def test_utf8_check_spans_read_chunks(spark, tmp_path):
                        match='Unable to decode input table as UTF-8. '
                              'Use binary \\(latin-1\\) encoding instead'):
         read_csv(spark, bad, policy='simple')
+
+
+def test_csv_join_table_order_key_is_not_a_field(spark, tmp_path):
+    # the join table's source-order key must bind as its record order, not
+    # as an extra B column (a stray trailing ordinal, a widened bNF)
+    _write(tmp_path, 'b.csv', '1,one\n2,two\n')
+    p = _write(tmp_path, 'a.csv', '1,x\n2,y\n3,z\n')
+
+    def rows(query):
+        res = query_csv(spark, query, p)
+        return [list(r) for r in res.display_df(ordered=True).collect()]
+
+    assert rows('SELECT * JOIN b.csv ON a1 == b1') == \
+        [['1', 'x', '1', 'one'], ['2', 'y', '2', 'two']]
+    assert rows('SELECT a1, bNF LEFT JOIN b.csv ON a1 == b1') == \
+        [['1', 2], ['2', 2], ['3', 2]]
+    assert rows('SELECT a1, b2 JOIN b.csv ON a1 == b1 ORDER BY bNR DESC') == \
+        [['2', 'two'], ['1', 'one']]
+
+
+@pytest.mark.parametrize('encoding,bulk', [('utf-8', False),
+                                           ('latin-1', False),
+                                           ('latin-1', True)])
+def test_inconsistent_width_warning_names_first_records(spark, tmp_path,
+                                                        monkeypatch,
+                                                        encoding, bulk):
+    # every reader reports the first record of each width, as the
+    # driver-side reader does
+    import rbql_spark.sources.csv as C
+    monkeypatch.setattr(C, '_DISTRIBUTED_SCAN_MIN_BYTES',
+                        1 if bulk else 1 << 62)
+    p = _write(tmp_path, 'w.csv', '1,2\n3,4\n5,6\n7,8,9\n10,11\n')
+    h = read_csv(spark, p, policy='simple', encoding=encoding)
+    assert h.warnings == ['Number of fields in "input" table is not '
+                          'consistent: e.g. record 1 -> 2 fields, '
+                          'record 4 -> 3 fields']

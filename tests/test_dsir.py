@@ -95,13 +95,27 @@ def test_dsir_sample_threshold_path(spark, corpora):
 
 
 def test_bloom_decontaminate_impls_agree(spark, sf_dir):
-    from rbql_spark.ops.dedup import decontaminate_bloom
+    # the batch hash-join path against the bitmap kernel pair the stream
+    # (stream_decontaminate_bloom) runs, on the same shingles
+    from rbql_spark.ops.dedup import (
+        _bloom_member_flags, _bloom_pack_bitmap, _bloom_positions,
+        decontaminate_bloom, word_shingles_md5,
+    )
     docs = spark.read.parquet(os.path.join(sf_dir, 'documents.parquet'))
     bench = docs.filter(F.col('doc_id') % 50 == 0).select('doc_id', 'text')
     nat = {tuple(r) for r in decontaminate_bloom(
         docs, bench, bloom_bits=1 << 16).collect()}
-    bit = {tuple(r) for r in decontaminate_bloom(
-        docs, bench, bloom_bits=1 << 16, impl='bitmap').collect()}
+    sh = word_shingles_md5(F.col('text'), k=3)
+    bits = (bench.select(F.explode(sh).alias('sh'))
+                 .select(F.explode(_bloom_positions(
+                     F.col('sh'), 3, 1 << 16, 42)).alias('pos'))
+                 .distinct())
+    flags = _bloom_member_flags(
+        docs.select('doc_id', F.explode(sh).alias('sh')),
+        _bloom_pack_bitmap(spark, bits, 1 << 16), 3, 1 << 16, 42)
+    bit = {tuple(r) for r in flags.groupBy('doc_id')
+           .agg(F.sum('flag').cast('long').alias('n'))
+           .where(F.col('n') >= 1).collect()}
     assert nat == bit and nat
 
 
@@ -223,8 +237,6 @@ def test_bloom_decontaminate_duplicate_rows_still_flag(spark):
                for r in decontaminate_bloom(docs, bench,
                                             bloom_bits=1 << 20).collect()}
     assert flagged == {1: 4}  # per distinct shingle, duplicates collapsed
-    with pytest.raises(ValueError, match="'native' or 'bitmap'"):
-        decontaminate_bloom(docs, bench, impl='numpy')
 
 
 def test_mix_corpora_zero_token_source_error(spark):

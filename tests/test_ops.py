@@ -2269,13 +2269,41 @@ def test_embed_hashing_inline_matches_distributed(spark):
 def test_removed_options_raise_type_error():
     # each operator has one implementation; the old selector keywords are
     # gone rather than silently ignored
-    from rbql_spark.ops.bpe import apply_bpe
-    from rbql_spark.ops.classifier import classifier_train
-    from rbql_spark.ops.dedup import (minhash_signatures, simhash,
-                                      simhash_near_dups)
+    from rbql_spark import tuning
+    from rbql_spark.engine import EngineOptions
+    from rbql_spark.main import _run_one_query
+    from rbql_spark.ops.bpe import apply_bpe, train_bpe
+    from rbql_spark.ops.classifier import classifier_score, classifier_train
+    from rbql_spark.ops.dedup import (decontaminate_bloom, minhash_signatures,
+                                      simhash, simhash_near_dups,
+                                      spread_partitions)
+    from rbql_spark.ops.similarity import pq_ann_topk
     from rbql_spark.ops.textstats import repetition_stats
+    from rbql_spark.pyeval import eval_columns, eval_simple
     from rbql_spark.sources.csv import read_csv
+    from rbql_spark.streaming.events import (run_stream_to_memory,
+                                             run_stream_to_parquet)
     calls = [
+        # the code picks these paths itself (stream vs batch, the
+        # broadcast-sized query contract)
+        lambda: classifier_score(None, [0.0, 0.0], impl='inline'),
+        lambda: decontaminate_bloom(None, None, impl='bitmap'),
+        lambda: pq_ann_topk(None, None, encoder='native'),
+        # one value in use, or never read
+        lambda: run_stream_to_parquet(None, 'q', timeout_sec=1),
+        lambda: run_stream_to_memory(None, 'q', timeout_sec=1),
+        lambda: EngineOptions(sample_rows=8),
+        lambda: eval_columns(None, None, [], sample_rows=8),
+        lambda: eval_simple(None, [], sample_rows=8),
+        lambda: tuning.apply_plan_width(None, expansion=1.0),
+        lambda: tuning.apply_plan_width(None, bytes_per_partition=64),
+        lambda: tuning.advise_shuffle_partitions(None, 1,
+                                                 bytes_per_partition=64),
+        lambda: tuning.advise_shuffle_partitions(None, 1, cap=4),
+        lambda: spread_partitions(None, min_per_core=2),
+        lambda: train_bpe(None, id_col='doc_id'),
+        lambda: _run_one_query(None, None, 'q', 'x.csv', ',', 'quoted',
+                               is_interactive=False),
         lambda: classifier_train(None, iter_impl='native'),
         lambda: apply_bpe(None, [], impl='arrow'),
         lambda: minhash_signatures(None, 'text', 'doc_id',

@@ -293,10 +293,11 @@ def test_temperature_sample_two_scans_broadcast_rates(spark, sf_dir, entry):
 
 def test_pq_ann_two_corpus_scans_broadcast_queries(spark, sf_dir):
     # PQ = one corpus scan for the ADC sweep and one more for the exact
-    # float rescore of the broadcast shortlist.  encoder='native': codes +
-    # reconstruction inline, zero Python stages.  encoder='arrow' (the
-    # default): the ADC sweep is exactly ONE Arrow stage fused into scan 1
-    # (encode + score + local shortlist prune), everything after native.
+    # float rescore of the broadcast shortlist.  broadcast_queries=False:
+    # codes + reconstruction inline, zero Python stages.
+    # broadcast_queries=True (the default): the ADC sweep is exactly ONE
+    # Arrow stage fused into scan 1 (encode + score + local shortlist
+    # prune), everything after native.
     from pyspark.sql import functions as F  # noqa: F811
 
     from rbql_spark.ops.similarity import pq_ann_topk
@@ -304,13 +305,13 @@ def test_pq_ann_two_corpus_scans_broadcast_queries(spark, sf_dir):
     qrows = emb.orderBy('vec_id').limit(2).collect()
     qdf = spark.createDataFrame(qrows, emb.schema) \
                .select(F.col('vec_id').alias('query_id'), 'embedding')
-    res = pq_ann_topk(emb, qdf, k=5, m=8, ks=16, encoder='native')
+    res = pq_ann_topk(emb, qdf, k=5, m=8, ks=16, broadcast_queries=False)
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert plan.count('FileScan') == 2, plan.count('FileScan')
     assert 'BroadcastExchange' in plan
     assert 'BatchEvalPython' not in plan and 'MapInPandas' not in plan
 
-    res_a = pq_ann_topk(emb, qdf, k=5, m=8, ks=16, encoder='arrow')
+    res_a = pq_ann_topk(emb, qdf, k=5, m=8, ks=16, broadcast_queries=True)
     plan_a = res_a._jdf.queryExecution().executedPlan().toString()
     assert plan_a.count('FileScan') == 2, plan_a.count('FileScan')
     assert 'BroadcastExchange' in plan_a
@@ -464,7 +465,7 @@ def test_pq_arrow_generic_id_types_and_bulk_query_fallback(spark, sf_dir):
     q_s = q.select(F.concat(F.lit('q'), F.col('query_id').cast('string'))
                     .alias('query_id'), 'embedding')
 
-    r = pq_ann_topk(emb_s, q_s, k=5, encoder='arrow')
+    r = pq_ann_topk(emb_s, q_s, k=5)
     got = r.collect()
     assert len(got) == 15 and isinstance(got[0]['vec_id'], str)
     # string ids through the fused ivf_pq arrow strategy too
@@ -472,11 +473,11 @@ def test_pq_arrow_generic_id_types_and_bulk_query_fallback(spark, sf_dir):
                          centroid_strategy='arrow')
     assert len(r2.collect()) == 15
 
-    nb = pq_ann_topk(emb, q, k=5, encoder='arrow', broadcast_queries=False)
+    nb = pq_ann_topk(emb, q, k=5, broadcast_queries=False)
     plan = nb._jdf.queryExecution().executedPlan().toString()
     assert 'MapInPandas' not in plan and 'BatchEvalPython' not in plan
     assert sorted(map(tuple, nb.collect())) == \
-        sorted(map(tuple, pq_ann_topk(emb, q, k=5, encoder='arrow').collect()))
+        sorted(map(tuple, pq_ann_topk(emb, q, k=5).collect()))
 
 
 def test_cosine_zero_norm_guard(spark):
@@ -782,7 +783,8 @@ def test_homogeneous_in_memory_tables_stay_plain(spark):
     assert not is_mixed_type(h2.df.schema.fields[1].dataType)
 
 
-def test_plan_width_decided_at_engine_layer(spark, sf_dir, entry):
+def test_plan_width_decided_at_engine_layer(spark, sf_dir, entry,
+                                            monkeypatch):
     """r16 verdict #1: the sub-advisory AQE initial-width decision lives
     in the ENGINE (tuning.apply_plan_width, applied by engine.run_query
     and by every declared gate builder), not in the bench harness — a
@@ -809,7 +811,9 @@ def test_plan_width_decided_at_engine_layer(spark, sf_dir, entry):
         assert spark.conf.get(tuning.WIDE_INITIAL_KEY) == '64'
         # a scan past base x per-task target keeps the wide initial (the
         # measured decade rule for real shuffles)
-        tuning.apply_plan_width(lineitem, bytes_per_partition=64)
+        with monkeypatch.context() as m:
+            m.setattr(tuning, 'BYTES_PER_PARTITION', 64)
+            tuning.apply_plan_width(lineitem)
         assert spark.conf.get(key) == '64'
         # declared gate builders apply the same decision at build time
         entry.queries()['window_running_sum'](spark, sf_dir)

@@ -232,7 +232,7 @@ def test_stream_classify_matches_batch(spark, tmp_path, sf_dir):
     try:
         got = sorted(map(tuple, spark.table('clf_sink').collect()))
         want = sorted(map(tuple,
-                          classifier_score(docs, w, impl='join').collect()))
+                          classifier_score(docs, w).collect()))
         assert got == want
         assert all(r[0] != 990002 for r in got)
     finally:

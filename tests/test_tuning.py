@@ -25,7 +25,7 @@ def test_advisor_scales_with_bytes(spark):
     assert advise_shuffle_partitions(spark, big, expansion=2.0) == \
         max(cur, 2000)
     # capped (runaway-estimate backstop)
-    assert advise_shuffle_partitions(spark, 1 << 60, cap=4096) == 4096
+    assert advise_shuffle_partitions(spark, 1 << 60) == 1 << 20
 
 
 def test_advisor_allow_below_floors_small_streams(spark):

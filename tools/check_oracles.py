@@ -64,6 +64,7 @@ def main():
     spark = (SparkSession.builder.master('local[8]')
              .config('spark.sql.shuffle.partitions', '8')
              .config('spark.ui.enabled', 'false')
+             .config('spark.ui.showConsoleProgress', 'false')
              .config('spark.driver.memory', '8g')
              .getOrCreate())
     con = duckdb.connect()

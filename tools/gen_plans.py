@@ -26,7 +26,7 @@ PICKS = [
     ('text_repetition', 'Gopher repetition filters: pure per-doc projection — one corpus scan, no shuffle; staged multi-referenced aliases keep the tokenizer and each gram fold evaluated once (CollapseProject would re-inline them).'),
     ('dedup_lines', 'Corpus duplicate-line removal: line digests (never text) shuffle into the partial/final count; the frequent set broadcasts into the marking join; one reconstruction shuffle on doc_id; two corpus scans total.'),
     ('sample_temperature', 'Temperature mixture sampling: one tiny counting aggregation (c_min via a window over the counts, not a second corpus agg) broadcast back onto a stateless filter — the corpus is never shuffled.'),
-    ('sim_ann_pq', 'PQ ANN (encoder=arrow default): the ADC sweep is ONE fused Arrow stage on the corpus scan (encode + score + per-batch shortlist prune); the shortlist broadcasts back into the float rescore scan — two corpus scans, no corpus shuffle.'),
+    ('sim_ann_pq', 'PQ ANN (broadcast_queries default): the ADC sweep is ONE fused Arrow stage on the corpus scan (encode + score + per-batch shortlist prune); the shortlist broadcasts back into the float rescore scan — two corpus scans, no corpus shuffle.'),
     ('pipeline_training_data', 'Composed training-data pipeline with stage materialization: survivor + canonical frames persisted (InMemoryTableScan reuse), quality filter decided in-scan — ≤2 raw corpus FileScans (was 5), ≤8 distinct shuffles, 0 cartesian, 0 Python stages.'),
     ('join_asof', 'As-of join via union-and-carry-forward: ONE shuffle on the by-key feeds a single per-key window (last-non-null carry); no range join, no nested loop, never a cross product.'),
     ('quality_classifier', 'Hashed-feature LR scoring (round-13 shape): per-doc bucket counts computed IN-ROW (sorted-bucket run-length transforms in the scan), so the corpus reaches the per-doc aggregation with zero prior shuffles; the dim+1-row weight table broadcasts. One real corpus Exchange on the whole score path.'),
