@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import rbql_spark  # noqa: F401  (repo-local package)
+from rbql_spark import tuning
 from rbql_spark.api import query_dataframe
 from rbql_spark.binding import TableHandle
 from rbql_spark.engine import EngineOptions
@@ -179,12 +180,6 @@ def _cached_ivf_centroids(spark: SparkSession, sf_dir: str, quantizer: str,
         _json.dump(cent, f)
     os.replace(tmp, path)
     return cent
-
-
-def _dir_bytes(path):
-    # source size for the drain helpers' partition advisor
-    from rbql_spark.tuning import dir_bytes
-    return dir_bytes(path)
 
 
 def _stream_replay_dir(spark: SparkSession, sf_dir: str, name: str,
@@ -558,7 +553,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                      .agg(F.max('value').alias('mval')))
         stream = read_event_stream(spark, tmp, max_files_per_trigger=1)
         enriched = stream_asof_enrich(stream, markers)
-        drained = run_stream_to_parquet(enriched, 'rbql_stream_asof_gate', input_bytes=_dir_bytes(tmp))
+        drained = run_stream_to_parquet(enriched, 'rbql_stream_asof_gate', input_bytes=tuning.dir_bytes(tmp))
         return drained.select(
             'user_id', 'ts', 'event_id', 'value', 'mval_r', 'ts_r')
     q['streaming_asof'] = _streaming_asof
@@ -574,7 +569,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                                  ['event_id % 2 = 0', 'event_id % 2 = 1'])
         stream = read_event_stream(spark, tmp, max_files_per_trigger=1)
         agg = windowed_counts(stream, width='6 hours', watermark='1 hour')
-        drained = run_stream_to_parquet(agg, 'rbql_stream_gate', input_bytes=_dir_bytes(tmp))
+        drained = run_stream_to_parquet(agg, 'rbql_stream_gate', input_bytes=tuning.dir_bytes(tmp))
         # round the float sum for cross-engine comparability (append mode
         # emits exactly the windows whose end passed the final watermark —
         # the batch-SQL oracle reproduces that set with a HAVING filter)
@@ -596,7 +591,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                                  ['event_id % 2 = 0', 'event_id % 2 = 1'])
         stream = read_event_stream(spark, tmp, max_files_per_trigger=1)
         sess = session_counts(stream, gap='30 minutes', watermark='1 hour')
-        drained = run_stream_to_parquet(sess, 'rbql_stream_session_gate', input_bytes=_dir_bytes(tmp))
+        drained = run_stream_to_parquet(sess, 'rbql_stream_session_gate', input_bytes=tuning.dir_bytes(tmp))
         return drained.select('user_id', 'session_start', 'n_events')
     q['streaming_session_counts'] = _streaming_sessions
 
@@ -619,7 +614,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # an empty frame, so the trailing zero-row batch (~0.9 s of state
         # open/commit, r17 measured) contributes no output rows
         sq = run_stream_to_memory(totals, qname, output_mode='update',
-                                  input_bytes=_dir_bytes(tmp),
+                                  input_bytes=tuning.dir_bytes(tmp),
                                   final_no_data_batch=False)
         sq.stop()
         w = Window.partitionBy('user_id').orderBy(F.col('n_events').desc())
@@ -654,7 +649,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # final_no_data_batch=False: dropDuplicates emits on arrival; the
         # trailing zero-row batch only evicts expired keys (r17)
         drained = run_stream_to_parquet(dd, 'rbql_stream_dedup_gate',
-                                        input_bytes=_dir_bytes(tmp),
+                                        input_bytes=tuning.dir_bytes(tmp),
                                         final_no_data_batch=False)
         return drained.select(
             'event_id', 'ts', 'user_id', 'event_type',
@@ -686,7 +681,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # per-task shuffle bytes hold constant from sf10 upward.
         # final_no_data_batch=False: timeout branch emits nothing (r17)
         sq = run_stream_to_memory(pairs, qname, output_mode='update',
-                                  input_bytes=_dir_bytes(tmp),
+                                  input_bytes=tuning.dir_bytes(tmp),
                                   shuffle_expansion=140.0,
                                   final_no_data_batch=False)
         sq.stop()
@@ -718,7 +713,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # final_no_data_batch=False: update-mode agg emits only changed keys;
         # the trailing zero-row batch changes none (it only evicts state)
         sq = run_stream_to_memory(flagged, qname, output_mode='update',
-                                  input_bytes=_dir_bytes(tmp),
+                                  input_bytes=tuning.dir_bytes(tmp),
                                   final_no_data_batch=False)
         sq.stop()
         w = Window.partitionBy('doc_id', 'bench_id') \
@@ -753,7 +748,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # final_no_data_batch=False: update-mode agg, trailing batch
         # only evicts state (r17)
         sq = run_stream_to_memory(flagged, qname, output_mode='update',
-                                  input_bytes=_dir_bytes(tmp),
+                                  input_bytes=tuning.dir_bytes(tmp),
                                   final_no_data_batch=False)
         sq.stop()
         w = Window.partitionBy('doc_id') \
@@ -781,7 +776,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         flags = stream_quality_filter(
             stream, min_words=20, min_stopword_ratio=0.05,
             allowed_langs=['de', 'en', 'es', 'fr'])
-        drained = run_stream_to_parquet(flags, 'rbql_stream_qf_gate', input_bytes=_dir_bytes(tmp))
+        drained = run_stream_to_parquet(flags, 'rbql_stream_qf_gate', input_bytes=tuning.dir_bytes(tmp))
         return drained.select('doc_id', 'keep', 'reasons')
     q['streaming_quality_filter'] = _streaming_quality_filter
 
@@ -800,7 +795,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             read_document_stream(spark, tmp, max_files_per_trigger=1))
         flags = stream_c4_line_filter(stream, min_words_per_line=4,
                                       min_kept_lines=3)
-        drained = run_stream_to_parquet(flags, 'rbql_stream_c4_gate', input_bytes=_dir_bytes(tmp))
+        drained = run_stream_to_parquet(flags, 'rbql_stream_c4_gate', input_bytes=tuning.dir_bytes(tmp))
         return drained.select('doc_id', 'n_lines', 'n_kept',
                               'keep', 'clean_text')
     q['streaming_c4_filter'] = _streaming_c4_filter
@@ -1366,7 +1361,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         stream = read_document_stream(spark, tmp, max_files_per_trigger=1)
         return run_stream_to_parquet(stream_classify(stream, w),
                                      'rbql_stream_clf_gate',
-                                     input_bytes=_dir_bytes(tmp))
+                                     input_bytes=tuning.dir_bytes(tmp))
     q['streaming_classifier'] = _streaming_classifier
 
     def _classifier_pr_curve(spark, sf_dir):
@@ -1734,8 +1729,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # executing the returned frame gets the same plan the bench times.
     def _with_plan_width(fn):
         def wrapped(spark, sf_dir, _fn=fn):
-            from rbql_spark.tuning import apply_plan_width
-            df = apply_plan_width(_fn(spark, sf_dir))
+            df = tuning.apply_plan_width(_fn(spark, sf_dir))
             # forward attributes the gate set on itself during the call
             # (e.g. _rbql's last_telemetry for the native-coverage tests)
             wrapped.__dict__.update(_fn.__dict__)

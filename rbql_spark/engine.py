@@ -45,6 +45,7 @@ from .pyeval import PyExpr, eval_columns
 from .registry import TableRegistry
 from .rownum import attach_nr, attach_running_count
 from .translator import ExpressionTranslator, TCol, TranslationFallback
+from .tuning import apply_plan_width, one_partition, scoped_conf
 
 
 @dataclass
@@ -116,12 +117,11 @@ class StageResult:
         if not self.order_cols:
             return self.df
         if to_driver:
-            from .tuning import one_partition
             return one_partition(self.df).sortWithinPartitions(*self.order_cols)
         return self.df.orderBy(*self.order_cols)
 
-    def display_df(self, ordered: bool = False, to_driver: bool = False) -> DataFrame:
-        d = self.ordered_df(to_driver) if ordered else self.df
+    def display_df(self, ordered: bool = False) -> DataFrame:
+        d = self.ordered_df() if ordered else self.df
         names = self.out_names
         cols = self.out_cols()
         if names is None:
@@ -895,13 +895,9 @@ class StageRunner:
             # AQE would split this tiny B-only probe into 2-3 jobs
             # (shuffle-stage re-planning buys nothing at hash-map scale) —
             # run it as a single classic job
-            sess = bdf_raw.sparkSession
-            old_aqe = sess.conf.get('spark.sql.adaptive.enabled', 'true')
-            sess.conf.set('spark.sql.adaptive.enabled', 'false')
-            try:
+            with scoped_conf(bdf_raw.sparkSession,
+                             {'spark.sql.adaptive.enabled': 'false'}):
                 has_dups = dup_keys.limit(1).count() > 0
-            finally:
-                sess.conf.set('spark.sql.adaptive.enabled', old_aqe)
             if has_dups:
                 # duplicate keys are an error only when an A record references
                 # one (reference raises at lookup time): broadcast semi-join
@@ -2265,6 +2261,5 @@ def run_query(spark: SparkSession, query_text: str,
     # plan's scan bytes (r16 verdict #1: the sub-advisory width decision
     # belongs to the engine, not the bench harness)
     if result is not None:
-        from .tuning import apply_plan_width
         apply_plan_width(result.df)
     return result

@@ -340,9 +340,9 @@ def _compact_locked(spark: SparkSession, path: str, shutil) -> dict:
                 .select(*[c for c in idx.columns])
                 .write.mode('overwrite').parquet(tmp))
             survivors = spark.read.parquet(tmp)
-            with _partition_overwrite_dynamic(spark):
-                (survivors.write.mode('overwrite').partitionBy('cell')
-                          .parquet(path))
+            (survivors.write.mode('overwrite')
+                      .option('partitionOverwriteMode', 'dynamic')
+                      .partitionBy('cell').parquet(path))
             # dynamic overwrite only replaces partitions PRESENT in the
             # written frame: a cell whose rows were ALL tombstoned has
             # zero survivors, its files would outlive the write, and
@@ -358,25 +358,6 @@ def _compact_locked(spark: SparkSession, path: str, shutil) -> dict:
             shutil.rmtree(tmp, ignore_errors=True)
     shutil.rmtree(os.path.join(path, _TOMBSTONE_DIR), ignore_errors=True)
     return {'rows_removed': removed, 'cells_rewritten': cells}
-
-
-class _partition_overwrite_dynamic:
-    """Scoped spark.sql.sources.partitionOverwriteMode=dynamic: overwrite
-    replaces only the partitions present in the written frame."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        conf = self.spark.conf
-        self.prev = conf.get('spark.sql.sources.partitionOverwriteMode',
-                             'static')
-        conf.set('spark.sql.sources.partitionOverwriteMode', 'dynamic')
-
-    def __exit__(self, *exc):
-        self.spark.conf.set('spark.sql.sources.partitionOverwriteMode',
-                            self.prev)
-        return False
 
 
 def rebuild_if_imbalanced(spark: SparkSession, path: str,

@@ -687,13 +687,9 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 30,
        min over one hash partitioning (no self-join: a groupBy+join-back
        would recompute its input twice), so an alternation is one linear
        pipeline; a lazy checkpoint's convergence count is its
-       materializing action.  The iteration's shuffle partition count is
-       derived from the contracted state size (downsized only, never
-       above the session setting), since forest state is usually orders
-       of magnitude smaller than the corpus the session is tuned for.
-       That downsizing is session-scoped while the iteration runs:
-       queries submitted concurrently on the same SparkSession (other
-       threads) see the reduced setting until this function restores it.
+       materializing action.  AQE coalesces each round's shuffles to
+       the contracted state's size, which is usually orders of magnitude
+       smaller than the corpus the session is tuned for.
 
     checkpoint_dir: when set, each round's state is written as parquet to
     checkpoint_dir/round-N (reliable storage — HDFS/object store on a
@@ -815,17 +811,6 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 30,
                                                   dtype='int64')}),
             schema='doc_id long, cluster_id long')
 
-    prev_parts = spark.conf.get('spark.sql.shuffle.partitions')
-    try:
-        prev_n = int(prev_parts)
-    except (TypeError, ValueError):
-        # non-numeric setting (e.g. 'auto' on platforms with auto-optimized
-        # shuffle) — leave the session's shuffle sizing alone
-        prev_n = None
-    iter_parts = (max(1, min(prev_n, -(-n_state // 2_000_000)))
-                  if prev_n is not None else None)
-    if iter_parts is not None:
-        spark.conf.set('spark.sql.shuffle.partitions', str(iter_parts))
     try:
         from pyspark.sql import Window
         for it in range(max_iter):
@@ -862,8 +847,6 @@ def dedup_clusters(pairs: DataFrame, max_iter: int = 30,
             if converged:
                 break
     finally:
-        if iter_parts is not None:
-            spark.conf.set('spark.sql.shuffle.partitions', prev_parts)
         if checkpoint_dir:
             # superseded rounds are dead weight; the final round backs the
             # lazily-returned result and must stay

@@ -11,6 +11,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from .tuning import wide_partition_num
+
 
 def build_session(app_name: str = 'rbql-spark',
                   master: str | None = None,
@@ -29,21 +31,10 @@ def build_session(app_name: str = 'rbql-spark',
       partition.  At 100 TB shuffled that is O(500k) partitions — set it
       high and let AQE coalesce, never the reverse.
     - ``spark.sql.adaptive.coalescePartitions.initialPartitionNum`` +
-      ``advisoryPartitionSizeInBytes``: the ENGINE'S encoding of the
-      measured decade rule (r14 sf10 audit, SCALING.md: per-task bytes,
-      not partition count, is the cross-scale invariant).  Every batch
-      shuffle starts at 16× the base count and AQE coalesces down to the
-      64 MB advisory — so a data decade automatically lands
-      proportionally more post-shuffle partitions with NO per-operator
-      pinning; small inputs coalesce back to a handful.  Width chosen by
-      A/B (NOTES_r15.md): 16×/512 costs ~0.7–1.1 s of map-side
-      shuffle-file overhead on three second-scale sf0.1 window queries
-      but is the best setting everywhere else — including the BEST sf10
-      bpe_vocab time (90 s, beating even a hand-pinned 128 session) —
-      while 4×/128 pathologically slowed the broadcast-model scoring
-      family ~2.5× (persisted repartition('doc_id') frames pinned at the
-      uncoalesced width feed per-partition Arrow workers).  Streaming
-      stateful shuffles are not
+      ``advisoryPartitionSizeInBytes``: every batch shuffle starts at
+      ``tuning.wide_partition_num`` of the base count (the measured
+      decade rule; the width's A/B rationale is there) and AQE coalesces
+      down to the 64 MB advisory.  Streaming stateful shuffles are not
       AQE re-planned — the drain helpers scope the base count from the
       source's input bytes instead (rbql_spark.tuning).
     - ``spark.sql.files.maxPartitionBytes``: scan-side split size; 128 MB
@@ -67,11 +58,7 @@ def build_session(app_name: str = 'rbql-spark',
          .config('spark.sql.adaptive.coalescePartitions.enabled', 'true')
          .config('spark.sql.adaptive.skewJoin.enabled', 'true')
          .config('spark.sql.adaptive.coalescePartitions.initialPartitionNum',
-                 str(max(shuffle_partitions * 16, 256)))
-         # stamp the designed wide width so tuning.apply_plan_width can
-         # restore it after planning a sub-advisory query at base width
-         .config('spark.rbql.wideInitialPartitionNum',
-                 str(max(shuffle_partitions * 16, 256)))
+                 str(wide_partition_num(shuffle_partitions)))
          .config('spark.sql.adaptive.advisoryPartitionSizeInBytes', '64m')
          .config('spark.sql.shuffle.partitions', str(shuffle_partitions))
          .config('spark.sql.files.maxPartitionBytes', max_partition_bytes)

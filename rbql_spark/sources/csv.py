@@ -906,6 +906,8 @@ def _write_header(f, header, delim, policy, encoding, warnings):
     hdr = [_normalize_out_value(v, delim, warnings) for v in header]
     if policy in ('quoted', 'quoted_rfc'):
         hdr = [_quote_field(x, delim) for x in hdr]
+    elif any(delim in x for x in hdr):   # policy 'simple', as the row loop
+        warnings.add('Some output fields contain separator')
     f.write((delim.join(hdr) + '\n').encode(encoding))
 
 
@@ -976,52 +978,19 @@ def _write_csv_distributed(result, output_path, delim, policy, encoding,
     return True
 
 
-def _write_csv_vectorized(result, output_path, delim, policy, encoding,
-                          warnings) -> bool:
-    """Pandas-vectorized serialization fast path (no ragged trim, no
-    int-preservation flags, scalar columns, policy quoted/simple).
-    Returns False when the shape needs the exact row loop."""
-    if getattr(result, 'trim_width_col', None) is not None:
-        return False
-    if result.int_flag_cols:
-        return False
-    if policy not in ('quoted', 'quoted_rfc', 'simple'):
-        return False
-    df = result.display_df(ordered=True, to_driver=True)
-    if not all(isinstance(f.dataType, _sink_scalar_types()) for f in df.schema.fields):
-        return False
-    try:
-        df.sparkSession.conf.set('spark.sql.execution.arrow.pyspark.enabled', 'true')
-    except Exception:
-        pass
-    pdf = df.toPandas()
-    ftypes = [f.dataType for f in df.schema.fields]
-    serialized, n_null, n_sep = _serialize_pdf(pdf, ftypes, delim, policy)
-    if n_null:
-        warnings.add('None values in output were replaced by empty strings')
-    if n_sep:
-        warnings.add('Some output fields contain separator')
-    body = '\n'.join(serialized.tolist())
-    with open(output_path, 'wb') as f:
-        _write_header(f, result.out_names, delim, policy, encoding, warnings)
-        if body:
-            f.write((body + '\n').encode(encoding))
-    return True
-
-
 def write_csv(result, output_path: str, delim: str = ',', policy: str = 'quoted',
               encoding: str = 'utf-8') -> list[str]:
     """Stream the (ordered) result to one CSV file with the reference's
     output-normalization rules (rbql_csv.py:146-315): ragged-width trimming,
     int-preserving aggregates, None→'' with a warning, policy-aware quoting.
-    Driver-side single-file sink (the reference CLI shape); use
-    df.write.csv for distributed many-file output."""
+    One-file sink (the reference CLI shape): a result estimated at
+    ``_DISTRIBUTED_SINK_MIN_BYTES`` or more is serialized on the executors,
+    a smaller one by the row loop below on the driver; use df.write.csv
+    for distributed many-file output."""
     from ..api import collect_result_rows
     warnings: set[str] = set()
     header = result.out_names
     if _write_csv_distributed(result, output_path, delim, policy, encoding, warnings):
-        return sorted(warnings)
-    if _write_csv_vectorized(result, output_path, delim, policy, encoding, warnings):
         return sorted(warnings)
 
     def fmt_row(vals) -> str:

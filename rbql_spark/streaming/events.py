@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..tuning import advise_shuffle_partitions, scoped_conf
+
 EVENT_SCHEMA = T.StructType([
     T.StructField('event_id', T.LongType()),
     T.StructField('ts', T.TimestampType()),
@@ -72,30 +74,16 @@ def _await_drain(q, query_name: str) -> None:
             query_name, timeout))
 
 
-@__import__('contextlib').contextmanager
-def _scoped_no_data_batches(spark, enabled: bool):
-    """Scope ``spark.sql.streaming.noDataMicroBatches.enabled`` around a
-    ``start()`` (the query captures a cloned conf at start; restoring
-    immediately after is race-free for the started query)."""
-    key = 'spark.sql.streaming.noDataMicroBatches.enabled'
-    if enabled:
-        yield
-        return
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, 'false')
-    try:
-        yield
-    finally:
-        if prev is None:
-            try:
-                spark.conf.unset(key)
-            except Exception:
-                pass
-        else:
-            spark.conf.set(key, prev)
+def _drain_conf(spark, input_bytes, shuffle_expansion, final_no_data_batch):
+    """The session settings a drain's ``start()`` runs under, scoped to it
+    (the query captures a cloned conf at start): the state-store width
+    advised from the source's bytes, and no trailing no-data batch when
+    ``final_no_data_batch`` is False."""
+    settings = {'spark.sql.shuffle.partitions': advise_shuffle_partitions(
+        spark, input_bytes, expansion=shuffle_expansion, allow_below=True)}
+    if not final_no_data_batch:
+        settings['spark.sql.streaming.noDataMicroBatches.enabled'] = 'false'
+    return scoped_conf(spark, settings)
 
 
 def run_stream_to_parquet(stream_df: DataFrame, query_name: str,
@@ -129,22 +117,16 @@ def run_stream_to_parquet(stream_df: DataFrame, query_name: str,
     import shutil
     import tempfile
 
-    from ..tuning import advise_shuffle_partitions, scoped_shuffle_partitions
-
     base = os.path.join(tempfile.gettempdir(),
                         'rbql_drain_{}_{}'.format(query_name, os.getpid()))
     shutil.rmtree(base, ignore_errors=True)
     out = os.path.join(base, 'out')
-    spark = stream_df.sparkSession
-    n_parts = advise_shuffle_partitions(spark, input_bytes,
-                                        expansion=shuffle_expansion,
-                                        allow_below=True)
     # final_no_data_batch: see run_stream_to_memory — only pass False
     # for operators that emit rows strictly on data arrival (dedup,
     # stateless filters), NEVER for append-mode window/session
     # aggregations, whose final windows emit in that trailing batch
-    with scoped_shuffle_partitions(spark, n_parts), \
-            _scoped_no_data_batches(spark, final_no_data_batch):
+    with _drain_conf(stream_df.sparkSession, input_bytes, shuffle_expansion,
+                     final_no_data_batch):
         q = (stream_df.writeStream
              .format('parquet')
              .option('path', out)
@@ -187,14 +169,8 @@ def run_stream_to_memory(stream_df: DataFrame, query_name: str,
     append mode: their final windows only EMIT in that trailing batch.
     The conf is scoped to this ``start()`` — streaming queries capture
     a cloned session conf at start, so nothing leaks."""
-    from ..tuning import advise_shuffle_partitions, scoped_shuffle_partitions
-
-    spark = stream_df.sparkSession
-    n_parts = advise_shuffle_partitions(spark, input_bytes,
-                                        expansion=shuffle_expansion,
-                                        allow_below=True)
-    with scoped_shuffle_partitions(spark, n_parts), \
-            _scoped_no_data_batches(spark, final_no_data_batch):
+    with _drain_conf(stream_df.sparkSession, input_bytes, shuffle_expansion,
+                     final_no_data_batch):
         q = (stream_df.writeStream
              .format('memory')
              .queryName(query_name)

@@ -14,20 +14,26 @@ places:
 
 * **Batch** (aggregations, joins): sessions built by
   :func:`rbql_spark.session.build_session` set AQE's
-  ``coalescePartitions.initialPartitionNum`` HIGH and
+  ``coalescePartitions.initialPartitionNum`` to
+  :func:`wide_partition_num` of the base width and
   ``advisoryPartitionSizeInBytes`` to the per-task byte target, and
   every query builder calls :func:`apply_plan_width`, which plans a
   sub-advisory input at the session base width instead.
 * **Streaming** (stateful drains — AQE does not re-plan streaming
   shuffles, and the state-store partition count is pinned by
   ``spark.sql.shuffle.partitions`` at the query's FIRST start): the
-  drain helpers (:mod:`rbql_spark.streaming.events`) scope the session
-  conf to :func:`advise_shuffle_partitions` of the source's input
-  bytes for the duration of the ``start()``.
+  drain helpers (:mod:`rbql_spark.streaming.events`) set it to
+  :func:`advise_shuffle_partitions` of the source's input bytes with
+  :func:`scoped_conf` for the duration of the ``start()``.
 * **Scans**: :func:`scan_partition_estimate` predicts a narrow scan's
   partition count from its bytes (for ``ops.dedup.spread_partitions``),
   and :func:`one_partition` gathers a driver-bound result into one
   partition without a needless exchange.
+
+This is the only module of the package that writes session conf:
+:func:`scoped_conf` (set for a block, then restore) and
+:func:`apply_plan_width`'s one persistent ``initialPartitionNum`` set.
+Other per-call settings go through writer options or the plan.
 """
 
 from __future__ import annotations
@@ -99,14 +105,28 @@ def advise_shuffle_partitions(spark, input_bytes: int | None,
     return max(cur, min(cap, want))
 
 
-# Session-conf stash of the DESIGNED wide AQE initial width (set by
-# build_session; apply_plan_width falls back to the live conf value the
-# first time it runs on a foreign session).  Without the stash, applying
-# the base width for one small query would destroy the knowledge of the
-# wide setting for every later large query — the conf itself is the only
-# cross-query storage a SparkSession offers.
-WIDE_INITIAL_KEY = 'spark.rbql.wideInitialPartitionNum'
 _INITIAL_KEY = 'spark.sql.adaptive.coalescePartitions.initialPartitionNum'
+
+
+def wide_partition_num(base: int) -> int:
+    """AQE's initial shuffle width for a session whose base width
+    (``spark.sql.shuffle.partitions``) is ``base``: 16× the base, at
+    least 256.
+
+    This is the engine's encoding of the measured decade rule (r14 sf10
+    audit, SCALING.md: per-task bytes, not partition count, is the
+    cross-scale invariant).  Every large batch shuffle starts this wide
+    and AQE coalesces down to the 64 MB advisory, so a data decade lands
+    proportionally more post-shuffle partitions with no per-operator
+    pinning, while small inputs coalesce back to a handful.  Width chosen
+    by A/B (NOTES_r15.md): 16×/512 costs ~0.7–1.1 s of map-side
+    shuffle-file overhead on three second-scale sf0.1 window queries but
+    is the best setting everywhere else, including the best sf10
+    bpe_vocab time (90 s, beating a hand-pinned 128 session), while
+    4×/128 slowed the broadcast-model scoring family ~2.5× (persisted
+    ``repartition('doc_id')`` frames pinned at the uncoalesced width feed
+    per-partition Arrow workers)."""
+    return max(16 * base, 256)
 
 
 def apply_plan_width(df):
@@ -120,20 +140,18 @@ def apply_plan_width(df):
     BINARY — when 4 × input scan bytes (the shuffle expansion every
     builder assumes) fits within ``base partitions × per-task target``
     (even the base width over-partitions this shuffle), plan at the
-    session base; otherwise keep the session's
-    configured wide initial (the measured decade rule for large
-    shuffles).  Unknown sizes and plans carrying an explicit
-    ``repartition(expr)`` keep the wide width — the safe direction at
-    scale (and the r15 A/B direction for repartition-pinned Arrow
-    stages).
+    session base; otherwise at :func:`wide_partition_num` of the base
+    (the measured decade rule for large shuffles).  Unknown sizes and
+    plans carrying an explicit ``repartition(expr)`` get the wide width —
+    the safe direction at scale (and the r15 A/B direction for
+    repartition-pinned Arrow stages).  A session that never set
+    ``initialPartitionNum`` (AQE starts at the base width) is left alone.
 
     The set is PERSISTENT, not scoped: execution happens later, in the
     caller's hands (a noop write, a collect, a sink).  Each query builder
     re-decides for its own plan, so sequential workloads always execute
-    at their own width; the designed wide value survives in
-    ``WIDE_INITIAL_KEY``.  (Session conf is global — concurrent builders
-    on one session race exactly as the streaming drain scoping always
-    has; pin per-thread sessions for that regime.)
+    at their own width.  (Session conf is global — concurrent builders
+    on one session race; pin per-thread sessions for that regime.)
 
     Returns ``df`` unchanged, for chaining.
     """
@@ -142,18 +160,9 @@ def apply_plan_width(df):
         base = int(spark.conf.get('spark.sql.shuffle.partitions'))
     except Exception:
         return df
-    try:
-        wide = int(spark.conf.get(WIDE_INITIAL_KEY))
-    except Exception:
-        try:
-            wide = int(spark.conf.get(_INITIAL_KEY))
-        except Exception:
-            return df
-        # first sighting on a session build_session didn't stamp: the
-        # live value IS the designed wide width — stash it
-        spark.conf.set(WIDE_INITIAL_KEY, str(wide))
-    if wide <= base:
+    if spark.conf.get(_INITIAL_KEY, None) is None:
         return df
+    wide = wide_partition_num(base)
     # Everything below reads the ANALYZED plan, not the optimized one:
     # analysis already ran eagerly when the DataFrame was built (~1 ms,
     # cached), while forcing optimizedPlan here runs a full optimizer
@@ -167,26 +176,19 @@ def apply_plan_width(df):
     # analyzed estimate is larger, which only errs toward keeping the
     # wide width — the safe direction at scale.
     try:
-        analyzed = df._jdf.queryExecution().analyzed()
-    except Exception:
-        spark.conf.set(_INITIAL_KEY, str(wide))
-        return df
-    nbytes = leaf_bytes(df)
-    try:
         # keyed repartitions (RepartitionByExpression) pin Arrow-stage
         # layouts the r15 A/B showed prefer the wide width; round-robin
         # repartition(n) (spread_partitions) pins its OWN exchange width
         # explicitly, so the initial-width decision still applies to
         # the aggregations above it (r17: dedup_lines/spans freq build)
-        if _has_node(analyzed, 'RepartitionByExpression'):
-            nbytes = None
+        keyed = _has_node(df._jdf.queryExecution().analyzed(),
+                          'RepartitionByExpression')
+        nbytes = None if keyed else leaf_bytes(df)
     except Exception:
         nbytes = None
-    if nbytes is None:
-        spark.conf.set(_INITIAL_KEY, str(wide))
-        return df
-    want = math.ceil(nbytes * 4 / BYTES_PER_PARTITION)
-    spark.conf.set(_INITIAL_KEY, str(base if want <= base else wide))
+    small = (nbytes is not None
+             and math.ceil(nbytes * 4 / BYTES_PER_PARTITION) <= base)
+    spark.conf.set(_INITIAL_KEY, str(base if small else wide))
     return df
 
 
@@ -216,22 +218,6 @@ _NARROW_NODES = ('Project', 'Filter', 'SubqueryAlias', 'LogicalRelation',
                  'View', 'DataSourceV2Relation', 'DataSourceV2ScanRelation')
 
 
-def _parse_size(s: str) -> int | None:
-    """Spark size-conf string ('134217728', '128m', '64MB') → bytes."""
-    try:
-        t = s.strip().lower()
-        mult = 1
-        for suf, m in (('kb', 1 << 10), ('mb', 1 << 20), ('gb', 1 << 30),
-                       ('k', 1 << 10), ('m', 1 << 20), ('g', 1 << 30),
-                       ('b', 1)):
-            if t.endswith(suf):
-                t, mult = t[:-len(suf)], m
-                break
-        return int(float(t) * mult)
-    except Exception:
-        return None
-
-
 def scan_partition_estimate(df) -> tuple[int | None, int | None]:
     """(estimated scan partition count, leaf bytes) for a NARROW chain
     over file relations — (None, None) when the frame's partitioning
@@ -259,11 +245,8 @@ def scan_partition_estimate(df) -> tuple[int | None, int | None]:
         nbytes = leaf_bytes(df)
         if nbytes is None:
             return None, None
-        mpb = _parse_size(df.sparkSession.conf.get(
-            'spark.sql.files.maxPartitionBytes', '134217728'))
-        if not mpb:
-            return None, None
-        return max(1, math.ceil(nbytes / mpb)), nbytes
+        conf = df.sparkSession._jsparkSession.sessionState().conf()
+        return max(1, math.ceil(nbytes / conf.filesMaxPartitionBytes())), nbytes
     except Exception:
         return None, None
 
@@ -321,18 +304,21 @@ def one_partition(df):
 
 
 @contextlib.contextmanager
-def scoped_shuffle_partitions(spark, n: int):
-    """Set ``spark.sql.shuffle.partitions`` for the duration of a block
-    (streaming ``start()`` captures the value; batch actions inside the
-    block plan with it), restoring the previous value after."""
-    key = 'spark.sql.shuffle.partitions'
+def scoped_conf(spark, settings: dict):
+    """Set each ``key: value`` of ``settings`` on the session for the
+    duration of a block, then put every key back in its prior state: its
+    old value, or unset again when it was unset before (a streaming
+    ``start()`` clones the conf, so restoring right after it is safe for
+    the started query).  Session conf is shared by every thread, so two
+    threads scoping the same key at once can restore the wrong value."""
+    prev = {k: spark.conf.get(k, None) for k in settings}
     try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, str(int(n)))
-    try:
+        for k, v in settings.items():
+            spark.conf.set(k, str(v))
         yield
     finally:
-        if prev is not None:
-            spark.conf.set(key, prev)
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -258,8 +258,10 @@ def test_comment_regex_honored_on_distributed_utf8_path(spark, tmp_path):
 
 
 def test_write_csv_nullable_int_not_floatified(spark, tmp_path):
-    # Arrow hands nullable int64 to pandas as float64; serialization must
-    # go through the Spark type or ints come out as '1.0'
+    # a nullable int column must print as an int ('1', not '1.0') and a
+    # null as '' with the warning: the row loop reads exact Python ints
+    # through Arrow, and the distributed sink formats by the Spark type
+    # because pandas holds nullable int64 as float64
     from rbql_spark.api import query_dataframe
     from rbql_spark.sources.csv import write_csv
     df = spark.createDataFrame([(1, 'a'), (None, 'b')], 'n long, s string')
@@ -270,7 +272,7 @@ def test_write_csv_nullable_int_not_floatified(spark, tmp_path):
     assert 'None values in output were replaced by empty strings' in w
 
 
-def test_write_csv_distributed_matches_vectorized(spark, tmp_path, monkeypatch):
+def test_write_csv_distributed_matches_row_loop(spark, tmp_path, monkeypatch):
     import rbql_spark.sources.csv as C
     from rbql_spark.api import query_dataframe
 
@@ -283,19 +285,35 @@ def test_write_csv_distributed_matches_vectorized(spark, tmp_path, monkeypatch):
             "case when id % 11 = 0 then null else id * 3 end AS n")
         return query_dataframe(spark, 'SELECT *', df)
 
-    out_v = str(tmp_path / 'vec.csv')
+    out_r = str(tmp_path / 'rows.csv')
     monkeypatch.setattr(C, '_DISTRIBUTED_SINK_MIN_BYTES', 1 << 62)
-    w_v = C.write_csv(make_result(), out_v)
+    w_r = C.write_csv(make_result(), out_r)
 
     out_d = str(tmp_path / 'dist.csv')
     monkeypatch.setattr(C, '_DISTRIBUTED_SINK_MIN_BYTES', 0)
     # the distributed path must be the one that runs
-    monkeypatch.setattr(C, '_write_csv_vectorized',
-                        lambda *a, **k: (_ for _ in ()).throw(AssertionError('fallback used')))
+    import rbql_spark.api as A
+    monkeypatch.setattr(A, 'collect_result_rows',
+                        lambda *a, **k: (_ for _ in ()).throw(AssertionError('row loop used')))
     w_d = C.write_csv(make_result(), out_d)
 
-    assert open(out_d, 'rb').read() == open(out_v, 'rb').read()
-    assert w_d == w_v
+    assert open(out_d, 'rb').read() == open(out_r, 'rb').read()
+    assert w_d == w_r
+
+
+def test_write_csv_simple_header_separator_warns(spark, tmp_path, monkeypatch):
+    # policy 'simple' warns when a header field holds the separator, in
+    # both sinks
+    import rbql_spark.sources.csv as C
+    from rbql_spark.api import query_dataframe
+    df = spark.createDataFrame([(1,)], '`x;y` long')
+    for min_bytes in (1 << 62, 0):
+        monkeypatch.setattr(C, '_DISTRIBUTED_SINK_MIN_BYTES', min_bytes)
+        out = str(tmp_path / 'h{}.csv'.format(min_bytes))
+        w = C.write_csv(query_dataframe(spark, 'SELECT *', df), out,
+                        delim=';', policy='simple')
+        assert open(out).read() == 'x;y\n1\n'
+        assert w == ['Some output fields contain separator']
 
 
 # ---- read options, header and encoding checks -----------------------------

@@ -789,15 +789,13 @@ def test_plan_width_decided_at_engine_layer(spark, sf_dir, entry,
     in the ENGINE (tuning.apply_plan_width, applied by engine.run_query
     and by every declared gate builder), not in the bench harness — a
     sub-advisory API query plans at the session base width while a large
-    scan keeps the configured wide (16x) initial."""
+    scan gets the wide initial derived from the base width."""
     from rbql_spark import api, tuning
     key = tuning._INITIAL_KEY
     base = spark.conf.get('spark.sql.shuffle.partitions')
-    try:
-        spark.conf.unset(tuning.WIDE_INITIAL_KEY)
-    except Exception:
-        pass
-    spark.conf.set(key, '64')   # the designed wide initial (16x-style)
+    wide = str(tuning.wide_partition_num(int(base)))
+    assert wide == str(max(16 * int(base), 256))
+    spark.conf.set(key, '64')   # any set value turns the decision on
     try:
         lineitem = entry._t(spark, sf_dir, 'lineitem')
         # sub-advisory input (sf0.001 lineitem is kilobytes): run_query
@@ -807,20 +805,21 @@ def test_plan_width_decided_at_engine_layer(spark, sf_dir, entry,
             'SELECT a.l_orderkey, a.l_quantity WHERE a.l_quantity > 30',
             lineitem)
         assert spark.conf.get(key) == base
-        # the designed wide width survives in the stash for later queries
-        assert spark.conf.get(tuning.WIDE_INITIAL_KEY) == '64'
-        # a scan past base x per-task target keeps the wide initial (the
-        # measured decade rule for real shuffles)
+        # a scan past base x per-task target gets the wide initial (the
+        # measured decade rule for real shuffles), derived from the base
+        # width rather than remembered from an earlier setting
         with monkeypatch.context() as m:
             m.setattr(tuning, 'BYTES_PER_PARTITION', 64)
             tuning.apply_plan_width(lineitem)
-        assert spark.conf.get(key) == '64'
+        assert spark.conf.get(key) == wide
         # declared gate builders apply the same decision at build time
         entry.queries()['window_running_sum'](spark, sf_dir)
         assert spark.conf.get(key) == base
     finally:
         spark.conf.unset(key)
-        spark.conf.unset(tuning.WIDE_INITIAL_KEY)
+    # a session that never set the initial width is left alone
+    tuning.apply_plan_width(lineitem)
+    assert spark.conf.get(key, None) is None
 
 
 def _small_csv(tmp_path, n=2000):

@@ -1,9 +1,11 @@
 """Input-size-based shuffle-partition advisor (r14 verdict #6)."""
 import os
 
+import pytest
+
 from rbql_spark.tuning import (
     BYTES_PER_PARTITION, advise_shuffle_partitions, dir_bytes, leaf_bytes,
-    scoped_shuffle_partitions,
+    scoped_conf,
 )
 
 
@@ -43,11 +45,21 @@ def test_advisor_allow_below_floors_small_streams(spark):
     assert advise_shuffle_partitions(spark, big, allow_below=True) == 1000
 
 
-def test_scoped_shuffle_partitions_restores(spark):
+def test_scoped_conf_restores(spark):
     key = 'spark.sql.shuffle.partitions'
+    unset = 'spark.sql.streaming.noDataMicroBatches.enabled'
     prev = spark.conf.get(key)
-    with scoped_shuffle_partitions(spark, 17):
+    assert spark.conf.get(unset, None) is None
+    with scoped_conf(spark, {key: 17, unset: 'false'}):
         assert spark.conf.get(key) == '17'
+        assert spark.conf.get(unset) == 'false'
+    assert spark.conf.get(key) == prev
+    # a key that was unset is unset again, not set to its default
+    assert spark.conf.get(unset, None) is None
+    # the block's error propagates and the keys are still restored
+    with pytest.raises(ValueError):
+        with scoped_conf(spark, {key: 3}):
+            raise ValueError('boom')
     assert spark.conf.get(key) == prev
 
 

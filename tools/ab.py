@@ -10,6 +10,10 @@ Usage:
 e.g.
   python tools/ab.py rbql_spark/ops/textstats.py bm25_score_queries \
       4 text_bm25_batch dedup_exact
+
+The session has one core, one shuffle partition and 1 GB of driver memory
+(2 to 16 GB) per CPU: $SPARK_GRAFT_CPUS, or the CPUs this process may run
+on.
 """
 import importlib
 import importlib.util
@@ -41,13 +45,16 @@ def main():
     relpath, fns, reps = sys.argv[1], sys.argv[2].split(','), int(sys.argv[3])
     gates = sys.argv[4:]
     from rbql_spark.session import build_session
-    spark = build_session(app_name='ab', master='local[32]',
-                          shuffle_partitions=32, driver_memory='16g')
+    # the UI setting is read when the context starts, so it goes in
+    # through spark-submit; the session itself cannot change it
+    os.environ.setdefault('PYSPARK_SUBMIT_ARGS',
+                          '--conf spark.ui.enabled=false pyspark-shell')
+    cpus = int(os.environ.get('SPARK_GRAFT_CPUS')
+               or len(os.sched_getaffinity(0)))
+    spark = build_session(app_name='ab', master='local[{}]'.format(cpus),
+                          shuffle_partitions=cpus,
+                          driver_memory='{}g'.format(min(16, max(2, cpus))))
     spark.sparkContext.setLogLevel('ERROR')
-    try:
-        spark.conf.set('spark.ui.enabled', 'false')
-    except Exception:
-        pass
 
     import __spark_entry__ as em
     new_mod = importlib.import_module(relpath[:-3].replace('/', '.'))
