@@ -31,15 +31,6 @@ SF_DEFAULT = '/root/testdata/sf0.001'
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == 'events':
-        # events.ts is parquet TIMESTAMP(NANOS), which Spark's vectorized
-        # reader rejects; read as long and convert ns → µs with integer
-        # division (ts/1000 via doubles would lose precision at 1e18 ns).
-        spark.conf.set('spark.sql.legacy.parquet.nanosAsLong', 'true')
-        df = spark.read.parquet(os.path.join(sf_dir, 'events.parquet'))
-        if dict(df.dtypes).get('ts') in ('bigint', 'long'):
-            df = df.withColumn('ts', F.timestamp_micros(F.expr('ts div 1000')))
-        return df
     return spark.read.parquet(os.path.join(sf_dir, name + '.parquet'))
 
 

@@ -235,10 +235,6 @@ def main() -> None:
         driver_memory=os.environ.get('SPARK_GRAFT_DRIVER_MEM', '16g'),
     )
     spark.sparkContext.setLogLevel('ERROR')
-    try:
-        spark.conf.set('spark.ui.enabled', 'false')
-    except Exception:
-        pass
 
     import __spark_entry__ as entrymod
     queries = entrymod.queries()

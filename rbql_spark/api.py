@@ -328,7 +328,7 @@ def query_csv(spark: SparkSession, query: str, input_path: str,
                       comment_regex=comment_regex)
     csv_opts = {'delim': delim, 'policy': policy, 'encoding': encoding,
                 'with_headers': with_headers, 'comment_prefix': comment_prefix,
-                'strip_whitespaces': strip_whitespaces}
+                'comment_regex': comment_regex, 'strip_whitespaces': strip_whitespaces}
     reg = PathRegistry(main_table_dir=os.path.dirname(os.path.abspath(input_path)),
                        csv_options=csv_opts, extra_dirs=extra_search_dirs)
     opts = _engine_options(options, dialect, user_init_code)

@@ -16,6 +16,7 @@ map rbql_main.py:34-40; autodetection rbql_main.py:128-166).
 from __future__ import annotations
 
 import argparse
+import itertools
 import os
 import sys
 
@@ -43,54 +44,21 @@ def interpret_out_format(fmt: str) -> tuple[str, str]:
     return (',', 'quoted') if fmt == 'csv' else ('\t', 'simple')
 
 
-def _sample_lines(path: str, encoding: str, comment_prefix, comment_regex,
-                  n: int = 10) -> list[str]:
-    import re as _re
-    crgx = _re.compile(comment_regex) if comment_regex else None
-    out: list[str] = []
-    try:
-        with open(path, 'r', encoding=encoding, newline='') as f:
-            for raw in f:
-                line = raw.rstrip('\r\n')
-                if line.startswith('﻿'):
-                    line = line[1:]
-                if comment_prefix and line.startswith(comment_prefix):
-                    continue
-                if crgx is not None and crgx.search(line) is not None:
-                    continue
-                out.append(line)
-                if len(out) >= n:
-                    break
-    except OSError:
-        pass
-    return out
-
-
 def autodetect_dialect(path: str, encoding: str, comment_prefix=None,
                        comment_regex=None) -> tuple[str | None, str | None]:
     """First candidate dialect under which every sampled line splits cleanly
     into the same >=2 field count wins (reference is_delimited_table +
     autodetect_delim_policy, rbql_main.py:128-166)."""
-    from .sources.csv import split_quoted
-    lines = _sample_lines(path, encoding, comment_prefix, comment_regex)
+    from .sources.csv import _split_line
+    lines = [r[0] for r in _split_preview_records(path, '', 'monocolumn', encoding,
+                                                  comment_prefix, False, comment_regex)]
     if len(lines) >= 2:
         for delim, policy in [('\t', 'simple'), (',', 'quoted'),
                               (';', 'quoted'), ('|', 'simple')]:
-            counts = []
-            ok = True
-            for ln in lines:
-                if policy == 'quoted':
-                    fields, warn = split_quoted(ln, delim)
-                    if warn:
-                        ok = False
-                        break
-                else:
-                    fields = ln.split(delim)
-                if len(fields) < 2:
-                    ok = False
-                    break
-                counts.append(len(fields))
-            if ok and len(set(counts)) == 1:
+            splits = [_split_line(ln, delim, policy) for ln in lines]
+            widths = {len(fields) for fields, _ in splits}
+            if not any(warn for _, warn in splits) and len(widths) == 1 \
+                    and widths.pop() >= 2:
                 return delim, policy
     ext = os.path.splitext(path)[1].lower()
     if ext == '.csv':
@@ -102,29 +70,15 @@ def autodetect_dialect(path: str, encoding: str, comment_prefix=None,
 
 def _split_preview_records(path, delim, policy, encoding, comment_prefix,
                            strip_whitespaces, comment_regex, n=10):
-    """First n records for the interactive preview (driver-side head read)."""
-    from .sources.csv import _record_split_rfc, split_quoted, split_whitespace
-    if policy == 'quoted_rfc':
-        with open(path, 'rb') as f:
-            head = f.read(1 << 16).decode(encoding, errors='replace')
-        try:
-            recs = _record_split_rfc(head, delim, comment_prefix=comment_prefix,
-                                     comment_regex=comment_regex)[:n]
-        except Exception:
-            recs = []
-    else:
-        lines = _sample_lines(path, encoding, comment_prefix, comment_regex, n)
-        if policy == 'simple':
-            recs = [ln.split(delim) for ln in lines]
-        elif policy == 'whitespace':
-            recs = [split_whitespace(ln) for ln in lines]
-        elif policy == 'monocolumn':
-            recs = [[ln] for ln in lines]
-        else:
-            recs = [split_quoted(ln, delim)[0] for ln in lines]
-    if strip_whitespaces:
-        recs = [[f.strip() for f in r] for r in recs]
-    return recs
+    """First n records of a file, split as the reader splits them; none when
+    the file cannot be read or decoded (the query then reports why)."""
+    from .sources.csv import head_records
+    try:
+        return [fields for fields, _, _ in itertools.islice(
+            head_records(path, delim, policy, encoding, comment_prefix,
+                         comment_regex, strip_whitespaces), n)]
+    except (OSError, UnicodeDecodeError):
+        return []
 
 
 _COLORS = ['\u001b[0m', '\u001b[31m', '\u001b[32m', '\u001b[33m',

@@ -12,15 +12,23 @@ reimplemented, not copied):
               → driver-side record assembly below 4 MB; larger files take a
                 two-pass, quote-parity-reconciled byte-range scan
 
-Encodings: utf-8 (distributed text scan) and latin-1 (binary-safe; decoded
-on the driver below 4 MB, in byte-range chunks above).  BOM stripped with a
-warning.  Ragged rows supported: rows are padded to table width, true per-row
-NF rides along in __nf_src (engine safe_get parity: missing → None).
+Encodings: utf-8 and latin-1.  A utf-8 file is checked once per file version
+before any read, so a bad byte raises the reference's decode error on every
+path.  The four line policies read both encodings through Spark's text scan
+(which ends lines at CRLF, CR or LF and drops a BOM at byte 0); latin-1
+lines are decoded from the scan's raw bytes.  Below 4 MB a latin-1 file is
+read on the driver, as is a quoted_rfc file in either encoding.  A BOM at
+the file head is stripped with a warning; one that starts a later line is
+data, as in the reference.  Headers, the CLI's dialect autodetection and
+its preview read the file head through one reader (``head_records``).
+Ragged rows supported: rows are padded to table width, true per-row NF
+rides along in __nf_src (engine safe_get parity: missing → None).
 """
 
 from __future__ import annotations
 
 import codecs
+import itertools
 import os
 import re
 
@@ -134,23 +142,20 @@ def read_csv(spark: SparkSession, path: str, delim: str = ',',
     # every option that changes which rows the width probe sees
     width_key = (path, delim, policy, encoding, with_headers, comment_prefix,
                  comment_regex, strip_whitespaces)
-    if encoding == 'latin-1' or policy == 'quoted_rfc':
-        bulk = (os.path.exists(path)
-                and os.path.getsize(path) >= _DISTRIBUTED_SCAN_MIN_BYTES)
-        if bulk and policy == 'quoted_rfc':
-            return _read_csv_rfc_distributed(spark, path, delim, encoding,
-                                             with_headers, comment_prefix,
-                                             strip_whitespaces, comment_regex,
-                                             width_key)
-        if bulk:
-            return _read_csv_latin1_distributed(spark, path, delim, policy,
-                                                with_headers, comment_prefix,
-                                                strip_whitespaces, comment_regex,
-                                                width_key)
+    local = os.path.exists(path)
+    if local and encoding == 'utf-8':
+        _check_utf8(path)
+    bulk = local and os.path.getsize(path) >= _DISTRIBUTED_SCAN_MIN_BYTES
+    if policy == 'quoted_rfc' and bulk:
+        return _read_csv_rfc_distributed(spark, path, delim, encoding,
+                                         with_headers, comment_prefix,
+                                         strip_whitespaces, comment_regex,
+                                         width_key)
+    if policy == 'quoted_rfc' or (encoding == 'latin-1' and not bulk):
         return _read_csv_driver_side(spark, path, delim, policy, encoding,
                                      with_headers, comment_prefix, strip_whitespaces,
                                      comment_regex=comment_regex)
-    return _read_csv_distributed(spark, path, delim, policy, with_headers,
+    return _read_csv_distributed(spark, path, delim, policy, encoding, with_headers,
                                  comment_prefix, strip_whitespaces, comment_regex,
                                  width_key)
 
@@ -197,31 +202,32 @@ def _cached_width(width_key, compute):
     return _WIDTH_CACHE[key]
 
 
-# file version → whether the file starts with a BOM; an entry means the
-# whole file decoded as UTF-8
-_UTF8_CHECKED: dict = {}
+# versions of local files that decoded as UTF-8 in full
+_UTF8_CHECKED: set = set()
 
 
-def _check_utf8(path: str) -> bool:
+def _check_utf8(path: str) -> None:
     """Raise the reference's decode error unless the whole local file is
     UTF-8 (rbql_csv.py:416-417; spark.read.text would silently replace bad
-    bytes).  Decodes 1 MB at a time, once per file version.  Returns
-    whether the file starts with a BOM."""
+    bytes, and no later decode of the file can fail once this passed).
+    Decodes 1 MB at a time, once per file version."""
     key = _file_version(path)
     if key not in _UTF8_CHECKED:
         decoder = codecs.getincrementaldecoder('utf-8')()
         with open(path, 'rb') as f:
-            chunk = f.read(1 << 20)
-            bom = chunk.startswith(codecs.BOM_UTF8)
             try:
-                while chunk:
+                while chunk := f.read(1 << 20):
                     decoder.decode(chunk)
-                    chunk = f.read(1 << 20)
                 decoder.decode(b'', final=True)
             except UnicodeDecodeError:
                 raise RbqlIOHandlingError(_UTF8_ERROR) from None
-        _UTF8_CHECKED[key] = bom
-    return _UTF8_CHECKED[key]
+        _UTF8_CHECKED.add(key)
+
+
+def _bom_pre_warnings(path: str) -> list[str]:
+    with open(path, 'rb') as f:
+        head = f.read(3)
+    return [_BOM_WARNING] if head == codecs.BOM_UTF8 else []
 
 
 def _arrays_to_handle(arr_df: DataFrame, header: list[str] | None, width_key,
@@ -265,13 +271,13 @@ def _arrays_to_handle(arr_df: DataFrame, header: list[str] | None, width_key,
                        warnings=pre_warnings + probe_warnings)
 
 
-def _read_csv_distributed(spark, path, delim, policy, with_headers,
+def _read_csv_distributed(spark, path, delim, policy, encoding, with_headers,
                           comment_prefix, strip_whitespaces, comment_regex,
                           width_key) -> TableHandle:
-    """utf-8 line-based policies: distributed text scan + split."""
-    pre_warnings = []
-    if os.path.exists(path) and _check_utf8(path):
-        pre_warnings.append(_BOM_WARNING)
+    """Line-based policies: distributed text scan + split.  The scan ends
+    lines at CRLF, CR or LF (also across split edges), drops a BOM at byte
+    0 and keeps each line's raw bytes, which latin-1 decodes one to one."""
+    pre_warnings = _bom_pre_warnings(path) if os.path.exists(path) else []
     # capture input order at the scan: NR and sort stability derive from
     # this key.  The lines are not spread by an exchange: the text scan
     # already splits a file larger than spark.sql.files.openCostInBytes
@@ -280,10 +286,10 @@ def _read_csv_distributed(spark, path, delim, policy, with_headers,
     # (measured on 3 and 8 MB quoted files).  The stream is therefore
     # partition-major ORDER_SRC-ascending, so the engine may skip the
     # output-restoring sort (order_src_monotone).
-    df = spark.read.text(path).withColumn(ORDER_SRC_COL, F.monotonically_increasing_id())
-    line = F.regexp_replace(F.col('value'), r'\r$', '')
-    line = F.regexp_replace(line, '^﻿', '')  # BOM (file head in practice)
-    df = df.select(line.alias('value'), F.col(ORDER_SRC_COL))
+    df = spark.read.text(path)
+    if encoding == 'latin-1':
+        df = df.select(F.decode(F.col('value').cast('binary'), 'ISO-8859-1').alias('value'))
+    df = df.withColumn(ORDER_SRC_COL, F.monotonically_increasing_id())
     arr_df = _split_lines(_drop_comments(df, comment_prefix, comment_regex),
                           delim, policy, strip_whitespaces)
     header = None
@@ -291,7 +297,7 @@ def _read_csv_distributed(spark, path, delim, policy, with_headers,
         conf = spark._jsparkSession.sessionState().conf()
         # no text-scan split is shorter than this
         min_split = min(conf.filesMaxPartitionBytes(), conf.filesOpenCostInBytes())
-        header, arr_df = _drop_header(arr_df, path, delim, policy, 'utf-8',
+        header, arr_df = _drop_header(arr_df, path, delim, policy, encoding,
                                       comment_prefix, comment_regex,
                                       strip_whitespaces, min_split)
     handle = _arrays_to_handle(arr_df, header, width_key, pre_warnings)
@@ -379,14 +385,13 @@ def _drop_header(arr_df: DataFrame, path, delim, policy, encoding, comment_prefi
     returns (header, arr_df).
 
     The scan partition that starts at byte 0 numbers its lines 0, 1, …
-    (monotonically_increasing_id in partition 0; chunk 0 keys its lines
-    0 << 40 | i), so a header that starts within its first
-    ``first_part_bytes`` has its line index as order key and the filter
-    costs no job.  A header past that (a long comment preamble) is found
-    with one eager min() job."""
-    header, index, offset = _read_header_line(path, delim, policy, encoding,
-                                              comment_prefix, comment_regex,
-                                              strip_whitespaces)
+    (monotonically_increasing_id in partition 0), so a header that starts
+    within its first ``first_part_bytes`` has its line index as order key
+    and the filter costs no job.  A header past that (a long comment
+    preamble) is found with one eager min() job."""
+    header, index, offset = next(
+        head_records(path, delim, policy, encoding, comment_prefix,
+                     comment_regex, strip_whitespaces), ([], None, None))
     if index is None:
         return header, arr_df
     key = index if offset < first_part_bytes else \
@@ -394,9 +399,10 @@ def _drop_header(arr_df: DataFrame, path, delim, policy, encoding, comment_prefi
     return header, arr_df.filter(F.col(ORDER_SRC_COL) != key)
 
 
-def _iter_head_lines(path: str):
-    """(line index, start byte offset, raw line) of a file, read lazily from
-    its head; lines end at CRLF, CR or LF, as the scans split them."""
+def _iter_head_lines(path: str, encoding: str):
+    """(line index, start byte offset, line) of a file, read lazily from its
+    head and decoded; lines end at CRLF, CR or LF, as the scans split them,
+    and a BOM at the head is stripped."""
     with open(path, 'rb') as f:
         buf, offset, index, eof = b'', 0, 0, False
         while True:
@@ -407,49 +413,80 @@ def _iter_head_lines(path: str):
                 eof = not chunk
                 buf += chunk
                 continue
-            if m is None:
-                if buf:
-                    yield index, offset, buf
+            if m is None and not buf:
                 return
-            yield index, offset, buf[:m.start()]
+            line = (buf if m is None else buf[:m.start()]).decode(encoding)
+            yield index, offset, _strip_bom(line)[0] if index == 0 else line
+            if m is None:
+                return
             offset += m.end()
             buf = buf[m.end():]
             index += 1
 
 
-def _read_header_line(path, delim, policy, encoding, comment_prefix,
-                      comment_regex, strip_whitespaces):
-    """The first line that is not a comment, split by ``policy``.  Returns
-    (fields, line index, start byte offset); ([], None, None) when every
-    line is a comment."""
+def _split_line(line: str, delim: str, policy: str) -> tuple[list[str], bool]:
+    """One line (or assembled quoted_rfc record) split by ``policy``, as the
+    scans split it; returns (fields, defective_quoting_warning)."""
+    if policy == 'simple':
+        return line.split(delim), False
+    if policy == 'whitespace':
+        return split_whitespace(line), False
+    if policy == 'monocolumn':
+        return [line], False
+    return split_quoted(line, delim)
+
+
+def head_records(path, delim, policy, encoding, comment_prefix=None,
+                 comment_regex=None, strip_whitespaces=False):
+    """(fields, line index, start byte offset) of each record at a file's
+    head, read lazily on the driver: the header of every read path, and the
+    CLI's dialect autodetection and preview.  Comment lines are skipped; a
+    quoted_rfc record is assembled by the bulk scan's record rule and
+    placed at its first line."""
     crgx = re.compile(comment_regex) if comment_regex else None
-    for index, offset, raw in _iter_head_lines(path):
-        line, _bom = _strip_bom(raw.decode(encoding))
-        if comment_prefix and line.startswith(comment_prefix):
-            continue
-        if crgx is not None and crgx.search(line) is not None:
-            continue
-        if policy == 'simple':
-            fields = line.split(delim)
-        elif policy == 'whitespace':
-            fields = split_whitespace(line)
-        elif policy == 'monocolumn':
-            fields = [line]
-        else:
-            fields, _ = split_quoted(line, delim)
+    lines = _iter_head_lines(path, encoding)
+    if policy == 'quoted_rfc':
+        records = _rfc_head_records(lines, comment_prefix, crgx)
+    else:
+        records = (([line], index, offset) for index, offset, line in lines
+                   if not (comment_prefix and line.startswith(comment_prefix))
+                   and not (crgx is not None and crgx.search(line) is not None))
+    for rows, index, offset in records:
+        fields, _ = _split_line('\n'.join(rows), delim, policy)
         if strip_whitespaces:
             fields = [x.strip() for x in fields]
-        return fields, index, offset
-    return [], None, None
+        yield fields, index, offset
+
+
+def _rfc_head_records(lines, comment_prefix, comment_rgx):
+    """(index, offset, line) head lines → (record's lines, index, offset of
+    its first line) under the RFC record rule."""
+    # _rfc_scan yields one item per line it consumes, so the two branches
+    # of the tee stay in step
+    lines, texts = itertools.tee(lines)
+    scan = _rfc_scan((line for _, _, line in texts), 0, comment_prefix, comment_rgx)
+    rows = []
+    for (index, offset, _), (record, line, parity) in zip(lines, scan):
+        if record is None:
+            continue
+        if not rows:
+            start = index, offset
+        rows.append(line)
+        if parity == 0:
+            yield rows, *start
+            rows = []
+    if rows:
+        yield rows, *start
 
 
 # ---------------------------------------------------------------------------
-# distributed byte-range scan (latin-1 and multiline-RFC policies)
+# distributed byte-range scan (multiline-RFC policy)
 #
-# Files at/above this size no longer decode on the driver: the file is cut
-# into byte ranges (Hadoop-split semantics: a task owns the lines that START
-# in its range and reads past the edge to finish its last line), so a 1 TB
-# latin-1 or quoted_rfc file scans on every core instead of one.
+# Files at/above this size no longer decode on the driver: a latin-1 file
+# with a line policy takes the text scan, and a quoted_rfc file is cut into
+# byte ranges (Hadoop-split semantics: a task owns the lines that START in
+# its range and reads past the edge to finish its last line), so a 1 TB
+# file scans on every core instead of one.
 _DISTRIBUTED_SCAN_MIN_BYTES = 4 << 20
 
 _TERM_B = re.compile(rb'\r\n|\r|\n')
@@ -510,84 +547,35 @@ def _chunk_bounds(size: int, parallelism: int) -> list[tuple[int, int]]:
     return [(bounds[i], bounds[i + 1]) for i in range(len(bounds) - 1)]
 
 
-# order key leaves 2^40 line slots per chunk (a >1 PB chunk would overflow
-# first); chunk index rides in the high bits so the key is globally monotone
-_CHUNK_ORDER_SHIFT = 40
+def _chunk_text_lines(path: str, bounds, cid: int, encoding: str) -> list[str]:
+    """Decoded lines of byte range ``cid``; a BOM at the file head is
+    stripped."""
+    s, e = bounds[cid]
+    lines = [raw.decode(encoding) for raw in _iter_chunk_lines(path, s, e)]
+    if s == 0 and lines:
+        lines[0] = _strip_bom(lines[0])[0]
+    return lines
 
 
-def _chunked_lines_df(spark: SparkSession, path: str, encoding: str,
-                      bounds: list[tuple[int, int]]) -> DataFrame:
-    """(value, __src_order) decoded lines via parallel byte-range tasks."""
-    n = len(bounds)
-    spec = spark.range(0, n, 1, numPartitions=n)
-
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            for cid in pdf['id']:
-                cid = int(cid)
-                s, e = bounds[cid]
-                lines, orders = [], []
-                okey = cid << _CHUNK_ORDER_SHIFT
-                for i, raw in enumerate(_iter_chunk_lines(path, s, e)):
-                    if cid == 0 and i == 0 and raw.startswith(b'\xef\xbb\xbf'):
-                        raw = raw[3:]
-                    lines.append(_decode_or_raise(raw, encoding))
-                    orders.append(okey + i)
-                yield pd.DataFrame({'value': pd.Series(lines, dtype='object'),
-                                    ORDER_SRC_COL: pd.Series(orders, dtype='int64')})
-
-    return spec.mapInPandas(run, schema='value string, {} long'.format(ORDER_SRC_COL))
-
-
-def _bom_pre_warnings(path: str) -> list[str]:
-    with open(path, 'rb') as f:
-        head = f.read(3)
-    if head.startswith(b'\xef\xbb\xbf'):
-        return [_BOM_WARNING]
-    return []
-
-
-def _read_csv_latin1_distributed(spark, path, delim, policy, with_headers,
-                                 comment_prefix, strip_whitespaces, comment_regex,
-                                 width_key) -> TableHandle:
-    """latin-1 line policies at bulk size: chunked byte scan + the utf-8
-    path's split (the split expressions operate on decoded strings)."""
-    bounds = _chunk_bounds(os.path.getsize(path), spark.sparkContext.defaultParallelism)
-    lines_df = _drop_comments(_chunked_lines_df(spark, path, 'latin-1', bounds),
-                              comment_prefix, comment_regex)
-    arr_df = _split_lines(lines_df, delim, policy, strip_whitespaces)
-    header = None
-    if with_headers:
-        header, arr_df = _drop_header(arr_df, path, delim, policy, 'latin-1',
-                                      comment_prefix, comment_regex,
-                                      strip_whitespaces, bounds[0][1])
-    return _arrays_to_handle(arr_df, header, width_key, _bom_pre_warnings(path))
-
-
-def _rfc_chunk_scan(lines, start_parity: int, comment_prefix, comment_rgx):
-    """One sequential pass of the RFC record grammar over a chunk's lines.
-
-    Returns (per-line records, end_parity, n_record_ends): a line at even
-    parity that matches the comment filter is skipped entirely (reference
-    checks comments only at record boundaries, rbql_csv.py:420-439); any
-    other line flips parity by its quote-count, and a record ends whenever
-    parity returns to even.
+def _rfc_scan(lines, parity: int, comment_prefix, comment_rgx):
+    """The RFC record grammar over a run of lines, lazily: yields (record
+    ordinal in the run, line, parity after the line) per line.  A line at
+    even parity that matches the comment filter is skipped, with ordinal
+    None (reference checks comments only at record boundaries,
+    rbql_csv.py:420-439); any other line flips parity by its quote-count,
+    and a record ends whenever parity returns to even.
     """
-    par = start_parity
-    ends = 0
-    out = []          # (record_ordinal_in_chunk, line_text) or None for skipped
+    record = 0
     for line in lines:
-        if par == 0 and (
+        if parity == 0 and (
                 (comment_prefix is not None and line.startswith(comment_prefix))
                 or (comment_rgx is not None and comment_rgx.search(line) is not None)):
-            out.append(None)
+            yield None, line, parity
             continue
-        out.append((ends, line))
-        par = (par + line.count('"')) % 2
-        if par == 0:
-            ends += 1
-    return out, par, ends
+        parity = (parity + line.count('"')) % 2
+        yield record, line, parity
+        if parity == 0:
+            record += 1
 
 
 def _read_csv_rfc_distributed(spark, path, delim, encoding, with_headers,
@@ -621,16 +609,14 @@ def _read_csv_rfc_distributed(spark, path, delim, encoding, with_headers,
         for pdf in batches:
             rows = []
             for cid in pdf['id']:
-                cid = int(cid)
-                s, e = bounds[cid]
-                lines = []
-                for i, raw in enumerate(_iter_chunk_lines(path, s, e)):
-                    if cid == 0 and i == 0 and raw.startswith(b'\xef\xbb\xbf'):
-                        raw = raw[3:]
-                    lines.append(_decode_or_raise(raw, encoding))
-                _, p0, e0 = _rfc_chunk_scan(lines, 0, cpfx, crgx)
-                _, p1, e1 = _rfc_chunk_scan(lines, 1, cpfx, crgx)
-                rows.append((cid, len(lines), p0, e0, p1, e1))
+                lines = _chunk_text_lines(path, bounds, int(cid), encoding)
+                row = [int(cid), len(lines)]
+                for start in (0, 1):
+                    parity, ends = start, 0
+                    for record, _, parity in _rfc_scan(lines, start, cpfx, crgx):
+                        ends += record is not None and parity == 0
+                    row += [parity, ends]
+                rows.append(row)
             yield pd.DataFrame(rows, columns=['cid', 'n_lines', 'p0', 'e0', 'p1', 'e1'])
 
     stats = {int(r['cid']): r for r in
@@ -646,26 +632,22 @@ def _read_csv_rfc_distributed(spark, path, delim, encoding, with_headers,
         par = r['p1'] if par else r['p0']
         recs += r['e1'] if start_parity[cid] else r['e0']
         nlines += r['n_lines']
+
     def emit(batches):
         import pandas as pd
         crgx = re.compile(crgx_s) if crgx_s else None
         for pdf in batches:
             for cid in pdf['id']:
                 cid = int(cid)
-                s, e = bounds[cid]
-                lines = []
-                for i, raw in enumerate(_iter_chunk_lines(path, s, e)):
-                    if cid == 0 and i == 0 and raw.startswith(b'\xef\xbb\xbf'):
-                        raw = raw[3:]
-                    lines.append(_decode_or_raise(raw, encoding))
-                scanned, _, _ = _rfc_chunk_scan(lines, start_parity[cid], cpfx, crgx)
+                lines = _chunk_text_lines(path, bounds, cid, encoding)
                 rid, lno, txt = [], [], []
-                for i, item in enumerate(scanned):
-                    if item is None:
+                for i, (record, line, _) in enumerate(
+                        _rfc_scan(lines, start_parity[cid], cpfx, crgx)):
+                    if record is None:
                         continue
-                    rid.append(rec_offset[cid] + item[0])
+                    rid.append(rec_offset[cid] + record)
                     lno.append(line_offset[cid] + i)
-                    txt.append(item[1])
+                    txt.append(line)
                 yield pd.DataFrame({'rid': pd.Series(rid, dtype='int64'),
                                     'lno': pd.Series(lno, dtype='int64'),
                                     'value': pd.Series(txt, dtype='object')})
@@ -704,60 +686,18 @@ def _read_csv_rfc_distributed(spark, path, delim, encoding, with_headers,
         split_records, 'fields array<string>, {} long'.format(ORDER_SRC_COL))
     header = None
     if with_headers:
-        header = _read_header_record_rfc(path, delim, encoding, comment_prefix,
-                                         comment_regex, strip_whitespaces)
+        header = next(head_records(path, delim, 'quoted_rfc', encoding, comment_prefix,
+                                   comment_regex, strip_whitespaces), ([],))[0]
         # the header is the first record, whose id is 0
         arr_df = arr_df.filter(F.col(ORDER_SRC_COL) != 0)
     return _arrays_to_handle(arr_df, header, width_key, _bom_pre_warnings(path))
 
 
-def _decode_or_raise(raw: bytes, encoding: str) -> str:
-    try:
-        return raw.decode(encoding)
-    except UnicodeDecodeError:
-        raise RbqlIOHandlingError(_UTF8_ERROR)
-
-
-def _read_header_record_rfc(path, delim, encoding, comment_prefix, comment_regex,
-                            strip_whitespaces) -> list[str]:
-    """First logical record, read incrementally from the file head on the
-    driver (a header is one record; no reason to involve the cluster)."""
-    crgx = re.compile(comment_regex) if comment_regex else None
-    with open(path, 'rb') as f:
-        raw = b''
-        while True:
-            chunk = f.read(1 << 16)
-            raw += chunk
-            content = raw.decode(encoding, errors='replace')
-            content, _ = _strip_bom(content)
-            lines = re.split(r'\r\n|\r|\n', content)
-            if chunk:
-                lines = lines[:-1]   # last piece may be a partial line
-            rows: list[str] = []
-            par = 0
-            done = False
-            for line in lines:
-                if par == 0 and (
-                        (comment_prefix and line.startswith(comment_prefix))
-                        or (crgx is not None and crgx.search(line) is not None)):
-                    continue
-                rows.append(line)
-                par = (par + line.count('"')) % 2
-                if par == 0:
-                    done = True
-                    break
-            if done or not chunk:
-                fields, _ = split_quoted('\n'.join(rows), delim)
-                if strip_whitespaces:
-                    fields = [x.strip() for x in fields]
-                return fields
-
-
 def _read_csv_driver_side(spark, path, delim, policy, encoding, with_headers,
                           comment_prefix, strip_whitespaces,
                           comment_regex: str | None = None) -> TableHandle:
-    """latin-1 / multiline-RFC path: decode + record-assemble on the driver,
-    then parallelize.  legacy-file path, documented as non-bulk."""
+    """Files below the bulk size in latin-1, and quoted_rfc: decode +
+    record-assemble on the driver, then parallelize."""
     with open(path, 'rb') as f:
         content = f.read().decode(encoding)
     content, _bom = _strip_bom(content)
@@ -776,14 +716,7 @@ def _read_csv_driver_side(spark, path, delim, policy, encoding, with_headers,
         if comment_regex:
             _crgx = re.compile(comment_regex)
             rows = [ln for ln in rows if _crgx.search(ln) is None]
-        if policy == 'simple':
-            records = [(ln.split(delim), False) for ln in rows]
-        elif policy == 'whitespace':
-            records = [(split_whitespace(ln), False) for ln in rows]
-        elif policy == 'monocolumn':
-            records = [([ln], False) for ln in rows]
-        else:
-            records = [split_quoted(ln, delim) for ln in rows]
+        records = [_split_line(ln, delim, policy) for ln in rows]
         recs = [r[0] for r in records]
         first_bad = next((i for i, r in enumerate(records) if r[1]), None)
         if first_bad is not None:
@@ -900,15 +833,19 @@ def _serialize_pdf(pdf, field_types, delim, policy):
     return line, n_null, n_sep
 
 
-def _write_header(f, header, delim, policy, encoding, warnings):
-    if header is None:
-        return
-    hdr = [_normalize_out_value(v, delim, warnings) for v in header]
+def _format_record(vals, delim, policy, warnings) -> str:
+    """One output record (header or row) as a line without its terminator."""
+    normd = [_normalize_out_value(v, delim, warnings) for v in vals]
     if policy in ('quoted', 'quoted_rfc'):
-        hdr = [_quote_field(x, delim) for x in hdr]
-    elif any(delim in x for x in hdr):   # policy 'simple', as the row loop
-        warnings.add('Some output fields contain separator')
-    f.write((delim.join(hdr) + '\n').encode(encoding))
+        normd = [_quote_field(s, delim) for s in normd]
+    elif policy == 'simple':
+        if any(delim in s for s in normd):
+            warnings.add('Some output fields contain separator')
+    elif policy == 'whitespace':
+        return ' '.join(normd)
+    elif policy == 'monocolumn':
+        return normd[0] if normd else ''
+    return delim.join(normd)
 
 
 # results whose optimizer-estimated size clears this bar serialize on the
@@ -965,7 +902,9 @@ def _write_csv_distributed(result, output_path, delim, policy, encoding,
         # partitions in key order and part files inherit partition ids
         parts = sorted(glob.glob(os.path.join(tmpdir, 'part-*')))
         with open(output_path, 'wb') as out:
-            _write_header(out, result.out_names, delim, policy, encoding, warnings)
+            if result.out_names is not None:
+                out.write((_format_record(result.out_names, delim, policy, warnings)
+                           + '\n').encode(encoding))
             for p in parts:
                 with open(p, 'rb') as src:
                     shutil.copyfileobj(src, out, 1 << 22)
@@ -993,24 +932,10 @@ def write_csv(result, output_path: str, delim: str = ',', policy: str = 'quoted'
     if _write_csv_distributed(result, output_path, delim, policy, encoding, warnings):
         return sorted(warnings)
 
-    def fmt_row(vals) -> str:
-        normd = [_normalize_out_value(v, delim, warnings) for v in vals]
-        if policy in ('quoted', 'quoted_rfc'):
-            normd = [_quote_field(s, delim) for s in normd]
-        elif policy == 'simple':
-            for s in normd:
-                if delim in s:
-                    warnings.add('Some output fields contain separator')
-        elif policy == 'whitespace':
-            return ' '.join(normd)
-        elif policy == 'monocolumn':
-            return normd[0] if normd else ''
-        return delim.join(normd)
-
     rows = collect_result_rows(result)
     with open(output_path, 'w', encoding=encoding, newline='') as f:
         if header is not None:
-            f.write(fmt_row(header))
+            f.write(_format_record(header, delim, policy, warnings))
             f.write('\n')
         for vals in rows:
             if header is not None and len(vals) != len(header):
@@ -1018,6 +943,6 @@ def write_csv(result, output_path: str, delim: str = ',', policy: str = 'quoted'
                 raise RbqlIOHandlingError(
                     'Inconsistent number of columns in output header and the '
                     'current record: {} != {}'.format(len(vals), len(header)))
-            f.write(fmt_row(vals))
+            f.write(_format_record(vals, delim, policy, warnings))
             f.write('\n')
     return sorted(warnings)

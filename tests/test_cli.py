@@ -13,7 +13,7 @@ import rbql_spark.main as climod
 
 REF_CSV_DIR = '/root/reference/test/csv_files'
 
-pytestmark = pytest.mark.skipif(
+needs_ref_csv = pytest.mark.skipif(
     not os.path.isdir(REF_CSV_DIR), reason='reference csv fixtures not available')
 
 
@@ -30,6 +30,7 @@ def cli(spark, monkeypatch):
     return run
 
 
+@needs_ref_csv
 def test_cli_with_headers_named_columns(cli, capsys):
     rc = cli(['--input', os.path.join(REF_CSV_DIR, 'countries.csv'),
               '--query', "select top 5 a.country, a['GDP per capita'] "
@@ -41,6 +42,7 @@ def test_cli_with_headers_named_columns(cli, capsys):
     assert out == expected
 
 
+@needs_ref_csv
 def test_cli_unknown_function_error(cli, capsys):
     rc = cli(['--delim', ',', '--query', 'SELECT top 3 a1, foobarium(a2)',
               '--input', os.path.join(REF_CSV_DIR, 'countries.csv')])
@@ -49,6 +51,7 @@ def test_cli_unknown_function_error(cli, capsys):
     assert "name 'foobarium' is not defined" in err
 
 
+@needs_ref_csv
 def test_cli_none_warning(cli, capsys):
     rc = cli(['--delim', ',', '--query', 'SELECT top 3 a1, None, a2',
               '--input', os.path.join(REF_CSV_DIR, 'countries.csv')])
@@ -92,6 +95,7 @@ def test_cli_comment_regex(cli, capsys, tmp_path):
     assert cap.out == 'a\nb\n'
 
 
+@needs_ref_csv
 def test_cli_policy_without_delim_rejected(cli, capsys):
     rc = cli(['--query', 'SELECT a1', '--policy', 'quoted',
               '--input', os.path.join(REF_CSV_DIR, 'countries.csv')])
@@ -100,6 +104,7 @@ def test_cli_policy_without_delim_rejected(cli, capsys):
     assert 'Using "--policy" without "--delim" is not allowed' in cap.err
 
 
+@needs_ref_csv
 def test_cli_color_with_output_rejected(cli, capsys, tmp_path):
     rc = cli(['--query', 'SELECT a1', '--delim', ',', '--color',
               '--output', str(tmp_path / 'o.csv'),

@@ -180,23 +180,29 @@ def _handle_rows(handle):
 
 def test_latin1_distributed_scan_matches_driver(spark, tmp_path, monkeypatch):
     import rbql_spark.sources.csv as C
+    from rbql_spark.tuning import scoped_conf
     p = str(tmp_path / 'big_latin1.csv')
     with open(p, 'wb') as f:
         for i in range(130000):
             if i % 997 == 0:
                 f.write(b'#comment\n')
-            term = b'\r\n' if i % 3 == 0 else b'\n'
-            f.write(('caf\xe9{0},v\xf8l{1},{0}'.format(i, i * 7)).encode('latin-1') + term)
+            term = (b'\r\n', b'\n', b'\r')[i % 3]
+            f.write(('caf\xe9{0},v\xf8l\x80\xff{1},{0}'.format(i, i * 7))
+                    .encode('latin-1') + term)
 
     monkeypatch.setattr(C, '_DISTRIBUTED_SCAN_MIN_BYTES', 1 << 62)
     drv = _handle_rows(C.read_csv(spark, p, delim=',', policy='simple',
                                   encoding='latin-1', comment_prefix='#'))
     monkeypatch.setattr(C, '_DISTRIBUTED_SCAN_MIN_BYTES', 1)
-    h = C.read_csv(spark, p, delim=',', policy='simple',
-                   encoding='latin-1', comment_prefix='#')
-    # the scan must actually run as multiple byte-range tasks
-    assert h.df.rdd.getNumPartitions() > 1
-    assert _handle_rows(h) == drv
+    # 256 KB text-scan splits cut the ~3.6 MB file mid-line
+    with scoped_conf(spark, {'spark.sql.files.maxPartitionBytes': 256 << 10,
+                             'spark.sql.files.openCostInBytes': 64 << 10}):
+        h = C.read_csv(spark, p, delim=',', policy='simple',
+                       encoding='latin-1', comment_prefix='#')
+        # the scan must actually run as multiple text-scan splits
+        assert h.df.rdd.getNumPartitions() > 1
+        rows = _handle_rows(h)
+    assert rows == drv
 
 
 def test_quoted_rfc_distributed_scan_matches_driver(spark, tmp_path, monkeypatch):
@@ -346,7 +352,7 @@ def test_header_is_first_non_comment_line(spark, tmp_path, comment):
     ('id,name\r\n1,a\r\n2,b\r\n3,c\r\n', {}),
     ('﻿id,name\n1,a\n2,b\n3,c\n', {}),
     ('#one\n#two\nid,name\n1,a\n#three\n2,b\n3,c\n', {'comment_prefix': '#'}),
-    ('#one\n﻿#two\nid,name\n1,a\n2,b\n3,c', {'comment_regex': '^#'}),
+    ('﻿#one\n#two\nid,name\n1,a\n2,b\n3,c', {'comment_regex': '^#'}),
 ], ids=['crlf', 'bom', 'comment_prefix', 'comment_regex'])
 @pytest.mark.parametrize('policy', ['quoted', 'simple'])
 def test_header_drop_utf8_scan(spark, tmp_path, content, options, policy):
@@ -418,6 +424,58 @@ def test_utf8_check_spans_read_chunks(spark, tmp_path):
         read_csv(spark, bad, policy='simple')
 
 
+@pytest.mark.parametrize('encoding', ['utf-8', 'latin-1'])
+def test_mid_file_bom_is_data(spark, tmp_path, monkeypatch, encoding):
+    # a BOM at the file head is stripped with a warning; one that starts a
+    # later line is data, as in the reference (latin-1 reads it as 'ï»¿')
+    import rbql_spark.sources.csv as C
+    monkeypatch.setattr(C, '_DISTRIBUTED_SCAN_MIN_BYTES', 1)
+    p = str(tmp_path / 'bom.csv')
+    with open(p, 'wb') as f:
+        f.write(b'\xef\xbb\xbfid,name\n1,a\n\xef\xbb\xbf2,b\n')
+    h = read_csv(spark, p, policy='simple', encoding=encoding, with_headers=True)
+    bom = b'\xef\xbb\xbf'.decode(encoding)
+    assert h.header == ['id', 'name']
+    assert _handle_rows(h)[0] == [('1', 'a', 2), (bom + '2', 'b', 2)]
+    assert h.warnings == ['UTF-8 Byte Order Mark (BOM) was found and skipped '
+                          'in input table']
+    if encoding == 'latin-1':
+        monkeypatch.setattr(C, '_DISTRIBUTED_SCAN_MIN_BYTES', 1 << 62)
+        drv = read_csv(spark, p, policy='simple', encoding=encoding,
+                       with_headers=True)
+        assert (_handle_rows(drv), drv.warnings) == (_handle_rows(h), h.warnings)
+
+
+@pytest.mark.parametrize('bulk', [False, True], ids=['driver', 'bulk'])
+def test_quoted_rfc_invalid_utf8_raises_decode_error(spark, tmp_path, monkeypatch,
+                                                     bulk):
+    from rbql_spark.errors import RbqlIOHandlingError
+    import rbql_spark.sources.csv as C
+    monkeypatch.setattr(C, '_DISTRIBUTED_SCAN_MIN_BYTES', 1 if bulk else 1 << 62)
+    p = str(tmp_path / 'bad_rfc.csv')
+    with open(p, 'wb') as f:
+        f.write(b'a,"b\nc"\n\xff,1\n')
+    with pytest.raises(RbqlIOHandlingError,
+                       match='Unable to decode input table as UTF-8. '
+                             'Use binary \\(latin-1\\) encoding instead'):
+        read_csv(spark, p, policy='quoted_rfc')
+
+
+def test_latin1_bulk_reads_through_text_scan(spark, tmp_path, monkeypatch):
+    # latin-1 line policies share the utf-8 text scan: no Python stage, and
+    # the stream is in source order, so the engine may skip the order sort
+    import rbql_spark.sources.csv as C
+    monkeypatch.setattr(C, '_DISTRIBUTED_SCAN_MIN_BYTES', 1)
+    p = str(tmp_path / 'l1.csv')
+    with open(p, 'wb') as f:
+        f.write(b'caf\xe9,1\r\n\x80\xff,2\r')
+    h = read_csv(spark, p, policy='simple', encoding='latin-1')
+    plan = h.df._jdf.queryExecution().executedPlan().toString()
+    assert 'MapInPandas' not in plan and 'FileScan text' in plan
+    assert h.order_src_monotone
+    assert _handle_rows(h)[0] == [('caf\xe9', '1', 2), ('\x80\xff', '2', 2)]
+
+
 def test_csv_join_table_order_key_is_not_a_field(spark, tmp_path):
     # the join table's source-order key must bind as its record order, not
     # as an extra B column (a stray trailing ordinal, a widened bNF)
@@ -434,6 +492,16 @@ def test_csv_join_table_order_key_is_not_a_field(spark, tmp_path):
         [['1', 2], ['2', 2], ['3', 2]]
     assert rows('SELECT a1, b2 JOIN b.csv ON a1 == b1 ORDER BY bNR DESC') == \
         [['2', 'two'], ['1', 'one']]
+
+
+def test_csv_join_table_honours_comment_regex(spark, tmp_path):
+    # a join table is read with every read option of the input
+    _write(tmp_path, 'b.csv', '1,one\n2,two skip\n')
+    p = _write(tmp_path, 'a.csv', '1,x\n2,y\n3,skip\n')
+    res = query_csv(spark, 'SELECT a1, b2 JOIN b.csv ON a1 == b1', p,
+                    comment_regex='skip')
+    assert [list(r) for r in res.display_df(ordered=True).collect()] == \
+        [['1', 'one']]
 
 
 @pytest.mark.parametrize('encoding,bulk', [('utf-8', False),

@@ -81,9 +81,18 @@ def _dedup_clusters(spark, tmp_path, sf_dir, monkeypatch):
         [(1, 1), (2, 1), (3, 1), (5, 5), (6, 5), (9, 1)]
 
 
+def _events_read(spark, tmp_path, sf_dir, monkeypatch):
+    # the gates' table loader reads events as stored: ts is parquet
+    # timestamp[us], a Spark timestamp without any legacy reader setting
+    from __spark_entry__ import _t
+    df = _t(spark, sf_dir, 'events')
+    assert dict(df.dtypes)['ts'].startswith('timestamp')
+    assert df.limit(1).count() == 1
+
+
 @pytest.mark.parametrize('call', [
     _update_join, _query_csv, _stream_to_memory, _stream_to_parquet,
-    _ivf_pq_compact, _dedup_clusters,
+    _ivf_pq_compact, _dedup_clusters, _events_read,
 ], ids=lambda f: f.__name__.lstrip('_'))
 def test_public_call_leaves_session_conf(spark, tmp_path, sf_dir, monkeypatch,
                                          call):

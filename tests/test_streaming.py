@@ -9,11 +9,7 @@ def event_stream_dir(spark, tmp_path, sf_dir):
     """Copy the events table into two parquet files → two micro-batches."""
     src = os.path.join(sf_dir, 'events.parquet')
     out = os.path.join(str(tmp_path), 'stream_src')
-    spark.conf.set('spark.sql.legacy.parquet.nanosAsLong', 'true')
-    from pyspark.sql import functions as F
     df = spark.read.parquet(src)
-    if dict(df.dtypes).get('ts') in ('bigint', 'long'):
-        df = df.withColumn('ts', F.timestamp_micros(F.expr('ts div 1000')))
     df.where('event_id % 2 = 0').coalesce(1).write.mode('overwrite').parquet(out)
     df.where('event_id % 2 = 1').coalesce(1).write.mode('append').parquet(out)
     return out
@@ -88,10 +84,7 @@ def test_streaming_exact_dedup_drops_redelivered(spark, tmp_path, sf_dir):
     )
     src = os.path.join(sf_dir, 'events.parquet')
     out = os.path.join(str(tmp_path), 'dedup_src')
-    spark.conf.set('spark.sql.legacy.parquet.nanosAsLong', 'true')
     df = spark.read.parquet(src)
-    if dict(df.dtypes).get('ts') in ('bigint', 'long'):
-        df = df.withColumn('ts', F.timestamp_micros(F.expr('ts div 1000')))
     # middle third delivered twice
     df.where('event_id % 3 != 2').coalesce(1).write.mode('overwrite').parquet(out)
     df.where('event_id % 3 != 0').coalesce(1).write.mode('append').parquet(out)
@@ -705,8 +698,6 @@ def test_stateful_checkpoint_recovery_across_restart(spark, tmp_path, sf_dir):
     checkpoint, not the process."""
     import os
 
-    from pyspark.sql import functions as F
-
     from rbql_spark.streaming.events import (
         EVENT_SCHEMA, stream_exact_dedup,
     )
@@ -715,9 +706,6 @@ def test_stateful_checkpoint_recovery_across_restart(spark, tmp_path, sf_dir):
     sink = os.path.join(str(tmp_path), 'sink')
     ckpt = os.path.join(str(tmp_path), 'ckpt')
     events = spark.read.parquet(os.path.join(sf_dir, 'events.parquet'))
-    if dict(events.dtypes).get('ts') in ('bigint', 'long'):
-        events = events.withColumn(
-            'ts', F.timestamp_micros(F.expr('ts div 1000')))
     events = events.select([f.name for f in EVENT_SCHEMA.fields])
     first = events.where('event_id % 3 = 0')
     # second delivery OVERLAPS the first (event_id % 6 == 0 rows re-sent)

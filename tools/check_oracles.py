@@ -6,6 +6,10 @@ float64 123.0 — the class of bug that shipped red in round 2 — fails here
 even though Python `123 == 123.0`).
 
 Usage: python tools/check_oracles.py [sf_dir] [name ...]
+
+The session has one core and one shuffle partition per CPU
+($SPARK_GRAFT_CPUS, or the CPUs this process may run on) and 1 GB of
+driver memory per CPU (2 to 8 GB).
 """
 
 import math
@@ -61,11 +65,13 @@ def main():
     oracles = entrymod.oracle_sql()
     names = args or sorted(oracles)
 
-    spark = (SparkSession.builder.master('local[8]')
-             .config('spark.sql.shuffle.partitions', '8')
+    cpus = int(os.environ.get('SPARK_GRAFT_CPUS')
+               or len(os.sched_getaffinity(0)))
+    spark = (SparkSession.builder.master('local[{}]'.format(cpus))
+             .config('spark.sql.shuffle.partitions', str(cpus))
              .config('spark.ui.enabled', 'false')
              .config('spark.ui.showConsoleProgress', 'false')
-             .config('spark.driver.memory', '8g')
+             .config('spark.driver.memory', '{}g'.format(min(8, max(2, cpus))))
              .getOrCreate())
     con = duckdb.connect()
     for t in TABLES:
