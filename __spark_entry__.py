@@ -25,13 +25,13 @@ from rbql_spark import tuning
 from rbql_spark.api import query_dataframe
 from rbql_spark.binding import TableHandle
 from rbql_spark.engine import EngineOptions
-from rbql_spark.registry import ParquetDirRegistry
+from rbql_spark.registry import ParquetDirRegistry, read_parquet
 
 SF_DEFAULT = '/root/testdata/sf0.001'
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, name + '.parquet'))
+    return read_parquet(spark, os.path.join(sf_dir, name + '.parquet'))
 
 
 def _ann_index_cache_path(sf_dir: str, tag: str = '') -> str:
@@ -3788,6 +3788,7 @@ if __name__ == '__main__':
     from pyspark.sql import SparkSession
     s = (SparkSession.builder.master('local[4]')
          .config('spark.sql.shuffle.partitions', '4')
+         .config('spark.python.sql.dataFrameDebugging.enabled', 'false')
          .config('spark.ui.enabled', 'false').getOrCreate())
     df = entry(s)
     df.show(10)

@@ -130,9 +130,6 @@ class WorkFrame:
     a: SideInfo
     b: SideInfo | None = None
 
-    def with_df(self, df: DataFrame) -> 'WorkFrame':
-        return WorkFrame(df=df, a=self.a, b=self.b)
-
 
 NF_SRC_COL = '__nf_src'        # optional per-row field count provided by a source
 ORDER_SRC_COL = '__src_order'  # optional source-order key captured BEFORE any
@@ -140,44 +137,67 @@ ORDER_SRC_COL = '__src_order'  # optional source-order key captured BEFORE any
                                # lines; input order must survive it)
 
 
-def bind_side(handle: TableHandle, prefix: str) -> tuple[DataFrame, SideInfo]:
-    """Rename a table's user columns to side ``prefix``'s internal layout
-    (one positional ``toDF``), attach its NF column and describe it.
-
-    A source's order key (ORDER_SRC_COL) keeps its name and is no field:
-    attach_nr consumes it as the side's record order.  NR is attached
-    separately (the engine decides *when*: attaching the nondeterministic
-    order surrogate before a filter would block predicate pushdown to the
-    scan, so the engine filters first whenever the query doesn't
-    reference NR).
-    """
-    nf_col = NF_COL if prefix == 'a' else BNF_COL
-    names, types, out_names = [], [], []
-    nf_type = None
+def describe_side(handle: TableHandle, prefix: str) -> SideInfo:
+    """Side ``prefix``'s layout for a table: every column but a source's
+    NF and order keys is a field, in column order."""
+    names, types = [], []
+    ragged = False
     for f in handle.df.schema.fields:
         if f.name == NF_SRC_COL:
-            out_names.append(nf_col)
-            nf_type = f.dataType
-        elif f.name == ORDER_SRC_COL:
-            out_names.append(ORDER_SRC_COL)
-        else:
-            out_names.append(internal_col(prefix, len(names)))
+            ragged = True
+        elif f.name != ORDER_SRC_COL:
             names.append(f.name)
             types.append(f.dataType)
-    df = handle.df.toDF(*out_names)
-    if nf_type is None:
-        df = df.withColumn(nf_col, F.lit(len(names)).cast('int'))
-    elif not isinstance(nf_type, T.IntegerType):
-        df = df.withColumn(nf_col, F.col(nf_col).cast('int'))
-    side = SideInfo(prefix=prefix,
+    return SideInfo(prefix=prefix,
                     header=list(handle.header) if handle.header is not None else None,
                     width=len(names), types=types, json_cols=handle.json_cols,
-                    ragged=nf_type is not None,
+                    ragged=ragged,
                     null_free=frozenset(i for i, n in enumerate(names)
                                         if n in handle.null_free),
                     row_count=handle.row_count,
                     order_src_monotone=handle.order_src_monotone)
-    return df, side
+
+
+def _quote(name: str) -> str:
+    return '`{}`'.format(name.replace('`', '``'))
+
+
+def bind_side(handle: TableHandle, side: SideInfo,
+              nr_col: str | None = None) -> DataFrame:
+    """The table in ``side``'s internal layout, in ONE projection: the
+    user columns renamed to the side's field columns and its NF column.
+
+    With ``nr_col`` the same projection attaches the side's record order
+    under that name: the source's order key (ORDER_SRC_COL) when it has
+    one, else the order surrogate.  Callers pass it only when NR needs no
+    dense numbering and no filter has to reach the scan first (the
+    surrogate is nondeterministic, so Catalyst pushes no predicate past
+    it).  Without ``nr_col`` an order key keeps its name for attach_nr.
+    """
+    nf_col = NF_COL if side.prefix == 'a' else BNF_COL
+    df = handle.df
+    fields = df.schema.fields
+    src = [f.name for f in fields]
+    if len({n.lower() for n in src}) < len(src):
+        # a projection by name cannot tell duplicate names apart
+        src = ['__bind_{}'.format(i) for i in range(len(src))]
+        df = df.toDF(*src)
+    exprs, n_fields, has_order = [], 0, False
+    for f, name in zip(fields, src):
+        if f.name == NF_SRC_COL:
+            exprs.append('CAST({} AS INT) AS {}'.format(_quote(name), nf_col))
+        elif f.name == ORDER_SRC_COL:
+            has_order = True
+            exprs.append('{} AS {}'.format(_quote(name), nr_col or ORDER_SRC_COL))
+        else:
+            exprs.append('{} AS {}'.format(
+                _quote(name), internal_col(side.prefix, n_fields)))
+            n_fields += 1
+    if not side.ragged:
+        exprs.append('CAST({} AS INT) AS {}'.format(side.width, nf_col))
+    if nr_col is not None and not has_order:
+        exprs.append('monotonically_increasing_id() AS {}'.format(nr_col))
+    return df.selectExpr(*exprs)
 
 
 @dataclass

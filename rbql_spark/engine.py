@@ -33,7 +33,7 @@ from .aggregates import (NUMERIC_AGGS, AggCall, detect_aggregate,
                          numeric_coerce, spark_agg_expr)
 from .binding import (
     BNF_COL, BNR_COL, NF_COL, NR_COL, ORDER_SRC_COL, Binding, TableHandle,
-    VarRef, WorkFrame, bind_side, internal_col, type_tag,
+    VarRef, WorkFrame, bind_side, describe_side, internal_col, type_tag,
 )
 from .errors import (
     INVALID_KEYWORD_IN_AGGREGATE_QUERY_ERROR,
@@ -295,6 +295,12 @@ def _make_surrogate_resolver(numbered_df: DataFrame, pre_filter_df, early_cond,
     return resolve
 
 
+def _computed(native: dict[str, Column], name: str) -> Column:
+    """A computed column by name: its native expression from
+    ``_ExprComputer.compute_lazy``, else the frame's own column."""
+    return native[name] if name in native else F.col(name)
+
+
 class _ExprComputer:
     """Computes named expression columns: translator first, batched pyeval
     fallback for the rest (ONE mapInPandas pass per batch of fallbacks)."""
@@ -418,7 +424,19 @@ class _ExprComputer:
 
     def compute(self, df: DataFrame, named_exprs: list[tuple[str, str]],
                 render_names: frozenset[str] | set[str] = frozenset()) -> tuple[DataFrame, dict[str, str]]:
-        """Returns (df_with_columns, {out_name: type_tag}).
+        """Returns (df_with_columns, {out_name: type_tag})."""
+        df, tags, native = self.compute_lazy(df, named_exprs, render_names)
+        if native:
+            df = df.withColumns(native)
+        return df, tags
+
+    def compute_lazy(self, df: DataFrame, named_exprs: list[tuple[str, str]],
+                     render_names: frozenset[str] | set[str] = frozenset()
+                     ) -> tuple[DataFrame, dict[str, str], dict[str, Column]]:
+        """Returns (df_with_hosted_columns, {out_name: type_tag},
+        {out_name: native Column}): the natively translated columns are
+        left to the caller's own projection, so a build phase adds one
+        projection, not one per step.
 
         `render_names`: output names with RENDERING semantics (final SELECT
         projection) — the only consumers allowed to keep a 'strnum'-tagged
@@ -465,11 +483,9 @@ class _ExprComputer:
                                   nr_dense=self.binding.nr_dense)
             except Exception as e:
                 self._raise_unwrapped(e)
-        if native:
-            df = df.withColumns({name: tc.col for name, tc in native})
         for pe in fallback:
             tags[pe.out_col] = 'json' if pe.is_json else type_tag(pe.dtype)
-        return df, tags
+        return df, tags, {name: tc.col for name, tc in native}
 
     def predicate(self, df: DataFrame, text: str) -> tuple[DataFrame, Column]:
         self.translator.error_probes = []
@@ -618,10 +634,13 @@ class StageRunner:
             raise RbqlIOHandlingError(
                 "Inconsistent modes: Input table has a header while the Join table doesn't have a header")
 
-        bdf, b_side = bind_side(b_handle, 'b')
-        bdf = attach_nr(bdf, BNR_COL, dense=_needs_dense_nr(stage, 'b')
-                        or any(v in ('bNR', 'b.NR') for pair in stage.join_var_pairs for v in pair),
-                        cache_registry=self.cached_frames)
+        b_side = describe_side(b_handle, 'b')
+        if _needs_dense_nr(stage, 'b') or any(
+                v in ('bNR', 'b.NR') for pair in stage.join_var_pairs for v in pair):
+            bdf = attach_nr(bind_side(b_handle, b_side), BNR_COL, dense=True,
+                            cache_registry=self.cached_frames)
+        else:
+            bdf = bind_side(b_handle, b_side, nr_col=BNR_COL)
         wf2 = WorkFrame(df=wf.df, a=wf.a, b=b_side)
         binding = Binding(wf2)
 
@@ -774,8 +793,7 @@ class StageRunner:
                 raise RbqlParsingError('Unable to find input table: "{}"'.format(stage.from_table_id))
 
         self.warnings.extend(getattr(input_handle, 'warnings', []) or [])
-        adf, a_side = bind_side(input_handle, 'a')
-        wf = WorkFrame(df=adf, a=a_side)
+        a_side = describe_side(input_handle, 'a')
         nr_referenced = _needs_dense_nr(stage, 'a') or any(
             v in ('NR', 'aNR', 'a.NR') for pair in stage.join_var_pairs for v in pair)
 
@@ -784,12 +802,13 @@ class StageRunner:
         # When the query never references NR, relative row order is all that
         # matters — filter FIRST (predicate reaches the parquet scan), then
         # attach __nr.
-        early_filtered = False
-        pre_filter_df, early_cond = wf.df, None
+        early_cond = None
         early_guard_probes: list = []
         if (stage.is_select and stage.where_expr is not None and not nr_referenced):
             try:
-                tr = ExpressionTranslator(Binding(wf))
+                # the translator reads only the side layout, so the frame
+                # is bound once the filter is known
+                tr = ExpressionTranslator(Binding(WorkFrame(df=None, a=a_side)))
                 # pushdown position: NR is not attached yet, so value-
                 # parity guards stay NR-free in the RAISED message; the
                 # harvested (fire_cond, msg) pairs let the driver rebuild
@@ -801,12 +820,11 @@ class StageRunner:
                 # NR_COL, which does not exist yet at pushdown time —
                 # fall through to the ordinary post-attach WHERE
                 if not tr.uses_nr_col:
-                    wf = wf.with_df(wf.df.filter(cond))
-                    early_filtered = True
                     early_cond = cond
                     early_guard_probes = list(tr.error_probes)
             except (TranslationFallback, RbqlParsingError, RbqlRuntimeError, SyntaxError):
                 pass
+        early_filtered = early_cond is not None
 
         self._nr_dense = nr_referenced
         # NR is partition-major monotone (sorting by it is a no-op over
@@ -816,10 +834,18 @@ class StageRunner:
         # the frame's own partition layout.  _finalize_simple uses this
         # to drop the output-order sort on narrow-only select paths.
         self._nr_monotone = (nr_referenced
-                             or ORDER_SRC_COL not in wf.df.columns
-                             or wf.a.order_src_monotone)
-        wf = wf.with_df(attach_nr(wf.df, NR_COL, dense=nr_referenced,
-                                  cache_registry=self.cached_frames))
+                             or ORDER_SRC_COL not in input_handle.df.columns
+                             or a_side.order_src_monotone)
+        pre_filter_df = None
+        if early_filtered:
+            pre_filter_df = bind_side(input_handle, a_side)
+            adf = attach_nr(pre_filter_df.filter(early_cond), NR_COL, dense=False)
+        elif nr_referenced:
+            adf = attach_nr(bind_side(input_handle, a_side), NR_COL, dense=True,
+                            cache_registry=self.cached_frames)
+        else:
+            adf = bind_side(input_handle, a_side, nr_col=NR_COL)
+        wf = WorkFrame(df=adf, a=a_side)
         if stage.join_subtype is not None:
             wf = self._load_b_side(stage, wf)
 
@@ -834,8 +860,7 @@ class StageRunner:
         # min-NR surrogate to the exact input ordinal, including across
         # the early-filter pushdown (jobs run only on those error paths)
         self._plain_resolver = None if nr_referenced else \
-            _make_surrogate_resolver(
-                wf.df, pre_filter_df if early_filtered else None, early_cond)
+            _make_surrogate_resolver(wf.df, pre_filter_df, early_cond)
 
         if stage.is_select:
             res = self._run_select(stage, wf, comp, df, skip_where=early_filtered)
@@ -850,7 +875,7 @@ class StageRunner:
         # early-filter pushdown, where the surrogate numbers the filtered
         # stream.
         res.nr_resolver = None if nr_referenced else _make_surrogate_resolver(
-            wf.df, pre_filter_df if early_filtered else None, early_cond,
+            wf.df, pre_filter_df, early_cond,
             comp.failure_probes, early_guard_probes)
         res.cached_frames.extend(self.cached_frames)
         return res
@@ -971,23 +996,26 @@ class StageRunner:
             targets.append(ref.index)
             value_exprs.append(('__upd_{}'.format(ref.index), expr_text))
 
-        df, upd_tags = comp.compute(df, value_exprs)
+        df, upd_tags, native = comp.compute_lazy(df, value_exprs)
         targets = [t for t in targets if t is not None]
         from pyspark.sql import types as T
 
         from .mixedcell import is_mixed_type, pack_col
+
+        # the WHERE condition is materialized with the values, so it
+        # resolves against the source cells: a target re-packed to the
+        # mixed representation below would compare a struct to the
+        # original scalar type
+        df = df.withColumns({**native, '__upd_cond': cond})
         new_types = {f.name: f.dataType for f in df.schema.fields}
-        # materialize the WHERE condition BEFORE any target column is
-        # re-packed to the mixed representation: `cond` references source
-        # columns by name, and re-resolving it against a repacked column
-        # would compare a struct to the original scalar type
-        df = df.withColumn('__upd_cond', cond)
         cond = F.col('__upd_cond')
         updates = {}
         for idx in targets:
             src = internal_col('a', idx)
             name = '__upd_{}'.format(idx)
             new_val = F.col(name)
+            # the cell a non-updating row keeps
+            kept = F.col(src)
             orig_tag = type_tag(wf.a.types[idx]) if wf.a.types else 'any'
             new_tag = 'mixed' if is_mixed_type(new_types.get(name, T.NullType())) \
                 else upd_tags.get(name, 'any')
@@ -1007,9 +1035,9 @@ class StageRunner:
                 # becomes mixed (the reference's heterogeneous-UPDATE
                 # shape — pre-r15 this silently stringified)
                 if orig_tag in scalar_tags:
-                    df = df.withColumn(src, pack_col(F.col(src), orig_tag))
+                    kept = pack_col(kept, orig_tag)
                 else:
-                    df = df.withColumn(src, pack_col(F.col(src).cast('string'), 'str'))
+                    kept = pack_col(kept.cast('string'), 'str')
             elif (orig_tag in scalar_tags and new_tag in scalar_tags
                     and orig_tag != new_tag):
                 # typed value into a differently-typed column (e.g.
@@ -1021,23 +1049,17 @@ class StageRunner:
                 if always_updates:
                     updates[src] = new_val
                     continue
-                df = df.withColumn(src, pack_col(F.col(src), orig_tag))
+                kept = pack_col(kept, orig_tag)
                 new_val = pack_col(new_val, new_tag)
             elif orig_tag == 'str' and new_tag != 'str':
                 # string target, untaggable value kind (json/temporal/
                 # array): stringify (CSV-writer parity)
                 new_val = new_val.cast('string')
-            updates[src] = F.when(cond, new_val).otherwise(F.col(src))
-        if updates:
-            df = df.withColumns(updates)
+            updates[src] = F.when(cond, new_val).otherwise(kept)
 
-        out_cols = {}
-        for i in range(wf.a.width):
-            out_cols['__out_{}'.format(i)] = F.col(internal_col('a', i))
-        keep = ['__out_{}'.format(i) for i in range(wf.a.width)] + [NR_COL]
-        if wf.a.ragged:
-            keep.append(NF_COL)
-        df = df.withColumns(out_cols).select(*keep)
+        outs = [updates.get(internal_col('a', i), F.col(internal_col('a', i)))
+                .alias('__out_{}'.format(i)) for i in range(wf.a.width)]
+        df = df.select(*outs, NR_COL, *([NF_COL] if wf.a.ragged else []))
         header = list(wf.a.header) if wf.a.header is not None else None
         return StageResult(df=df, out_names=header, order_cols=[F.col(NR_COL)],
                            warnings=self.warnings,
@@ -1073,13 +1095,14 @@ class StageRunner:
                 for i, expr in enumerate(stage.sort_key_exprs):
                     sort_cols.append('__sort_{}'.format(i))
                     named_exprs.append(('__sort_{}'.format(i), expr))
-            df, _tags = comp.compute(df, named_exprs)
-            df = df.withColumns({'__out_{}'.format(j): F.col(internal_col('a', i))
-                                 for j, i in enumerate(keep)})
+            df, _tags, native = comp.compute_lazy(df, named_exprs)
+            outs = {'__out_{}'.format(j): F.col(internal_col('a', i))
+                    for j, i in enumerate(keep)}
             out_names = [wf.a.header[i] for i in keep] if wf.a.header is not None else None
-            return self._finalize_simple(stage, wf, comp, df,
-                                         ['__out_{}'.format(j) for j in range(len(keep))],
-                                         out_names, unnest_col=None, sort_cols=sort_cols)
+            return self._finalize_simple(stage, wf, comp, df, outs, out_names,
+                                         unnest_col=None,
+                                         sorts={c: _computed(native, c)
+                                                for c in sort_cols})
 
         # ---- select list expansion --------------------------------------
         agg_calls: dict[int, AggCall] = {}
@@ -1168,11 +1191,13 @@ class StageRunner:
         # there (and only there: sort keys / unnest sources need the
         # runtime type)
         render_names = {cname for kind, cname in out_plan if kind == 'col'}
-        df, tags = comp.compute(df, named_exprs, render_names=render_names)
+        df, tags, native = comp.compute_lazy(df, named_exprs,
+                                             render_names=render_names)
 
         # unnest explode
         unnest_col = None
         if unnest_out_col is not None:
+            df, native = df.withColumns(native), {}
             keep = [c for c in df.columns if c != unnest_out_col]
             # posexplode_OUTER + drop-null-pos == posexplode row-for-row
             # (empty/null arrays emit one null-pos row, filtered here),
@@ -1185,19 +1210,16 @@ class StageRunner:
             unnest_col = '__unnest_val'
 
         # final output columns
-        out_cols: list[str] = []
-        assigns = {}
+        outs: dict[str, Column] = {}
         json_outs: list[str] = []
         json_src_cols = {internal_col('a', i) for i in wf.a.json_cols} | (
             {internal_col('b', i) for i in wf.b.json_cols} if wf.b is not None else set())
         for j, (kind, payload) in enumerate(out_plan):
             name = '__out_{}'.format(j)
             src = unnest_col if kind == 'unnest' else payload
-            assigns[name] = F.col(src)
-            out_cols.append(name)
+            outs[name] = _computed(native, src)
             if kind == 'col' and (payload in json_src_cols or tags.get(payload) == 'json'):
                 json_outs.append(name)
-        df = df.withColumns(assigns)
 
         # star over a ragged table: output records keep their true widths.
         # Supported when one bare '*' is the final select item (the spliced
@@ -1205,14 +1227,15 @@ class StageRunner:
         stars = [i for i, it in enumerate(stage.select_items) if it.star == '*']
         ragged_star = (len(stars) == 1 and stars[0] == len(stage.select_items) - 1
                        and wf.a.ragged and wf.b is None)
-        extra_keep = None
+        extra = None
         if ragged_star:
-            n_prefix_cols = len(out_cols) - wf.a.width
-            df = df.withColumn('__trim_w', F.lit(n_prefix_cols) + F.col(NF_COL))
-            extra_keep = ['__trim_w']
-        res = self._finalize_simple(stage, wf, comp, df, out_cols, out_names,
-                                    unnest_col=unnest_col, sort_cols=sort_cols,
-                                    extra_keep=extra_keep)
+            n_prefix_cols = len(outs) - wf.a.width
+            extra = {'__trim_w': F.lit(n_prefix_cols) + F.col(NF_COL)}
+        res = self._finalize_simple(stage, wf, comp, df, outs, out_names,
+                                    unnest_col=unnest_col,
+                                    sorts={c: _computed(native, c)
+                                           for c in sort_cols},
+                                    extra=extra)
         if ragged_star:
             res.trim_width_col = '__trim_w'
         res.json_out_cols = json_outs
@@ -1235,19 +1258,17 @@ class StageRunner:
         except Exception:
             pass
         width = df.agg(F.max(F.size('__unpack_src'))).collect()[0][0] or 1
-        assigns = {'__out_{}'.format(i): F.try_element_at('__unpack_src', F.lit(i + 1))
-                   for i in range(width)}
-        assigns['__trim_w'] = F.size('__unpack_src')
-        df = df.withColumns(assigns)
-        sort_cols: list[str] = []
+        outs = {'__out_{}'.format(i): F.try_element_at('__unpack_src', F.lit(i + 1))
+                for i in range(width)}
+        sorts: dict[str, Column] = {}
         if stage.sort_key_exprs is not None:
-            for i, expr in enumerate(stage.sort_key_exprs):
-                sort_cols.append('__sort_{}'.format(i))
-            df, _t = comp.compute(df, list(zip(sort_cols, stage.sort_key_exprs)))
-        res = self._finalize_simple(stage, wf, comp, df,
-                                    ['__out_{}'.format(i) for i in range(width)],
-                                    None, unnest_col=None, sort_cols=sort_cols,
-                                    extra_keep=['__trim_w'])
+            sort_cols = ['__sort_{}'.format(i) for i in range(len(stage.sort_key_exprs))]
+            df, _t, native = comp.compute_lazy(
+                df, list(zip(sort_cols, stage.sort_key_exprs)))
+            sorts = {c: _computed(native, c) for c in sort_cols}
+        res = self._finalize_simple(stage, wf, comp, df, outs, None,
+                                    unnest_col=None, sorts=sorts,
+                                    extra={'__trim_w': F.size('__unpack_src')})
         res.trim_width_col = '__trim_w'
         return res
 
@@ -1355,11 +1376,22 @@ class StageRunner:
         return joined, [F.col('__hs_rank').asc()]
 
     def _finalize_simple(self, stage: ParsedStage, wf: WorkFrame, comp: _ExprComputer,
-                         df: DataFrame, out_cols: list[str],
+                         df: DataFrame, outs: dict[str, Column],
                          out_names: list[str] | None,
-                         unnest_col: str | None, sort_cols: list[str] | None = None,
-                         extra_keep: list[str] | None = None) -> StageResult:
-        sort_cols = sort_cols or []
+                         unnest_col: str | None,
+                         sorts: dict[str, Column] | None = None,
+                         extra: dict[str, Column] | None = None) -> StageResult:
+        """``outs``, ``sorts`` and ``extra``: output, sort-key and
+        carried columns by name, selected with the order columns in ONE
+        projection."""
+        sorts = sorts or {}
+        out_cols, sort_cols = list(outs), list(sorts)
+        has_bnr = wf.b is not None and BNR_COL in df.columns
+        df = df.select(*[c.alias(n) for n, c in outs.items()], NR_COL,
+                       *[c.alias(n) for n, c in sorts.items()],
+                       *(['__unnest_pos'] if unnest_col is not None else []),
+                       *([BNR_COL] if has_bnr else []),
+                       *[c.alias(n) for n, c in (extra or {}).items()])
 
         # build the canonical row order: (sort keys [reversed], nr, bnr,
         # unnest pos) — bNR included because the reference emits join matches
@@ -1388,17 +1420,10 @@ class StageRunner:
         # and CSV columns are typed/strings by construction).
         schema_by_name = {f.name: f.dataType for f in df.schema.fields}
         from .mixedcell import is_mixed_type as _is_mixed
-        if sort_cols and any(c in schema_by_name and _is_mixed(schema_by_name[c])
-                             for c in sort_cols):
+        if any(_is_mixed(schema_by_name[c]) for c in sort_cols):
             df, order = self._host_sort_mixed(
-                df, sort_cols, rev,
-                has_bnr=wf.b is not None and BNR_COL in df.columns,
+                df, sort_cols, rev, has_bnr=has_bnr,
                 unnest_col=unnest_col, comp=comp)
-            keep_extra = [NR_COL, '__hs_rank'] + sort_cols \
-                + (['__unnest_pos'] if unnest_col is not None else []) \
-                + ([BNR_COL] if wf.b is not None and BNR_COL in df.columns else []) \
-                + (extra_keep or [])
-            df = df.select(*out_cols, *[c for c in keep_extra if c in df.columns])
             return self._finalize_after_order(stage, wf, comp, df, out_cols,
                                               out_names, unnest_col, sort_cols,
                                               order)
@@ -1408,7 +1433,7 @@ class StageRunner:
             guard_needed = not single_row_source and not _bare_field_null_free(
                 comp.binding, wf, stage.join_subtype,
                 sort_exprs[ci] if ci < len(sort_exprs) else None)
-            if c in df.columns and guard_needed:
+            if guard_needed:
                 # reference parity (round-12): Python's sort compares a
                 # None key against its neighbor and raises — ANY null
                 # sort key is a runtime error, never a silent
@@ -1422,15 +1447,10 @@ class StageRunner:
                     "and '{}'".format(t))).otherwise(key)
             order.append(key.desc() if rev else key.asc())
         order.append(F.col(NR_COL).desc() if rev else F.col(NR_COL).asc())
-        has_bnr = wf.b is not None and BNR_COL in df.columns
         if has_bnr:
             order.append(F.col(BNR_COL).desc_nulls_last() if rev else F.col(BNR_COL).asc_nulls_first())
         if unnest_col is not None:
             order.append(F.col('__unnest_pos').desc() if rev else F.col('__unnest_pos').asc())
-
-        keep_extra = [NR_COL] + sort_cols + (['__unnest_pos'] if unnest_col is not None else []) \
-            + ([BNR_COL] if has_bnr else []) + (extra_keep or [])
-        df = df.select(*out_cols, *keep_extra)
         return self._finalize_after_order(stage, wf, comp, df, out_cols,
                                           out_names, unnest_col, sort_cols,
                                           order)
@@ -2190,7 +2210,6 @@ class StageRunner:
                                         F.col(parity_flags[out_name]))
                 renamed['__flag_{}'.format(j)] = base_flag
                 final_flags['__out_{}'.format(j)] = '__flag_{}'.format(j)
-        grouped = grouped.withColumns(renamed)
         if mixed_key_cols:
             # output order: the reference sorts the key set host-side —
             # sorted() for Python (TypeError on cross-type keys),
@@ -2202,9 +2221,11 @@ class StageRunner:
         else:
             order = [F.col(c).asc() for c in key_cols]
             keep_rank = []
-        keep = ['__out_{}'.format(j) for j in range(len(out_specs))] + key_cols \
-            + keep_rank + list(final_flags.values())
-        grouped = grouped.select(*keep)
+        # outputs, keys, rank and int flags in ONE projection
+        outs = [renamed['__out_{}'.format(j)].alias('__out_{}'.format(j))
+                for j in range(len(out_specs))]
+        flags = [renamed[f].alias(f) for f in final_flags.values()]
+        grouped = grouped.select(*outs, *key_cols, *keep_rank, *flags)
 
         if stage.top_count is not None:
             grouped = grouped.orderBy(*order).limit(stage.top_count) if order \

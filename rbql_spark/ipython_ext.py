@@ -52,6 +52,7 @@ def _get_or_create_spark():
     return (SparkSession.builder.master('local[*]')
             .appName('rbql-spark-ipython')
             .config('spark.sql.execution.arrow.pyspark.enabled', 'true')
+            .config('spark.python.sql.dataFrameDebugging.enabled', 'false')
             .config('spark.ui.enabled', 'false')
             .getOrCreate())
 

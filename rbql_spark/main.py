@@ -143,6 +143,7 @@ def _build_session(cpus: int):
              .config('spark.sql.shuffle.partitions', str(cpus))
              .config('spark.sql.adaptive.enabled', 'true')
              .config('spark.sql.execution.arrow.pyspark.enabled', 'true')
+             .config('spark.python.sql.dataFrameDebugging.enabled', 'false')
              .config('spark.ui.enabled', 'false')
              .getOrCreate())
     spark.sparkContext.setLogLevel('ERROR')

@@ -5,13 +5,26 @@ Reference concept: ``RBQLTableRegistry`` implementations — list registry
 sqlite registry (rbql_sqlite.py:59-65).  Spark-side, a table id resolves to a
 DataFrame via an explicit mapping, a parquet/csv/jsonl path, or a Spark
 catalog table.
+
+Parquet schema cache: ``spark.read.parquet(path)`` runs a Spark job to
+infer the schema from the files' footers, while a read given the schema
+runs none (83–126 ms against 14 ms for a 3 KB file, local[2] on a 4-core
+box).  :func:`read_parquet` infers a path's schema once and keeps
+``{path: (version, StructType)}``, one entry per absolute path; later
+reads pass the stored schema as long as the version is unchanged.  The version is every directory entry's
+``(name, mtime_ns, size)`` (or the file's own for a file path) plus the
+session's parquet inference settings (``_PARQUET_INFERENCE_CONF``).  File
+listing still happens on every read and no DataFrame is reused.  A
+directory with subdirectories (partition discovery) or a path whose
+``stat`` fails is read without the cache.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .binding import TableHandle
 from .errors import RbqlIOHandlingError
@@ -83,6 +96,68 @@ def parquet_footer_info(path: str) -> tuple[frozenset[str], int | None]:
     return frozenset(proven or ()), total_rows
 
 
+# session settings that change the schema Spark infers from parquet footers
+_PARQUET_INFERENCE_CONF = (
+    'spark.sql.parquet.binaryAsString',
+    'spark.sql.parquet.int96AsTimestamp',
+    'spark.sql.parquet.inferTimestampNTZ.enabled',
+    'spark.sql.parquet.mergeSchema',
+    'spark.sql.legacy.parquet.nanosAsLong',
+)
+
+# Process-wide, because callers build a registry per query.  The key holds
+# everything the inferred schema depends on, so a hit returns what a fresh
+# inference would; two threads missing at once both infer the same value.
+_parquet_schemas: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _parquet_version(spark: SparkSession, path: str) -> tuple | None:
+    """The files' ``(name, mtime_ns, size)`` and the inference settings;
+    None when the path cannot be versioned."""
+    try:
+        if os.path.isdir(path):
+            files = []
+            with os.scandir(path) as entries:
+                for e in entries:
+                    if e.is_dir():
+                        return None
+                    st = e.stat()
+                    files.append((e.name, st.st_mtime_ns, st.st_size))
+            files.sort()
+        else:
+            st = os.stat(path)
+            files = [('', st.st_mtime_ns, st.st_size)]
+    except OSError:
+        return None
+    conf = tuple(spark.conf.get(k, None) for k in _PARQUET_INFERENCE_CONF)
+    return tuple(files), conf
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema at most once per
+    file version (see the module docstring)."""
+    key = os.path.abspath(path)
+    # versioned BEFORE the read: a file rewritten in between leaves a
+    # stale version, which only costs the next read a fresh inference
+    version = _parquet_version(spark, key)
+    cached = _parquet_schemas.get(key)
+    if version is not None and cached is not None and cached[0] == version:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if version is not None:
+        _parquet_schemas[key] = (version, df.schema)
+    return df
+
+
+def parquet_handle(spark: SparkSession, path: str) -> TableHandle:
+    """A parquet table with its footer facts (null-free columns, row
+    count)."""
+    df = read_parquet(spark, path)
+    nf, n_rows = parquet_footer_info(path)
+    return TableHandle(df=df, header=list(df.columns),
+                       null_free=nf, row_count=n_rows)
+
+
 class TableRegistry:
     def get_table(self, spark: SparkSession, table_id: str) -> TableHandle | None:
         raise NotImplementedError
@@ -108,10 +183,7 @@ class ParquetDirRegistry(TableRegistry):
         path = os.path.join(self.sf_dir, table_id + '.parquet')
         if not os.path.exists(path):
             return None
-        df = spark.read.parquet(path)
-        nf, n_rows = parquet_footer_info(path)
-        return TableHandle(df=df, header=list(df.columns),
-                           null_free=nf, row_count=n_rows)
+        return parquet_handle(spark, path)
 
 
 class CatalogRegistry(TableRegistry):
@@ -169,10 +241,7 @@ class PathRegistry(TableRegistry):
             return None
         lower = path.lower()
         if lower.endswith('.parquet'):
-            df = spark.read.parquet(path)
-            nf, n_rows = parquet_footer_info(path)
-            return TableHandle(df=df, header=list(df.columns),
-                               null_free=nf, row_count=n_rows)
+            return parquet_handle(spark, path)
         if lower.endswith(('.jsonl', '.ndjson', '.json')):
             from .sources.jsonl import read_jsonl
             return read_jsonl(spark, path)

@@ -95,9 +95,9 @@ def _record_split_rfc(content: str, dlm: str, comment_prefix: str | None = None,
         line = lines[idx]
         idx += 1
         nl += 1
-        if comment_prefix is not None and line.startswith(comment_prefix):
+        if comment_prefix and line.startswith(comment_prefix):
             continue
-        if comment_regex is not None and re.search(comment_regex, line) is not None:
+        if comment_regex and re.search(comment_regex, line) is not None:
             continue
         rows = [line]
         if line.count('"') % 2 == 1:
@@ -568,7 +568,7 @@ def _rfc_scan(lines, parity: int, comment_prefix, comment_rgx):
     record = 0
     for line in lines:
         if parity == 0 and (
-                (comment_prefix is not None and line.startswith(comment_prefix))
+                (comment_prefix and line.startswith(comment_prefix))
                 or (comment_rgx is not None and comment_rgx.search(line) is not None)):
             yield None, line, parity
             continue

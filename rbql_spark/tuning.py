@@ -181,8 +181,14 @@ def apply_plan_width(df):
         # repartition(n) (spread_partitions) pins its OWN exchange width
         # explicitly, so the initial-width decision still applies to
         # the aggregations above it (r17: dedup_lines/spans freq build)
-        keyed = _has_node(df._jdf.queryExecution().analyzed(),
-                          'RepartitionByExpression')
+        # Catalyst's tree-pattern bits answer "any repartition?" in one
+        # call; only a plan that has one is walked (the pattern also
+        # covers the round-robin Repartition)
+        analyzed = df._jdf.queryExecution().analyzed()
+        pattern = (spark._jvm.org.apache.spark.sql.catalyst.trees
+                   .TreePattern.REPARTITION_OPERATION())
+        keyed = (analyzed.containsPattern(pattern)
+                 and _has_node(analyzed, 'RepartitionByExpression'))
         nbytes = None if keyed else leaf_bytes(df)
     except Exception:
         nbytes = None

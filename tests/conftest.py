@@ -19,6 +19,9 @@ def spark():
         .config('spark.default.parallelism', '4')
         .config('spark.sql.adaptive.enabled', 'true')
         .config('spark.sql.execution.arrow.pyspark.enabled', 'true')
+        # as rbql_spark.session.build_session: no Python call-site capture
+        # on every Column call
+        .config('spark.python.sql.dataFrameDebugging.enabled', 'false')
         .config('spark.ui.enabled', 'false')
         .config('spark.driver.memory', '4g')
         .getOrCreate()

@@ -520,3 +520,20 @@ def test_inconsistent_width_warning_names_first_records(spark, tmp_path,
     assert h.warnings == ['Number of fields in "input" table is not '
                           'consistent: e.g. record 1 -> 2 fields, '
                           'record 4 -> 3 fields']
+
+
+@pytest.mark.parametrize('option', ['comment_prefix', 'comment_regex'])
+def test_empty_comment_filter_keeps_every_row(spark, tmp_path, monkeypatch, option):
+    # an empty comment prefix or regex means "no comment filter" under
+    # every policy and reader, as an absent one does
+    import rbql_spark.sources.csv as C
+    p = _write(tmp_path, 'plain.csv', 'a,b\n1,2\n')
+    got = {}
+    for policy, bulk in [('simple', False), ('quoted_rfc', False),
+                         ('quoted_rfc', True)]:
+        monkeypatch.setattr(C, '_DISTRIBUTED_SCAN_MIN_BYTES',
+                            1 if bulk else 1 << 62)
+        h = read_csv(spark, p, policy=policy, **{option: ''})
+        got[(policy, bulk)] = tuple(_handle_rows(h)[0])
+    assert len(set(got.values())) == 1, got
+    assert [r[:2] for r in got[('simple', False)]] == [('a', 'b'), ('1', '2')]

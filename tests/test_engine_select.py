@@ -200,3 +200,15 @@ def test_order_by_null_key_matches_reference(spark):
             assert got[1] == ref[1], (q, tbl, got, ref)
         else:
             assert 'NoneType' in got[1], (q, tbl, got, ref)
+
+
+@pytest.mark.parametrize('names', [['k', 'K', 'v'], ['k', 'k.x', 'v`w']],
+                         ids=['duplicate', 'quoted'])
+def test_input_column_names_bind_by_position(spark, names):
+    # a DataFrame's columns may repeat a name (case-insensitively) or hold
+    # characters that need quoting; binding is by position either way
+    from rbql_spark.api import collect_result_rows, query_dataframe
+    df = spark.createDataFrame([(1, 2, 'x'), (3, 4, 'y')],
+                               'c0 long, c1 long, c2 string').toDF(*names)
+    res = query_dataframe(spark, 'SELECT a3, a1 + a2 WHERE a1 > 1 ORDER BY a2', df)
+    assert collect_result_rows(res) == [['y', 7]]

@@ -925,6 +925,31 @@ def test_driver_bound_sort_adds_no_job_to_gate(spark, sf_dir, entry, name):
         assert one < global_
 
 
+def _count_nodes(jplan, name: str) -> int:
+    n, stack = 0, [jplan]
+    while stack:
+        node = stack.pop()
+        n += node.getClass().getSimpleName() == name
+        ch = node.children()
+        stack.extend(ch.apply(i) for i in range(ch.size()))
+    return n
+
+
+# one gate per query shape.  Each build phase adds one projection: a side's
+# binding (renames, NF and, unless a filter must reach the scan first, the
+# order surrogate), the surrogate after an early filter, the computed
+# output, and the display names; a pipe adds its hand-off, a left join its
+# bNF default
+@pytest.mark.parametrize('name,projects', [
+    ('rbql_select_where', 4), ('rbql_select_top_order', 3),
+    ('rbql_group_agg', 4), ('rbql_js_filter_order', 4),
+    ('rbql_pipe_chain', 8), ('rbql_multikey_join', 5),
+    ('rbql_update_join', 6)])
+def test_gate_build_projection_count(spark, sf_dir, entry, name, projects):
+    df = entry.queries()[name](spark, sf_dir)
+    assert _count_nodes(df._jdf.queryExecution().analyzed(), 'Project') == projects
+
+
 def test_scan_partition_estimate_over_file_scans(spark, sf_dir, tmp_path):
     # a narrow chain over a parquet or text file scan has a byte-sized
     # partition estimate (spread_partitions relies on it instead of

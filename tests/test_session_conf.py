@@ -99,3 +99,15 @@ def test_public_call_leaves_session_conf(spark, tmp_path, sf_dir, monkeypatch,
     before = spark.conf.getAll
     call(spark, tmp_path, sf_dir, monkeypatch)
     assert spark.conf.getAll == before
+
+
+def test_build_session_skips_call_site_capture(monkeypatch):
+    # the engine's session turns off PySpark's call-site capture on every
+    # Column call; read from the builder's options, so the shared test
+    # session is left alone
+    from pyspark.sql import SparkSession
+    from rbql_spark.session import build_session
+    monkeypatch.setattr(SparkSession.Builder, 'getOrCreate',
+                        lambda self: dict(self._options))
+    opts = build_session(master='local[1]')
+    assert opts['spark.python.sql.dataFrameDebugging.enabled'] == 'false'

@@ -40,6 +40,7 @@ def main():
     cpus = os.environ.get('SPARK_GRAFT_CPUS', '32')
     spark = (SparkSession.builder.master('local[{}]'.format(cpus))
              .config('spark.sql.shuffle.partitions', '32')
+             .config('spark.python.sql.dataFrameDebugging.enabled', 'false')
              .config('spark.ui.enabled', 'false')
              .config('spark.driver.memory', '8g')
              .appName('ab_rocksdb').getOrCreate())

@@ -55,6 +55,7 @@ def main() -> None:
     cpus = int(os.environ.get('SPARK_GRAFT_CPUS', '32'))
     spark = (SparkSession.builder.master('local[{}]'.format(cpus))
              .config('spark.sql.shuffle.partitions', str(cpus))
+             .config('spark.python.sql.dataFrameDebugging.enabled', 'false')
              .config('spark.ui.enabled', 'false')
              .config('spark.driver.memory', '16g').getOrCreate())
     spark.sparkContext.setLogLevel('ERROR')

@@ -71,6 +71,7 @@ def main():
              .config('spark.sql.shuffle.partitions', str(cpus))
              .config('spark.ui.enabled', 'false')
              .config('spark.ui.showConsoleProgress', 'false')
+             .config('spark.python.sql.dataFrameDebugging.enabled', 'false')
              .config('spark.driver.memory', '{}g'.format(min(8, max(2, cpus))))
              .getOrCreate())
     con = duckdb.connect()

@@ -5,6 +5,7 @@ from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master('local[8]')
          .config('spark.sql.shuffle.partitions','8')
          .config('spark.sql.adaptive.enabled','true')
+         .config('spark.python.sql.dataFrameDebugging.enabled', 'false')
          .config('spark.ui.enabled','false').getOrCreate())
 spark.sparkContext.setLogLevel('ERROR')
 import __spark_entry__ as e

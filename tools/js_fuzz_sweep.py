@@ -28,6 +28,7 @@ def main():
     offset = int(sys.argv[1]) if len(sys.argv) > 1 else 0
     spark = (SparkSession.builder.master('local[4]')
              .config('spark.sql.shuffle.partitions', '4')
+             .config('spark.python.sql.dataFrameDebugging.enabled', 'false')
              .config('spark.ui.enabled', 'false').getOrCreate())
     spark.sparkContext.setLogLevel('ERROR')
     fails = 0
