@@ -154,7 +154,9 @@ def _unwrap_spark_error(e: Exception, nr_resolver=None):
     path it embeds the failing row's raw order surrogate on a marker
     line; ``nr_resolver`` (StageResult.nr_resolver) converts it to the
     exact 1-based input record number — jobs run only on this error path.
-    Without a resolver the visible partition-ordinal approximation stands."""
+    Without a resolver the visible partition-ordinal approximation stands.
+    A bare in-plan guard (engine StageRunner._guard) marks its error with
+    its index instead; the resolver renders that error's exact text."""
     import re as _re
 
     from .errors import RbqlRuntimeError
@@ -170,8 +172,11 @@ def _unwrap_spark_error(e: Exception, nr_resolver=None):
         if nr_resolver is None:
             return text
         sm = _re.search(r'__RBQL_SURR_(\d+)__', full_msg)
+        rm = _re.search(r'__RBQL_ROW_ERR_(\d+)__', full_msg)
         try:
-            if sm:
+            if rm:
+                out = nr_resolver(None, row_err=int(rm.group(1)))
+            elif sm:
                 out = nr_resolver(int(sm.group(1)))
             else:
                 # markerless: either a pushed-guard error (no prefix) or
@@ -184,6 +189,8 @@ def _unwrap_spark_error(e: Exception, nr_resolver=None):
         if out is None:
             return text
         exact, details = out
+        if exact is None:
+            return details  # a bare guard's rendered text
         if details is None:
             if not text.startswith('At record '):
                 return 'At record {}, Details: {}'.format(exact, text)

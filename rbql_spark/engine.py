@@ -21,8 +21,10 @@ input-ordered ARRAY_AGG) — are reconstructed declaratively:
 
 from __future__ import annotations
 
+import operator
 import re
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -45,13 +47,13 @@ from .pyeval import PyExpr, eval_columns
 from .registry import TableRegistry
 from .rownum import attach_nr, attach_running_count
 from .translator import ExpressionTranslator, TCol, TranslationFallback
-from .tuning import apply_plan_width, one_partition, scoped_conf
+from .tuning import apply_plan_width, one_partition
 
 
 @dataclass
 class EngineOptions:
     broadcast_join: bool = True            # force broadcast of the B side
-    strict_checks: bool = True             # eager cardinality / const-group checks
+    strict_checks: bool = True             # in-plan join-cardinality / const-group guards
     user_init_code: str = ''
     dialect: str = 'python'                # expression language: 'python' | 'js'
 
@@ -79,9 +81,10 @@ class StageResult:
     # query running JVM-side": fallback_count == 0 means no Python stage
     # was planned for expression evaluation.
     telemetry: dict = field(default_factory=dict)
-    # non-dense NR path: maps an evaluator-fallback error's raw order
-    # surrogate back to the exact 1-based INPUT record number (collect
-    # paths call it only when an error actually surfaces)
+    # error-path resolver (_make_surrogate_resolver): maps a record
+    # error to the FIRST failing INPUT record and renders a bare in-plan
+    # guard's text (collect paths call it only when an error actually
+    # surfaces)
     nr_resolver: object = None
     # frames this query pinned for cross-job partition stability
     # (UPDATE…NU running count, dense ORDER_SRC numbering, unpack
@@ -133,6 +136,9 @@ class StageResult:
         return d.select([F.col(c).alias(n) for c, n in zip(cols, uniq)])
 
 
+# per-key B record count, carried into the join by the match-count guards
+_B_MATCHES_COL = '__b_matches'
+
 _NR_REF_RGX = re.compile(r'(?:^|[^\w])(NR|aNR)(?:$|[^\w])|a\.NR')
 _BNR_REF_RGX = re.compile(r'(?:^|[^\w])bNR(?:$|[^\w])|b\.NR')
 
@@ -170,22 +176,52 @@ def _bare_field_null_free(binding: Binding, wf: WorkFrame,
     return False
 
 
-def _make_surrogate_resolver(numbered_df: DataFrame, pre_filter_df, early_cond,
-                             failure_probes: list | None = None,
-                             pushdown_probes: list | None = None):
-    """Build the error-path surrogate → exact-input-NR (+Details) resolver.
+def _first_firing(frame: DataFrame, nr_col: str, pairs: list):
+    """(min ``nr_col`` over the rows of ``frame`` where a (fire_cond, msg)
+    guard pair fires, the first firing pair's message on that row) or
+    None.  Pair order is translation order, the reference's evaluation
+    order within a record.  The message is best-effort: None when it
+    cannot be recovered."""
+    fired = reduce(operator.or_, [c for c, _m in pairs])
+    row = frame.where(fired).agg(F.min(F.col(nr_col))).collect()
+    s = row[0][0] if row else None
+    if s is None:
+        return None
+    msg = None
+    try:
+        sel = (frame.where(F.col(nr_col) == F.lit(s)).limit(1).select(
+            *[c.alias('__pc{}'.format(i)) for i, (c, _m) in enumerate(pairs)],
+            *[m.alias('__pm{}'.format(i)) for i, (_c, m) in enumerate(pairs)]
+        ).collect())
+        if sel:
+            msg = next((sel[0]['__pm{}'.format(i)] for i in range(len(pairs))
+                        if sel[0]['__pc{}'.format(i)]), None)
+    except Exception:
+        pass
+    return int(s), msg
+
+
+def _make_surrogate_resolver(numbered_df: DataFrame, pre_filter_df=None,
+                             early_cond=None, failure_probes=(),
+                             pushdown_probes=(), row_errors=(),
+                             dense: bool = False):
+    """Build the error-path resolver: it runs jobs only after a task has
+    failed.
 
     Reference semantics: the sequential loop stops at the FIRST failing
-    record.  Spark surfaces whichever task fails first, so resolution has
-    two parts, all jobs running only when an error actually surfaced:
+    record.  Spark surfaces whichever task fails first, so a record
+    error (``resolve(raw | None)``) is resolved in two parts:
 
     1. ``failure_probes`` (one per guarded frame / evaluator fallback)
        each return (min failing-row surrogate in stream order, that
        row's Details message); the minimum across probes and the caught
-       surrogate is the first failure — this is what makes
+       surrogate ``raw`` is the first failure — this is what makes
        fail-on-every-row errors report record 1 like the reference, and
        what lets the driver re-render the FIRST failure's exact quoted
-       value instead of whichever task lost the race (r14 verdict #2b).
+       value instead of whichever task lost the race.  Among probes the
+       first registered wins ties (registration order is evaluation
+       order); a probe beats the caught surrogate at equality (its
+       Details are the first failure's own text).
     2. The surrogate is converted to the exact 1-based INPUT record
        number: ``count(NR_COL <= s)`` over ``numbered_df``; when the
        early-filter pushdown ran the surrogate numbers the FILTERED
@@ -197,100 +233,65 @@ def _make_surrogate_resolver(numbered_df: DataFrame, pre_filter_df, early_cond,
 
     ``pushdown_probes``: (fire_cond, msg_col) pairs harvested from the
     early-filter pushdown translator — its guards run BEFORE NR exists,
-    so their errors carry no record prefix at all.  ``resolve(None)``
-    finds the first firing row over the PRE-FILTER (input-ordered)
-    frame and returns its exact input record number + message (r14
-    verdict #2a); the guard error numbers input records because the
-    reference evaluates WHERE per input record.
+    so their errors carry no record prefix at all; ``resolve(None)``
+    also finds the first firing row over the PRE-FILTER (input-ordered)
+    frame, numbered as input records because the reference evaluates
+    WHERE per input record.
 
-    Returns ``resolve(raw | None) -> (exact_input_nr, details | None) |
-    None``."""
+    ``row_errors``: one renderer per bare in-plan guard
+    (StageRunner._guard); ``resolve(None, row_err=i)`` returns
+    ``(None, renderer())``, the exact text of guard ``i``'s error, which
+    quotes the first offending row's data.
+
+    ``dense``: NR is the record number itself, so the first failure's
+    NR needs no conversion.
+
+    Returns ``resolve(raw | None, row_err=None) -> (exact_input_nr | None,
+    details | None) | None``."""
     from .rownum import attach_order_surrogate
-    probes = list(failure_probes or [])
-    pd_pairs = list(pushdown_probes or [])
+    probes = list(failure_probes)
+    pd_pairs = list(pushdown_probes)
 
-    def resolve(raw: int | None):
-        if raw is None:
-            # markerless error (pushed-guard: no record prefix at all;
-            # agg-argument guard: prefix is the partition-ordinal
-            # approximation) — recover (exact input NR, that row's
-            # Details) from the registered guards
-            cands: list[tuple[int, str | None]] = []
-            if pd_pairs:
-                base = pre_filter_df if pre_filter_df is not None else numbered_df
-                d = attach_order_surrogate(base, '__res_nr')
-                fired = pd_pairs[0][0]
-                for c, _m in pd_pairs[1:]:
-                    fired = fired | c
-                row = d.where(fired).agg(F.min(F.col('__res_nr'))).collect()
-                s = row[0][0] if row else None
-                if s is not None:
-                    nr = int(d.where(F.col('__res_nr') <= F.lit(s)).count())
-                    msg = None
-                    try:
-                        sel = (d.where(F.col('__res_nr') == F.lit(s)).limit(1).select(
-                            *[c.alias('__pc{}'.format(i)) for i, (c, _m) in enumerate(pd_pairs)],
-                            *[m.alias('__pm{}'.format(i)) for i, (_c, m) in enumerate(pd_pairs)]
-                        ).collect())
-                        if sel:
-                            r0 = sel[0]
-                            for i in range(len(pd_pairs)):
-                                if r0['__pc{}'.format(i)]:
-                                    msg = r0['__pm{}'.format(i)]
-                                    break
-                    except Exception:
-                        pass
-                    cands.append((nr, msg))
-            best_s, best_msg = None, None
-            for probe in probes:
-                try:
-                    m = probe()
-                except Exception:
-                    continue
-                if m is None:
-                    continue
-                s, msg = m
-                if best_s is None or int(s) < best_s:
-                    best_s, best_msg = int(s), msg
-            if best_s is not None:
-                r = int(numbered_df.where(F.col(NR_COL) <= F.lit(best_s)).count())
-                if pre_filter_df is not None and r > 0:
-                    d2 = attach_order_surrogate(pre_filter_df, '__res_nr')
-                    row = (d2.filter(early_cond).orderBy(F.col('__res_nr'))
-                            .limit(r).agg(F.max(F.col('__res_nr'))).collect())
-                    s_r = row[0][0] if row else None
-                    if s_r is not None:
-                        r = int(d2.where(F.col('__res_nr') <= F.lit(s_r)).count())
-                cands.append((r, best_msg))
-            if not cands:
-                return None
-            return min(cands, key=lambda t: t[0])
+    def count_upto(frame: DataFrame, col: str, s: int) -> int:
+        return int(frame.where(F.col(col) <= F.lit(s)).count())
 
-        best, best_msg = int(raw), None
+    def input_record(s: int) -> int:
+        """Stream surrogate → exact 1-based input record number."""
+        r = count_upto(numbered_df, NR_COL, s)
+        if pre_filter_df is None or r == 0:
+            return r
+        # the r-th survivor of the early filter, counted among input rows
+        d = attach_order_surrogate(pre_filter_df, '__res_nr')
+        row = (d.filter(early_cond).orderBy(F.col('__res_nr'))
+                .limit(r).agg(F.max(F.col('__res_nr'))).collect())
+        s_r = row[0][0] if row else None
+        return r if s_r is None else count_upto(d, '__res_nr', s_r)
+
+    def resolve(raw: int | None, row_err: int | None = None):
+        if row_err is not None:
+            render = row_errors[row_err]
+            text = render() if render is not None else None
+            return None if text is None else (None, text)
+        cands: list[tuple[int, str | None]] = []
+        if raw is None and pd_pairs:
+            d = attach_order_surrogate(
+                pre_filter_df if pre_filter_df is not None else numbered_df,
+                '__res_nr')
+            hit = _first_firing(d, '__res_nr', pd_pairs)
+            if hit is not None:
+                cands.append((count_upto(d, '__res_nr', hit[0]), hit[1]))
+        best = None if raw is None else (int(raw), None)
         for probe in probes:
             try:
                 m = probe()
             except Exception:
                 continue  # best-effort: a probe that itself fails is skipped
-            if m is None:
-                continue
-            s, msg = m
-            # a probe beats the caught surrogate at equality (its Details
-            # are the first failure's own text), but among PROBES the
-            # first registered wins ties — registration order is select
-            # order, the reference's within-record evaluation order
-            if int(s) < best or (int(s) == best and best_msg is None):
-                best, best_msg = int(s), msg
-        r = int(numbered_df.where(F.col(NR_COL) <= F.lit(best)).count())
-        if pre_filter_df is None or r == 0:
-            return (r, best_msg)
-        d = attach_order_surrogate(pre_filter_df, '__res_nr')
-        row = (d.filter(early_cond).orderBy(F.col('__res_nr'))
-                .limit(r).agg(F.max(F.col('__res_nr'))).collect())
-        s_r = row[0][0] if row else None
-        if s_r is None:
-            return (r, best_msg)
-        return (int(d.where(F.col('__res_nr') <= F.lit(s_r)).count()), best_msg)
+            if m is not None and (best is None or m[0] < best[0] or (
+                    m[0] == best[0] and best[1] is None)):
+                best = m
+        if best is not None:
+            cands.append((best[0] if dense else input_record(best[0]), best[1]))
+        return min(cands, key=lambda t: t[0]) if cands else None
 
     return resolve
 
@@ -305,8 +306,12 @@ class _ExprComputer:
     """Computes named expression columns: translator first, batched pyeval
     fallback for the rest (ONE mapInPandas pass per batch of fallbacks)."""
 
-    def __init__(self, wf: WorkFrame, options: EngineOptions):
+    def __init__(self, wf: WorkFrame, options: EngineOptions,
+                 row_errors: list, numbered_df: DataFrame):
         self.wf = wf
+        # the A side numbered before any join: an input record's number
+        # counts A rows, and a join repeats a row per match
+        self.numbered_df = numbered_df
         self.binding = Binding(wf)
         self.translator = ExpressionTranslator(self.binding)
         self.options = options
@@ -322,6 +327,8 @@ class _ExprComputer:
         # Details text when a later row's task failed first (r14 verdict
         # #2b).
         self.failure_probes: list = []
+        # the query's bare in-plan guard renderers (StageRunner._guard)
+        self.row_errors = row_errors
 
     def _harvest_native_probes(self, df: DataFrame):
         pairs = self.translator.error_probes
@@ -334,34 +341,8 @@ class _ExprComputer:
         """Register a first-failure probe for (fire_cond, details_msg)
         guard pairs evaluated against ``df`` (which must carry NR_COL).
         Used for translator value guards and aggregate-argument guards."""
-        fired = pairs[0][0]
-        for c, _m in pairs[1:]:
-            fired = fired | c
-
-        def probe(frame=df, cond=fired, pairs=list(pairs)):
-            row = frame.where(cond).agg(F.min(F.col(NR_COL))).collect()
-            s = row[0][0] if row else None
-            if s is None:
-                return None
-            # the min-NR failing row's own Details: evaluate every
-            # guard's fire condition + message on that single row and
-            # take the first firing guard's text (translation order =
-            # evaluation order in the reference's sequential loop)
-            msg = None
-            try:
-                sel = (frame.where(F.col(NR_COL) == F.lit(s)).limit(1).select(
-                    *[c.alias('__pc{}'.format(i)) for i, (c, _m) in enumerate(pairs)],
-                    *[m.alias('__pm{}'.format(i)) for i, (_c, m) in enumerate(pairs)]
-                ).collect())
-                if sel:
-                    r0 = sel[0]
-                    for i in range(len(pairs)):
-                        if r0['__pc{}'.format(i)]:
-                            msg = r0['__pm{}'.format(i)]
-                            break
-            except Exception:
-                pass  # message recovery is best-effort; the number stands
-            return (int(s), msg)
+        def probe(frame=df, pairs=list(pairs)):
+            return _first_firing(frame, NR_COL, pairs)
         self.failure_probes.append(probe)
 
     def _add_pyeval_probe(self, df: DataFrame, fallback: list[PyExpr]):
@@ -382,23 +363,10 @@ class _ExprComputer:
                                    user_init_code=self.options.user_init_code,
                                    nr_dense=self.binding.nr_dense,
                                    probe_mode=True)
-            cond = F.col('__pf0').isNotNull()
-            for j in range(1, len(pes)):
-                cond = cond | F.col('__pf{}'.format(j)).isNotNull()
-            row = flagged.where(cond).agg(F.min(F.col(NR_COL))).collect()
-            s = row[0][0] if row else None
-            if s is None:
-                return None
-            msg = None
-            try:
-                sel = (flagged.where(F.col(NR_COL) == F.lit(s)).limit(1)
-                       .select(*['__pf{}'.format(j) for j in range(len(pes))])
-                       .collect())
-                if sel:
-                    msg = next((v for v in sel[0] if v is not None), None)
-            except Exception:
-                pass
-            return (int(s), msg)
+            # the first evaluator column holding an exception text
+            return _first_firing(flagged, NR_COL, [
+                (F.col(pe.out_col).isNotNull(), F.col(pe.out_col))
+                for pe in pes])
         self.failure_probes.append(probe)
 
     def telemetry(self) -> dict:
@@ -406,21 +374,33 @@ class _ExprComputer:
                 'fallback_count': self.fallback_count,
                 'fallback_reasons': list(self.fallback_reasons)}
 
+    def resolver(self):
+        """Error-path resolver for an engine-internal job.  Its NR-count
+        job runs over the PRE-compute numbered frame: a frame carrying a
+        failing evaluator column would re-raise inside the count
+        (mapInPandas blocks column pruning)."""
+        return _make_surrogate_resolver(
+            self.numbered_df, failure_probes=self.failure_probes,
+            row_errors=self.row_errors, dense=self.binding.nr_dense)
+
     def _raise_unwrapped(self, e: Exception):
-        """An engine-internal job (type-inference sample, width pre-scan)
-        executed an upstream evaluator stage and it raised — surface the
-        same exact first-failure error the terminal collect would have
-        (api._unwrap_spark_error + the surrogate resolver over the
-        PRE-compute numbered frame)."""
+        """An engine-internal job (type-inference sample, width pre-scan,
+        NU offsets) executed an upstream evaluator stage or in-plan guard
+        and it raised — surface the same exact first-failure error the
+        terminal collect would have (api._unwrap_spark_error)."""
         from .api import _unwrap_spark_error
-        resolver = None
-        if not self.binding.nr_dense:
-            resolver = _make_surrogate_resolver(
-                self.wf.df, None, None, self.failure_probes, [])
-        mapped = _unwrap_spark_error(e, resolver)
+        mapped = _unwrap_spark_error(e, self.resolver())
         if mapped is not None:
             raise mapped from None
         raise e
+
+    def collect(self, frame: DataFrame):
+        """collect() for an engine-internal job, with the error mapping
+        of the API's terminal collect."""
+        try:
+            return frame.collect()
+        except Exception as e:
+            self._raise_unwrapped(e)
 
     def compute(self, df: DataFrame, named_exprs: list[tuple[str, str]],
                 render_names: frozenset[str] | set[str] = frozenset()) -> tuple[DataFrame, dict[str, str]]:
@@ -603,7 +583,7 @@ def _join_var_ref(binding: Binding, var_text: str, side: str) -> VarRef:
 
 class StageRunner:
     def __init__(self, spark: SparkSession, registry: TableRegistry | None,
-                 options: EngineOptions):
+                 options: EngineOptions, row_errors: list):
         self.spark = spark
         self.registry = registry
         self.options = options
@@ -611,6 +591,31 @@ class StageRunner:
         # frames pinned for cross-job partition stability — handed to the
         # StageResult so its terminal action can unpersist them
         self.cached_frames: list = []
+        # renderers of the bare in-plan guards' errors (_guard), shared by
+        # a pipe's stages: an upstream stage's guard fires in the final
+        # stage's job
+        self.row_errors = row_errors
+
+    def _guard(self, df: DataFrame, fire: Column, details: Column,
+               comp: _ExprComputer | None = None, render=None) -> DataFrame:
+        """Raise inside the query's own job at the first row of ``df``
+        where ``fire`` holds; no job runs at build time.  The guard sits
+        in a filter position, so column pruning cannot drop it.
+
+        With ``comp``: the record-prefixed 'At record N, Details:
+        <details>' error of the translator, its exact record recovered
+        through a first-failure probe.  Without: a bare error whose
+        in-plan text is ``details``; ``render()``, when given, returns
+        the exact text once a task has failed (it quotes the first
+        offending row's data, which only a driver-side job can find)."""
+        if comp is not None:
+            comp.add_guard_probe(df, [(fire, details)])
+            err = comp.translator._record_error(details)
+        else:
+            self.row_errors.append(render)
+            err = F.raise_error(F.concat(details, F.lit(
+                '\n__RBQL_ROW_ERR_{}__'.format(len(self.row_errors) - 1))))
+        return df.where(F.coalesce(F.when(fire, err), F.lit(True)))
 
     # -- input / join wiring ------------------------------------------------
 
@@ -647,6 +652,7 @@ class StageRunner:
         # resolve join pairs
         a_keys: list[Column] = []
         b_keys: list[Column] = []
+        b_key_indices: list[int] = []
         for v1, v2 in stage.join_var_pairs:
             _check_ambiguous_join_var(binding, v1)
             _check_ambiguous_join_var(binding, v2)
@@ -679,6 +685,7 @@ class StageRunner:
             else:
                 bc = F.col(internal_col('b', b_ref.index))
                 b_tag = type_tag(b_side.types[b_ref.index])
+                b_key_indices.append(b_ref.index)
             if 'mixed' in (a_tag, b_tag):
                 # Python dict-key equality across runtime types: 5 == 5.0
                 # == True, but '5' != 5 (mixedcell.join_canon_col).  Only
@@ -705,38 +712,41 @@ class StageRunner:
             a_keys.append(ac)
             b_keys.append(bc)
 
-        # ragged B table: a join-key index beyond some record's width is a
-        # hard per-record error (HashJoinMap.build, rbql_engine.py:1459-1472)
-        if b_side.ragged and self.options.strict_checks:
-            tmp_binding = Binding(WorkFrame(df=bdf, a=wf.a, b=b_side))
-            b_key_indices = []
-            for v1, v2 in stage.join_var_pairs:
-                bvar = v2 if _classify_join_var(v2) == 'b' else v1
-                try:
-                    ref = _resolve_var_text(tmp_binding, bvar, 'b')
-                except (RbqlParsingError, TranslationFallback, RbqlRuntimeError):
-                    continue
-                if ref.kind == 'field':
-                    b_key_indices.append(ref.index)
-            max_key_idx = max(b_key_indices, default=None)
-            if max_key_idx is not None and max_key_idx > 0:
-                short = bdf.filter(F.col(BNF_COL) < max_key_idx + 1).agg(F.min(BNR_COL)).collect()
-                if short and short[0][0] is not None:
-                    first = short[0][0]
-                    bad_nr = bdf.filter(F.col(BNR_COL) < first).count() + 1
-                    raise RbqlRuntimeError(
-                        'No field with index {} at record {} in "B" table'.format(
-                            max_key_idx + 1, bad_nr))
+        strict = self.options.strict_checks
+        max_key_idx = max(b_key_indices, default=0)
+        if b_side.ragged and strict and max_key_idx > 0:
+            # ragged B table: a join-key index beyond some record's width
+            # is a hard per-record error (HashJoinMap.build,
+            # rbql_engine.py:1459-1472), whether or not an A row matches
+            def render(frame=bdf, k=max_key_idx):
+                short = frame.filter(F.col(BNF_COL) < k + 1).agg(
+                    F.min(BNR_COL)).collect()
+                first = short[0][0] if short else None
+                if first is None:
+                    return None
+                return 'No field with index {} at record {} in "B" table'.format(
+                    k + 1, frame.filter(F.col(BNR_COL) < first).count() + 1)
+            bdf = self._guard(bdf, F.col(BNF_COL) < max_key_idx + 1, F.lit(
+                'No field with index {} in "B" table'.format(max_key_idx + 1)),
+                render=render)
 
-        # stash for the UPDATE+JOIN duplicate-match guard: it re-derives the
-        # error from the (memory-sized) B side alone instead of re-running
-        # the join (pre-broadcast df; a_keys resolve against wf.df)
-        self._join_guard_ctx = (bdf, list(a_keys), list(b_keys), wf.df)
-
+        subtype = stage.join_subtype
+        # a key with more than one B record fails the A records that match
+        # it (UPDATE: PROCESS_UPDATE_JOIN, rbql_engine.py:682-697; STRICT
+        # LEFT JOIN: StrictLeftJoiner, :595-603) — the per-key count rides
+        # on the B side into the join
+        count_matches = strict and (
+            not stage.is_select or subtype == parser.STRICT_LEFT_JOIN)
+        if count_matches:
+            if self.options.broadcast_join:
+                # one partition: the count's window needs no exchange, so
+                # it runs inside the broadcast's own job
+                bdf = bdf.coalesce(1)
+            bdf = bdf.withColumn(_B_MATCHES_COL, F.count(F.lit(1)).over(
+                Window.partitionBy(*b_keys)))
         if self.options.broadcast_join:
             bdf = F.broadcast(bdf)
 
-        subtype = stage.join_subtype
         cond = None
         for ac, bc in zip(a_keys, b_keys):
             # eqNullSafe: Python dict-key equality (None matches None),
@@ -754,31 +764,26 @@ class StageRunner:
             joined = joined.withColumn(BNF_COL, F.coalesce(F.col(BNF_COL),
                                                            F.lit(b_side.width).cast('int')))
 
-        wf2 = WorkFrame(df=joined, a=wf.a, b=b_side)
-        if subtype == parser.STRICT_LEFT_JOIN and self.options.strict_checks:
-            # Reference StrictLeftJoiner (rbql_engine.py:595-603) errors only
-            # for A-side keys whose match count != 1 — duplicate B keys that
-            # no A row references are legal.  Grouping the joined output by
-            # the unique A-row surrogate gives exactly that semantic, and
-            # folds the old duplicate-key pre-pass and unmatched-row check
-            # into ONE job.
-            agg_cols = [F.count(F.lit(1)).alias('__match_cnt'),
-                        F.max(F.col(BNR_COL).isNotNull().cast('int')).alias('__matched')]
-            for i, ac in enumerate(a_keys):
-                agg_cols.append(F.first(ac).alias('__k{}'.format(i)))
-            # orderBy the record surrogate: the reported key is the FIRST
-            # violation in record order (reference iterates sequentially),
-            # not an arbitrary partition's winner
-            bad = (joined.groupBy(F.col(NR_COL)).agg(*agg_cols)
-                   .filter((F.col('__match_cnt') > 1) | (F.col('__matched') == 0))
-                   .orderBy(F.col(NR_COL)).limit(1).collect())
-            if bad:
-                vals = [bad[0]['__k{}'.format(i)] for i in range(len(a_keys))]
-                lhs_key = vals[0] if len(vals) == 1 else tuple(vals)
-                raise RbqlRuntimeError(
-                    'In "STRICT LEFT JOIN" each key in A must have exactly one '
-                    'match in B. Bad A key: "{}"'.format(lhs_key))
-        return wf2
+        if subtype == parser.STRICT_LEFT_JOIN and strict:
+            # every A record needs exactly one match; the reported key is
+            # the FIRST violation in record order (the reference iterates
+            # sequentially), not an arbitrary task's
+            bad = F.col(BNR_COL).isNull() | (F.col(_B_MATCHES_COL) > 1)
+
+            def render(frame=joined, bad=bad, keys=list(a_keys)):
+                row = (frame.where(bad).orderBy(F.col(NR_COL)).limit(1)
+                       .select(*[k.alias('__k{}'.format(i))
+                                 for i, k in enumerate(keys)]).collect())
+                if not row:
+                    return None
+                vals = list(row[0])
+                return ('In "STRICT LEFT JOIN" each key in A must have exactly '
+                        'one match in B. Bad A key: "{}"'.format(
+                            vals[0] if len(vals) == 1 else tuple(vals)))
+            joined = self._guard(joined, bad, F.lit(
+                'In "STRICT LEFT JOIN" each key in A must have exactly one '
+                'match in B'), render=render)
+        return WorkFrame(df=joined, a=wf.a, b=b_side)
 
     # -- main ---------------------------------------------------------------
 
@@ -849,97 +854,43 @@ class StageRunner:
         if stage.join_subtype is not None:
             wf = self._load_b_side(stage, wf)
 
-        comp = _ExprComputer(wf, self.options)
+        comp = _ExprComputer(wf, self.options, self.row_errors, adf)
         comp.binding.nr_dense = nr_referenced
         if early_filtered:
             comp.native_count += 1
         df = wf.df
 
-        # probe-free surrogate→input-record resolver for guards that
-        # raise DRIVER-side (unhashable DISTINCT/GROUP keys): converts a
-        # min-NR surrogate to the exact input ordinal, including across
-        # the early-filter pushdown (jobs run only on those error paths)
-        self._plain_resolver = None if nr_referenced else \
-            _make_surrogate_resolver(wf.df, pre_filter_df, early_cond)
-
         if stage.is_select:
             res = self._run_select(stage, wf, comp, df, skip_where=early_filtered)
         else:
             res = self._run_update(stage, wf, comp, df)
-        # Exact error record numbers on the non-dense path: guards and the
+        # Exact error record numbers: on the non-dense path guards and the
         # evaluator fallback embed the failing row's raw order surrogate
         # in the error text; this resolver (jobs run ONLY when an error
         # actually surfaces) finds the FIRST failing record via the
         # harvested probes and converts its surrogate back to the
         # reference's 1-based INPUT record number — including across the
         # early-filter pushdown, where the surrogate numbers the filtered
-        # stream.
-        res.nr_resolver = None if nr_referenced else _make_surrogate_resolver(
-            wf.df, pre_filter_df, early_cond,
-            comp.failure_probes, early_guard_probes)
+        # stream.  It also renders bare in-plan guard errors.
+        res.nr_resolver = _make_surrogate_resolver(
+            adf, pre_filter_df, early_cond, comp.failure_probes,
+            early_guard_probes, self.row_errors, dense=nr_referenced)
         res.cached_frames.extend(self.cached_frames)
         return res
-
-    def _exact_record(self, hit: int, df: DataFrame) -> int:
-        """min-NR surrogate → exact 1-based input record number for
-        guards that raise driver-side (dense NR already IS the record;
-        the probe-free resolver handles the early-filter pushdown)."""
-        if getattr(self, '_nr_dense', False):
-            return hit
-        resolver = getattr(self, '_plain_resolver', None)
-        if resolver is not None:
-            try:
-                out = resolver(hit)
-            except Exception:
-                out = None
-            if out is not None:
-                return out[0]
-        return df.filter(F.col(NR_COL) < hit).count() + 1
 
     # -- UPDATE -------------------------------------------------------------
 
     def _run_update(self, stage: ParsedStage, wf: WorkFrame, comp: _ExprComputer,
                     df: DataFrame) -> StageResult:
         binding = comp.binding
-        # UPDATE+JOIN: error when an input record has >1 join match
-        # (PROCESS_UPDATE_JOIN, rbql_engine.py:682-697); the error carries
-        # the first offending record number
         if wf.b is not None and self.options.strict_checks:
-            # An A record has >1 matches iff its key is duplicated in B, so
-            # the guard aggregates the B side ONLY (memory-sized by reference
-            # contract — it builds an in-memory hash map).  The A table and
-            # the join are re-scanned only when a duplicate B key exists —
-            # the old guard shuffled the full joined output by record number
-            # on every strict-mode run, doubling cost at scale.
-            bdf_raw, a_keys, b_keys, a_df = self._join_guard_ctx
-            key_aliases = ['__jk{}'.format(i) for i in range(len(b_keys))]
-            dup_keys = (bdf_raw
-                        .groupBy(*[k.alias(n) for k, n in zip(b_keys, key_aliases)])
-                        .agg(F.count(F.lit(1)).alias('__c'))
-                        .filter(F.col('__c') > 1).drop('__c'))
-            # AQE would split this tiny B-only probe into 2-3 jobs
-            # (shuffle-stage re-planning buys nothing at hash-map scale) —
-            # run it as a single classic job
-            with scoped_conf(bdf_raw.sparkSession,
-                             {'spark.sql.adaptive.enabled': 'false'}):
-                has_dups = dup_keys.limit(1).count() > 0
-            if has_dups:
-                # duplicate keys are an error only when an A record references
-                # one (reference raises at lookup time): broadcast semi-join
-                # for the first offending record number
-                cond2 = None
-                for ac, n in zip(a_keys, key_aliases):
-                    piece = ac.eqNullSafe(F.col(n))
-                    cond2 = piece if cond2 is None else cond2 & piece
-                hit = (a_df.join(F.broadcast(dup_keys), on=cond2, how='inner')
-                       .agg(F.min(NR_COL)).collect())
-                if hit and hit[0][0] is not None:
-                    first = hit[0][0]
-                    if not getattr(self, '_nr_dense', False):
-                        first = a_df.filter(F.col(NR_COL) < first).count() + 1
-                    raise RbqlRuntimeError(
-                        'At record {}, Details: More than one record in UPDATE query matched '
-                        'a key from the input table in the join table'.format(first))
+            # UPDATE+JOIN: an input record with >1 join match fails before
+            # its WHERE is evaluated (PROCESS_UPDATE_JOIN,
+            # rbql_engine.py:682-697)
+            df = self._guard(
+                df, F.col(BNR_COL).isNotNull() & (F.col(_B_MATCHES_COL) > 1),
+                F.lit('More than one record in UPDATE query matched a key '
+                      'from the input table in the join table'), comp=comp)
 
         cond = F.lit(True)
         if stage.where_expr is not None:
@@ -963,8 +914,11 @@ class StageRunner:
         # Window.orderBy(NR), which funneled the whole table through one
         # task.  Only materialized when the query references NU.
         if re.search(r'(?:^|[^\w])NU(?:$|[^\w])', stage.unmask(stage.masked_text)):
-            df = attach_running_count(df, NR_COL, cond, '__nu',
-                                      cache_registry=self.cached_frames)
+            try:
+                df = attach_running_count(df, NR_COL, cond, '__nu',
+                                          cache_registry=self.cached_frames)
+            except Exception as e:
+                comp._raise_unwrapped(e)
             # the counter column exists from here on: let the native
             # translator bind NU to it instead of falling back
             binding.nu_col = '__nu'
@@ -984,11 +938,12 @@ class StageRunner:
                 # reference: a9 beyond the record width fails at the first
                 # record the update actually applies to (safe_set →
                 # InternalBadFieldError, rbql_engine.py:260-264)
-                first = df.filter(cond).agg(F.min(NR_COL)).collect()[0][0]
+                first = comp.collect(df.filter(cond).agg(F.min(NR_COL)))[0][0]
                 if first is not None:
                     if not getattr(self, '_nr_dense', False):
                         # surrogate order key → recover the dense ordinal
-                        first = df.filter(F.col(NR_COL) < first).count() + 1
+                        first = comp.collect(df.filter(F.col(NR_COL) < first)
+                                             .agg(F.count(F.lit(1))))[0][0] + 1
                     raise RbqlRuntimeError('No "{}" field at record {}'.format(var_text, first))
                 targets.append(None)
                 value_exprs.append(('__upd_skip_{}'.format(len(value_exprs)), expr_text))
@@ -1257,7 +1212,7 @@ class StageRunner:
             self.cached_frames.append(df)
         except Exception:
             pass
-        width = df.agg(F.max(F.size('__unpack_src'))).collect()[0][0] or 1
+        width = comp.collect(df.agg(F.max(F.size('__unpack_src'))))[0][0] or 1
         outs = {'__out_{}'.format(i): F.try_element_at('__unpack_src', F.lit(i + 1))
                 for i in range(width)}
         sorts: dict[str, Column] = {}
@@ -1272,33 +1227,9 @@ class StageRunner:
         res.trim_width_col = '__trim_w'
         return res
 
-    def _host_collect(self, frame: DataFrame,
-                      comp: '_ExprComputer | None'):
-        """collect() for the host-sort/rank paths with the same error
-        unwrapping the API's terminal collect applies — a guard or
-        evaluator error surfacing INSIDE the engine's own job must carry
-        the exact first-failure record and Details, not a raw Spark
-        traceback."""
-        try:
-            return frame.collect()
-        except Exception as e:
-            from .api import _unwrap_spark_error
-            resolver = None
-            if comp is not None and not getattr(self, '_nr_dense', False):
-                # the resolver's NR-count job must run over the PRE-compute
-                # numbered frame: a frame carrying the failing evaluator
-                # column would re-raise inside the count (mapInPandas
-                # blocks column pruning)
-                resolver = _make_surrogate_resolver(
-                    comp.wf.df, None, None, comp.failure_probes, [])
-            mapped = _unwrap_spark_error(e, resolver)
-            if mapped is not None:
-                raise mapped from None
-            raise
-
     def _host_sort_mixed(self, df: DataFrame, sort_cols: list[str], rev: bool,
                          has_bnr: bool, unnest_col: str | None,
-                         comp: '_ExprComputer | None' = None
+                         comp: _ExprComputer
                          ) -> tuple[DataFrame, list[Column]]:
         """ORDER BY with MIXED-TYPE sort keys, hosted in the dialect's own
         comparison semantics (r14 verdict #1).
@@ -1329,10 +1260,11 @@ class StageRunner:
             + (['__unnest_pos'] if unnest_col is not None else [])
         nk = len(sort_cols)
         mixed_flags = [is_mixed_type(schema[c]) for c in sort_cols]
-        rows = self._host_collect(
+        # a guard or evaluator error surfacing inside this job carries the
+        # exact first-failure record and Details, as at the terminal collect
+        rows = comp.collect(
             df.select(*sort_cols, *stream_cols)
-              .orderBy(*[F.col(c).asc_nulls_first() for c in stream_cols]),
-            comp)
+              .orderBy(*[F.col(c).asc_nulls_first() for c in stream_cols]))
         entries = []
         for r in rows:
             keys = tuple(unpack_value(r[i]) if mixed_flags[i] else r[i]
@@ -1499,15 +1431,9 @@ class StageRunner:
             from pyspark.sql import types as _T
             _schema = {f.name: f.dataType for f in df.schema.fields}
             if any(isinstance(_schema.get(c), _T.ArrayType) for c in out_cols):
-                if sort_cols:
-                    if df.limit(1).count() > 0:
-                        raise RbqlRuntimeError("unhashable type: 'list'")
-                else:
-                    hit = df.agg(F.min(F.col(NR_COL))).collect()[0][0]
-                    if hit is not None:
-                        raise RbqlRuntimeError(
-                            'At record {}, Details: unhashable type: '
-                            "'list'".format(self._exact_record(int(hit), df)))
+                df = self._guard(df, F.lit(True),
+                                 F.lit("unhashable type: 'list'"),
+                                 comp=None if sort_cols else comp)
 
         if stage.distinct_count:
             # UniqCountWriter: dedup full rows, prepend occurrence count,
@@ -1561,8 +1487,7 @@ class StageRunner:
                            telemetry=comp.telemetry())
 
     def _host_rank_group_keys(self, grouped: DataFrame, key_cols: list[str],
-                              key_schema: dict,
-                              comp: '_ExprComputer | None' = None
+                              key_schema: dict, comp: _ExprComputer
                               ) -> tuple[DataFrame, list[Column]]:
         """Output order for MIXED group keys, hosted in the dialect's own
         semantics: Python ``sorted(aggregation_keys)`` raises TypeError on
@@ -1572,8 +1497,7 @@ class StageRunner:
         frame is key-bounded, so the collect is small; the permutation
         rides back as a broadcast rank join on the group's first NR."""
         from .mixedcell import is_mixed_type, unpack_value
-        rows = self._host_collect(
-            grouped.select(*key_cols, '__key_first_nr'), comp)
+        rows = comp.collect(grouped.select(*key_cols, '__key_first_nr'))
         mixed_flags = [c in key_schema and is_mixed_type(key_schema[c])
                        for c in key_cols]
         entries = []
@@ -1739,11 +1663,9 @@ class StageRunner:
                             # reproduce it (one tiny first-record job,
                             # error-prone shapes only).
                             if argcol not in first_null_probe:
-                                fnull = df.select(
-                                    F.min_by(raw.isNull(), nr).alias('fn')
-                                ).first()
-                                first_null_probe[argcol] = bool(
-                                    fnull is not None and fnull['fn'])
+                                fnull = comp.collect(df.select(
+                                    F.min_by(raw.isNull(), nr).alias('fn')))[0]
+                                first_null_probe[argcol] = bool(fnull['fn'])
                             if first_null_probe[argcol]:
                                 from .mixedcell import pack_col
                                 packed = argcol + '__rawpk'
@@ -1765,12 +1687,12 @@ class StageRunner:
                         elif tag == 'mixed':
                             from .mixedcell import K_STR as _KS
                             _k = raw.getField('k')
-                            frow = df.select(
+                            frow = comp.collect(df.select(
                                 F.min_by(_k, nr).alias('fk'),
                                 F.min(F.when(
                                     (_k == _KS) & ~raw.getField('s')
                                     .rlike(r'^ *[+-]?[0-9]+ *$'), nr)
-                                ).alias('flip')).first()
+                                ).alias('flip')))[0]
                             mixed_first_str = bool(
                                 frow and frow['fk'] == _KS)
                             mixed_flip_nr = frow['flip'] if frow else None
@@ -2115,11 +2037,8 @@ class StageRunner:
         if any(isinstance(key_schema.get(c), _T.ArrayType) for c in key_cols):
             # reference keys its aggregation dict with the key tuple — a
             # list-valued key raises at the first record inserted
-            hit = df.agg(F.min(nr)).collect()[0][0]
-            if hit is not None:
-                raise RbqlRuntimeError(
-                    "At record {}, Details: unhashable type: 'list'".format(
-                        self._exact_record(int(hit), df)))
+            df = self._guard(df, F.lit(True), F.lit("unhashable type: 'list'"),
+                             comp=comp)
         from .mixedcell import is_mixed_type as _imx
         mixed_key_cols = [c for c in key_cols
                           if c in key_schema and _imx(key_schema[c])]
@@ -2149,13 +2068,11 @@ class StageRunner:
             grouped = df.groupBy(F.lit(1).alias('__key_dummy')).agg(*agg_exprs)
 
         if guard_cols and self.options.strict_checks:
-            bad = grouped.filter(' OR '.join('{} > 1'.format(g) for g in guard_cols)).limit(1).collect()
-            if bad:
-                for j, g in enumerate(guard_cols):
-                    if g in bad[0].asDict() and bad[0][g] > 1:
-                        break
-                raise RbqlRuntimeError(
-                    'Invalid aggregate expression: non-constant values in output column')
+            # ConstGroupVerifier (rbql_engine.py:461-474)
+            grouped = self._guard(
+                grouped, reduce(operator.or_, [F.col(g) > 1 for g in guard_cols]),
+                F.lit('Invalid aggregate expression: non-constant values in '
+                      'output column'))
 
         if post_procs:
             from .pyeval import eval_simple
@@ -2254,8 +2171,9 @@ def run_query(spark: SparkSession, query_text: str,
     all_warnings: list[str] = []
     carried_caches: list = []
     tel = {'native_count': 0, 'fallback_count': 0, 'fallback_reasons': []}
+    row_errors: list = []
     for i, stage in enumerate(stages):
-        runner = StageRunner(spark, registry, options)
+        runner = StageRunner(spark, registry, options, row_errors)
         result = runner.run(stage, handle)
         # an upstream pipe stage's pinned frames stay referenced by the
         # final result's lazy plan — carry them so release() at the

@@ -192,3 +192,10 @@ def test_numeric_aggregates_null_cells_match_reference(spark):
             # record numbers are partition-order best-effort
             for token in ('NoneType',):
                 assert token in got[1], (q, tbl, got[1], ref_val)
+
+
+def test_non_constant_group_beyond_top_rejected(spark):
+    # the non-constant group ('z') sorts after the one TOP returns
+    with pytest.raises(RbqlRuntimeError, match='non-constant'):
+        query_table(spark, 'SELECT TOP 1 a1, COUNT(1) GROUP BY a2',
+                    [['1', 'a'], ['2', 'b'], ['3', 'z'], ['4', 'z']])

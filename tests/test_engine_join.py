@@ -181,3 +181,68 @@ def test_ambiguous_join_var_guard_message():
             E._check_ambiguous_join_var(_B(), 'x')
     finally:
         E._resolve_var_text = orig
+
+
+# eight A rows spread over the session's four partitions
+A8 = [[str(i), k] for i, k in enumerate(
+    ['usa', 'france', 'usa', 'france', 'usa', 'france', 'usa', 'france'], 1)]
+
+
+def test_ragged_b_short_record_lacks_key_field(spark):
+    # HashJoinMap.build reads every B record's key: the FIRST record (in
+    # B order) too short to hold it fails the whole query
+    b = [['x', 'usa'], ['y', 'france'], ['z', 'peru'], ['w', 'chile'],
+         ['v'], ['u', 'spain'], ['t'], ['s', 'italy']]
+    with pytest.raises(RbqlRuntimeError,
+                       match=r'^No field with index 2 at record 5 in "B" table$'):
+        query_table(spark, 'SELECT a1, b1 INNER JOIN b ON a2 == b2',
+                    [r[:] for r in A8], join_table=b)
+
+
+def test_strict_left_join_names_first_violation_in_record_order(spark):
+    # record 3 has no match, record 6 has two: the message names record 3's
+    # key whichever partition's task fails first
+    a = [['1', 'usa'], ['2', 'france'], ['3', 'atlantis'], ['4', 'usa'],
+         ['5', 'france'], ['6', 'chile'], ['7', 'usa'], ['8', 'france']]
+    b = [['usa', 'W'], ['france', 'P'], ['chile', 'S'], ['chile', 'V']]
+    with pytest.raises(RbqlRuntimeError, match='Bad A key: "atlantis"$'):
+        query_table(spark, 'SELECT a1, b2 STRICT LEFT JOIN b ON a2 == b1',
+                    a, join_table=b)
+    # the reverse: the duplicate match comes first
+    a[2][1], a[5][1] = 'chile', 'atlantis'
+    with pytest.raises(RbqlRuntimeError, match='Bad A key: "chile"$'):
+        query_table(spark, 'SELECT a1, b2 STRICT LEFT JOIN b ON a2 == b1',
+                    a, join_table=b)
+
+
+def test_strict_left_join_multikey_renders_tuple(spark):
+    a = [[1, 'usa'], [2, 'france'], [3, 'peru']]
+    b = [[1, 'usa', 'W'], [2, 'france', 'P']]
+    with pytest.raises(RbqlRuntimeError) as ei:
+        query_table(spark, 'SELECT a1, b3 STRICT LEFT JOIN b ON a1 == b1 AND a2 == b2',
+                    a, join_table=b)
+    assert str(ei.value) == ('In "STRICT LEFT JOIN" each key in A must have exactly '
+                             'one match in B. Bad A key: "(3, \'peru\')"')
+
+
+def test_strict_left_join_top_raises_for_violation_in_returned_rows(spark):
+    b = [['usa', 'W'], ['france', 'P']]
+    a = [r[:] for r in A8]
+    a[1][1] = 'atlantis'
+    with pytest.raises(RbqlRuntimeError, match='Bad A key: "atlantis"$'):
+        query_table(spark, 'SELECT TOP 3 a1, b2 STRICT LEFT JOIN b ON a2 == b1',
+                    a, join_table=b)
+
+
+def test_strict_left_join_error_rendered_on_dense_nr_and_pipe_paths(spark):
+    a = [r[:] for r in A8]
+    a[2][1], a[5][1] = 'atlantis', 'chile'
+    b = [['usa', 'W'], ['france', 'P']]
+    # NR referenced: record numbers are dense, the key is still the first's
+    with pytest.raises(RbqlRuntimeError, match='Bad A key: "atlantis"$'):
+        query_table(spark, 'SELECT NR, a1, b2 STRICT LEFT JOIN b ON a2 == b1',
+                    a, join_table=b)
+    # the guard of a pipe's first stage fires in the last stage's job
+    with pytest.raises(RbqlRuntimeError, match='Bad A key: "atlantis"$'):
+        query_table(spark, 'SELECT a1, b2 STRICT LEFT JOIN b ON a2 == b1 '
+                    '| SELECT a2, COUNT(1) GROUP BY a2', a, join_table=b)

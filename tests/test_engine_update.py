@@ -149,3 +149,32 @@ def test_nu_query_releases_pinned_caches(spark):
     after = persistent_ids()
     leaked = after - before
     assert not leaked, 'query left pinned RDDs behind: {}'.format(leaked)
+
+
+def test_update_join_dup_error_fires_on_count_only(spark):
+    from rbql_spark.api import query_dataframe
+    a = spark.createDataFrame([('1', 'zz'), ('2', 'us'), ('3', 'fr')], 'id string, cc string')
+    b = spark.createDataFrame([('us', 'USA'), ('us', 'America')], 'code string, name string')
+    with pytest.raises(Exception, match='More than one record in UPDATE query matched'):
+        res = query_dataframe(spark, 'UPDATE a2 = b2 INNER JOIN b ON a2 == b1',
+                              a, join_table=b)
+        res.display_df().count()
+
+
+def test_update_join_dup_error_fires_before_where(spark):
+    # the reference looks the key up before it evaluates WHERE, so a
+    # record the WHERE excludes still fails on a duplicate match
+    with pytest.raises(RbqlRuntimeError, match='At record 2, Details: More than one record'):
+        query_table(spark, "UPDATE a2 = b2 INNER JOIN b ON a2 == b1 WHERE a1 != '2'",
+                    [['1', 'zz'], ['2', 'us'], ['3', 'fr']],
+                    join_table=[['us', 'USA'], ['us', 'America'], ['fr', 'France']])
+
+
+def test_update_join_dup_error_first_record_with_nr_referenced(spark):
+    # NR referenced: records are numbered densely; the error still names
+    # the first offending record, whichever partition's task fails first
+    a = [[str(i), 'zz'] for i in range(1, 9)]
+    a[2][1] = a[6][1] = 'us'
+    with pytest.raises(RbqlRuntimeError, match='At record 3, Details: More than one record'):
+        query_table(spark, 'UPDATE a1 = str(NR) INNER JOIN b ON a2 == b1', a,
+                    join_table=[['us', 'USA'], ['us', 'America']])

@@ -129,9 +129,9 @@ def _count_jobs(spark, group, fn):
 
 
 def test_strict_update_join_guard_is_b_side_only(spark, sf_dir, entry):
-    # The strict-mode UPDATE+JOIN duplicate-match guard must add exactly ONE
-    # extra job relative to the non-strict run — a B-side-only aggregation
-    # (the old guard re-ran the whole join and shuffled it by record number).
+    # The strict-mode UPDATE+JOIN duplicate-match guard adds no job to the
+    # non-strict run: the per-key B count runs inside the broadcast's own
+    # job and the guard is a filter of the query's own plan.
     from rbql_spark.api import query_dataframe
     from rbql_spark.binding import TableHandle
     from rbql_spark.engine import EngineOptions
@@ -153,9 +153,33 @@ def test_strict_update_join_guard_is_b_side_only(spark, sf_dir, entry):
             res.display_df().write.format('noop').mode('overwrite').save()
         return _count_jobs(spark, group, go)
 
+    run(False, 'updjoin-warm')   # reads the tables' schemas once
     loose = run(False, 'updjoin-loose')
     strict = run(True, 'updjoin-strict')
-    assert strict == loose + 1, (loose, strict)
+    assert strict == loose, (loose, strict)
+
+
+@pytest.mark.parametrize('name', ['rbql_update_join', 'rbql_strict_left_join'])
+def test_strict_join_guard_build_runs_no_job(spark, sf_dir, entry, name):
+    # the join-cardinality guards run inside the query's own job: building
+    # the query (the tables' schemas already known) runs no Spark job
+    import inspect
+    from rbql_spark.api import query_dataframe
+    from rbql_spark.binding import TableHandle
+    from rbql_spark.engine import EngineOptions
+    from rbql_spark.registry import ParquetDirRegistry
+
+    g = inspect.getclosurevars(inspect.unwrap(entry.queries()[name])).nonlocals
+    assert g['strict']
+    handle = TableHandle(df=entry._t(spark, sf_dir, g['table']))
+    handle.header = list(handle.df.columns)
+    registry = ParquetDirRegistry(sf_dir)
+
+    def build():
+        return query_dataframe(spark, g['query'], handle, registry=registry,
+                               options=EngineOptions(strict_checks=True))
+    build()
+    assert _count_jobs(spark, name + '_build', build) == 0
 
 
 def test_fallback_sample_job_cached_on_identical_rerun(spark, sf_dir, entry):
@@ -939,12 +963,13 @@ def _count_nodes(jplan, name: str) -> int:
 # binding (renames, NF and, unless a filter must reach the scan first, the
 # order surrogate), the surrogate after an early filter, the computed
 # output, and the display names; a pipe adds its hand-off, a left join its
-# bNF default
+# bNF default, and the per-key B count of a strict UPDATE…JOIN three (the
+# analyzer wraps a window in a projection below and two above it)
 @pytest.mark.parametrize('name,projects', [
     ('rbql_select_where', 4), ('rbql_select_top_order', 3),
     ('rbql_group_agg', 4), ('rbql_js_filter_order', 4),
     ('rbql_pipe_chain', 8), ('rbql_multikey_join', 5),
-    ('rbql_update_join', 6)])
+    ('rbql_update_join', 9)])
 def test_gate_build_projection_count(spark, sf_dir, entry, name, projects):
     df = entry.queries()[name](spark, sf_dir)
     assert _count_nodes(df._jdf.queryExecution().analyzed(), 'Project') == projects

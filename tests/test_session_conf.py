@@ -10,7 +10,7 @@ import pytest
 
 
 def _update_join(spark, tmp_path, sf_dir, monkeypatch):
-    # strict mode runs the duplicate-key probe with AQE scoped off
+    # strict mode checks duplicate key matches inside the query's own job
     from rbql_spark.api import collect_result_rows, query_dataframe
     a = spark.createDataFrame([('1', 'us'), ('2', 'zz')], 'id string, cc string')
     b = spark.createDataFrame([('us', 'USA')], 'code string, name string')
